@@ -1,7 +1,14 @@
 package graft.sinks
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ColumnPath
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType, Type}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -246,37 +253,109 @@ object BlockRangeSink {
     * directory listing [[stats]] uses (one listing, no data scan —
     * Spark's `agg(max(partitionCol))` is NOT metadata-only by default,
     * so the previous form silently scanned the whole table to learn the
-    * max partition), and only the in-partition max reads data, pruned
-    * to that single tail partition. At 100 TB / ~100k partitions this
-    * is one directory listing plus one partition's files, never a
-    * table pass.
+    * max partition), and the in-partition max comes from that single
+    * tail partition's parquet footers ([[tailMax]]). At 100 TB / ~100k
+    * partitions this is one directory listing plus one partition's
+    * footers, never a table pass and, on the common path, no Spark job.
     */
   def watermark(spark: SparkSession, path: String,
       blockCol: String = "block"): Long = {
     val ranges = timed("watermark.stats")(stats(path).filter(_.nFiles > 0))
     if (ranges.isEmpty) -1L
     else timed("watermark.probe")(
-      tailMaxProbe(spark, path, ranges.map(_.blockRange).max, blockCol)
-        .head().getLong(0))
+      tailMax(spark, path, ranges.map(_.blockRange).max, blockCol))
   }
 
-  /** The pruned in-partition max query — factored out so the plan spec
+  /** Max of `blockCol` inside range `maxRange`: the footer answer
+    * ([[footerMax]]) when every file's statistics can give it, else the
+    * [[tailMaxProbe]] scan. The choice follows what the files carry, so
+    * stores written without statistics (or holding null blocks) still
+    * answer exactly.
+    */
+  private[graft] def tailMax(spark: SparkSession, path: String,
+      maxRange: Long, blockCol: String): Long =
+    footerMax(path, maxRange, blockCol).getOrElse(
+      tailMaxProbe(spark, path, maxRange, blockCol).head().getLong(0))
+
+  /** Max of `blockCol` over range `maxRange` from parquet row-group
+    * statistics alone: one listing of the range directory plus one
+    * footer read per file, through the `FileSystem` resolved from the
+    * path — no Spark job. `None` (the caller scans instead) whenever the
+    * footers cannot give the exact answer: no data file or no row
+    * group, a top-level `blockCol` that is missing or not a signed
+    * INT32/INT64, or any row group whose statistics are absent, carry
+    * no null count, or count a null (a null block is out-of-model data;
+    * the scan's SQL `max` is the reference semantics for it).
+    */
+  private[graft] def footerMax(path: String, maxRange: Long,
+      blockCol: String): Option[Long] = {
+    val conf = hadoopConf
+    val (fs, dir) = fsFor(s"$path/blockRange=$maxRange")
+    val files = fs.listStatus(dir).filter { s =>
+      val n = s.getPath.getName
+      s.isFile && n.endsWith(".parquet") &&
+        !n.startsWith(".") && !n.startsWith("_")
+    }
+    val target = ColumnPath.get(blockCol)
+    def signedInt(p: PrimitiveType): Boolean =
+      (p.getPrimitiveTypeName == PrimitiveTypeName.INT32 ||
+        p.getPrimitiveTypeName == PrimitiveTypeName.INT64) &&
+        (p.getLogicalTypeAnnotation match {
+          case null => true
+          case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation => i.isSigned
+          case _ => false
+        })
+    def fileMax(st: FileStatus): Option[Long] = {
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      val footer = try reader.getFooter finally reader.close()
+      val typed = footer.getFileMetaData.getSchema.getFields.asScala
+        .find(_.getName == blockCol).exists { f =>
+          f.isPrimitive && !f.isRepetition(Type.Repetition.REPEATED) &&
+            signedInt(f.asPrimitiveType)
+        }
+      val groups = footer.getBlocks.asScala
+      if (!typed || groups.isEmpty) None
+      else {
+        val maxes = groups.map { g =>
+          g.getColumns.asScala.find(_.getPath == target)
+            .map(_.getStatistics)
+            .filter(s => s != null && s.hasNonNullValue &&
+              s.isNumNullsSet && s.getNumNulls == 0)
+            .map(_.genericGetMax.asInstanceOf[Number].longValue)
+        }
+        if (maxes.forall(_.isDefined)) Some(maxes.flatten.max) else None
+      }
+    }
+    // flatMap stops reading footers at the first file that cannot answer
+    if (files.isEmpty) None
+    else files.foldLeft(Option(Long.MinValue)) { (acc, f) =>
+      acc.flatMap(a => fileMax(f).map(math.max(a, _)))
+    }
+  }
+
+  /** The scan fallback of [[tailMax]] — factored out so the plan spec
     * can assert (via the scan's own numFiles metric) that it reads
     * exactly the max partition's files and nothing else.
     *
-    * Reads the max partition's DIRECTORY directly instead of the table
-    * root with a partition filter: the root read builds a file index
-    * over EVERY partition (one directory listing per partition before
-    * pruning even starts — at 100 TB / ~100k partitions that is the
-    * whole-table listing the watermark probe exists to avoid, and at
-    * bench SF it was ~0.3 s of the ~0.4 s probe wall). The direct read
-    * lists one directory; the scan's numFiles is the max partition's
-    * file count by construction.
+    * Reads the max partition's DIRECTORY directly ([[rangeRows]])
+    * instead of the table root with a partition filter: the root read
+    * builds a file index over EVERY partition (one directory listing
+    * per partition before pruning even starts — at 100 TB / ~100k
+    * partitions that is the whole-table listing the watermark probe
+    * exists to avoid, and at bench SF it was ~0.3 s of the ~0.4 s probe
+    * wall). The direct read lists one directory; the scan's numFiles is
+    * the max partition's file count by construction.
     */
   private[graft] def tailMaxProbe(spark: SparkSession, path: String,
       maxRange: Long, blockCol: String): DataFrame =
-    spark.read.parquet(s"$path/blockRange=$maxRange")
-      .agg(max(col(blockCol).cast("long")))
+    rangeRows(spark, path, maxRange).agg(max(col(blockCol).cast("long")))
+
+  /** One range's rows, read from its own directory (no table-wide file
+    * index; no `blockRange` column — it rides in the directory name).
+    */
+  private[graft] def rangeRows(spark: SparkSession, path: String,
+      range: Long): DataFrame =
+    spark.read.parquet(s"$path/blockRange=$range")
 
   /** Per-partition file statistics — metadata-only (directory listing,
     * no data scan): the observability a long-lived table needs to
@@ -406,6 +485,15 @@ object BlockRangeSink {
           s.getPath.getName.startsWith("blockRange="))
         .map(_.getPath.getName.stripPrefix("blockRange=").toLong)
         .sorted.toSeq
+      // converge or fail loudly: a flagged range that staged nothing
+      // (e.g. its files hold zero rows) would keep its old files, and
+      // stats would re-flag it on every later cycle
+      val flagged = todo.map(_.blockRange)
+      if (staged != flagged)
+        throw new IllegalStateException(
+          s"compact: flagged ranges ${flagged.diff(staged).mkString(",")} " +
+            "staged no rows — refusing a partial compaction (the live " +
+            "partitions are untouched; the next recovery sweeps the stage)")
       commitStagedRanges(fs, root, opId, staged)
     }
     todo.map(_.blockRange)
@@ -424,35 +512,44 @@ object BlockRangeSink {
     * tip and [[graft.streaming.IncrementalIngest]] silently REJECTS the
     * winning branch (it admits only blocks > watermark).
     *
-    * Partition-pruned by construction: every partition strictly above
-    * the fork's range is removed as an `fs.delete(partitionDir)` (no
-    * data scan), and only the fork's OWN partition is rewritten — so at
-    * 100 TB a reorg costs one tail-partition rewrite plus metadata
-    * deletes, never a table pass. Idempotent: a crashed/re-run rollback
-    * finds the tail already gone and rewrites the fork partition to the
-    * same bytes (same dynamic-overwrite mechanism as
-    * [[write]]/[[compact]]).
+    * Tail-bounded by construction: one listing of the store ([[stats]])
+    * finds the ranges, and the only data read is the fork range's OWN
+    * directory ([[rangeRows]] — never a table-wide file index). One
+    * aggregate over it ([[forkSplit]]: rows above the fork, rows at or
+    * below it) picks the action: nothing above → no-op, nothing kept →
+    * directory delete, both → [[rewritePartition]] of the kept rows.
+    * Every range strictly above the fork's is removed as an
+    * `fs.delete(partitionDir)` (no data read). At 100 TB a reorg costs
+    * one listing, one tail-partition read + rewrite, and metadata
+    * deletes — never a table pass. Idempotent: a crashed/re-run rollback
+    * finds the tail already gone and the fork range already split (a
+    * no-op), or completes the journaled rewrite on recovery.
     */
   def dropAbove(spark: SparkSession, path: String, fork: Long,
       blockCol: String = "block"): Unit = withWriterLock(path) {
     recoverLocked(path)
     val forkRange = fork / RangeSize
     val all = stats(path)
-    // fork's own partition: rewrite only if it actually straddles the
-    // fork (rows on both sides); all-orphaned → plain directory drop
     all.find(_.blockRange == forkRange).foreach { forkStats =>
-      val part = read(spark, path)
-        .where(col("blockRange").cast("long") === forkRange)
-      if (!part.where(col(blockCol) > fork).isEmpty) {
-        val keep = part.where(col(blockCol) <= fork)
-        if (keep.isEmpty) deletePartitionDir(path, forkRange)
-        else rewritePartition(path, forkRange, keep,
-          math.max(1, forkStats.nFiles))
+      val part = rangeRows(spark, path, forkRange)
+      val split = forkSplit(part, fork, blockCol).head()
+      val (above, kept) = (split.getLong(0), split.getLong(1))
+      if (above > 0) {
+        if (kept == 0) deletePartitionDir(path, forkRange)
+        else rewritePartition(path, forkRange,
+          part.where(col(blockCol) <= fork), math.max(1, forkStats.nFiles))
       }
     }
     all.filter(_.blockRange > forkRange)
       .foreach(st => deletePartitionDir(path, st.blockRange))
   }
+
+  /** (rows above `fork`, rows at or below it) of the fork range — one
+    * aggregate; factored out so the spec can read the scan's numFiles.
+    */
+  private[graft] def forkSplit(part: DataFrame, fork: Long,
+      blockCol: String): DataFrame =
+    part.agg(count_if(col(blockCol) > fork), count_if(col(blockCol) <= fork))
 
   private def deletePartitionDir(path: String, range: Long): Unit = {
     // A swallowed failed delete here is the silent-rejection failure
@@ -527,9 +624,9 @@ object BlockRangeSink {
   }
 
   /** The composite ingest-cycle write: rewrite every block range
-    * `batch` touches to hold exactly `batch`'s rows for that range, in
-    * ASCENDING range order, each through the journaled swap — the form
-    * whose crash recovery COMPOSES with watermark-gated admission
+    * `batch` touches to hold exactly `batch`'s rows for that range,
+    * through ONE journaled swap for the whole batch — the form whose
+    * crash recovery COMPOSES with watermark-gated admission
     * ([[graft.streaming.IncrementalIngest.ingestFrame]]).
     *
     * Why [[write]]'s dynamic overwrite is not enough for the ingest
@@ -541,13 +638,18 @@ object BlockRangeSink {
     * deleted historical rows, and they are gone (CrashRecoverySpec's
     * ingest-cycle sweep caught exactly this at one prefix — round 13).
     *
-    * The fix is ordering + journaling: the batch is staged ONCE
-    * (partitioned by range, pure addition), then each range commits
-    * lowest-first via its own journal. At any crash point, every range
-    * at-or-below the watermark is fully committed (a mid-swap range is
-    * completed by recovery's journal replay before the watermark is
-    * next read), so the re-run's admit filter re-admits exactly the
-    * uncommitted remainder — convergent from any prefix.
+    * The fix is staging + one batch journal: the batch is staged ONCE
+    * (partitioned by range, pure addition), then a single `v2` journal
+    * recording every range's staged→target files is published (temp +
+    * rename) and replayed ([[commitStagedRanges]]). The publish is the
+    * commit point for ALL ranges at once, and recovery replays every
+    * outstanding journal before any watermark is read. So at every
+    * crash point either no range of the batch is visible (journal
+    * unpublished; the old generation is intact) or all of them are
+    * (replay completes the swap) — every range is committed before the
+    * watermark that covers it is observed, and the re-run's admit filter
+    * re-admits exactly the uncommitted remainder: convergent from any
+    * prefix.
     */
   def upsertRanges(batch: DataFrame, path: String,
       blockCol: String = "block"): Unit = withWriterLock(path) {

@@ -13,11 +13,13 @@ import graft.sinks.BlockRangeSink
   * Tail-partition rewrite: the sink's unit of atomicity is a block
   * RANGE partition, so an incremental batch rewrites each affected
   * range as (existing facts in range ≤ watermark) ∪ (new facts), via
-  * the sink's ascending journaled per-range commit
-  * ([[BlockRangeSink.upsertRanges]]) — a crashed cycle re-runs
-  * convergently from ANY prefix (the watermark only advances past
-  * fully-committed ranges), and untouched ranges are never rewritten
-  * (at 100 TB the tail is a vanishing fraction).
+  * the sink's single-journal batch commit
+  * ([[BlockRangeSink.upsertRanges]]: one `v2` journal for every range
+  * of the batch, replayed by recovery before any watermark read) — a
+  * crashed cycle re-runs convergently from ANY prefix (every range is
+  * committed before a watermark covering it can be observed), and
+  * untouched ranges are never rewritten (at 100 TB the tail is a
+  * vanishing fraction).
   */
 object IncrementalIngest {
 
@@ -68,8 +70,8 @@ object IncrementalIngest {
     val wm =
       if (existing.isEmpty) -1L
       else BlockRangeSink.timed("ingest.watermark")(
-        BlockRangeSink.tailMaxProbe(spark, factsDir,
-          existing.map(_.blockRange).max, "block").head().getLong(0))
+        BlockRangeSink.tailMax(spark, factsDir,
+          existing.map(_.blockRange).max, "block"))
     val fresh = raw.filter(col("block") > wm)
     // one pass over the feed yields both the admit count and the
     // affected range set (the old shape ran a count job, then a second
@@ -106,9 +108,9 @@ object IncrementalIngest {
   /** Reorg under the ingest lifecycle (reference omniEngine.py main
     * loop: a tip-hash mismatch triggers reorgRollback(fork) and the
     * follower resumes syncing from fork+1). The storage truncation is
-    * [[BlockRangeSink.dropAbove]] — physical, tail-partition-only,
-    * idempotent — after which [[BlockRangeSink.watermark]] reads ≤ fork
-    * and the NEXT [[ingest]]/[[ingestFrame]] cycle admits the winning
+    * [[BlockRangeSink.dropAbove]] — physical, reads only the fork
+    * range, idempotent — after which [[BlockRangeSink.watermark]] reads
+    * ≤ fork and the NEXT [[ingest]]/[[ingestFrame]] cycle admits the winning
     * branch's blocks through the exact same watermark gate as normal
     * sync (no special re-admission path to get wrong). Returns the
     * post-rollback watermark.

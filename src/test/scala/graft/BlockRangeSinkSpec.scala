@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.{DataFrame, Row}
 import graft.sinks.BlockRangeSink
 
 /** S8 — idempotent per-range commit, watermark resume, reorg truncate. */
@@ -244,5 +245,130 @@ class BlockRangeSinkSpec extends SparkTestBase {
     // leg is the same single listing; the tail probe is a pruned read)
     assert(BlockRangeSink.watermark(spark, s"countfs://$dir12") ==
       BlockRangeSink.watermark(spark, dir12))
+  }
+
+  test("dropAbove cost is flat in range count: same listing calls at 4 " +
+      "and 12 ranges, and the fork read scans only the fork range's files") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countfs.impl", classOf[CountingFileSystem].getName)
+    // every writer task holds rows of every range, so each range of
+    // BOTH fixtures has the same files — the fork range, and the
+    // rewrite it triggers, are identical; only the range count differs
+    def fixture(n: Long): String = {
+      val dir = Files.createTempDirectory(s"graft_sink_drop$n").toString
+      BlockRangeSink.write((1L to n).map(b => (b, s"tx$b"))
+        .toDF("block", "txid").repartition(3, $"block" % 3), dir)
+      dir
+    }
+    val dir4 = fixture(3999L)
+    val dir12 = fixture(11999L)
+    assert(BlockRangeSink.stats(dir4).map(_.blockRange) == (0L to 3L) &&
+      BlockRangeSink.stats(dir12).map(_.blockRange) == (0L to 11L))
+
+    val st = BlockRangeSink.stats(dir12)
+    val forkFiles = st.find(_.blockRange == 1L).get.nFiles
+    assert(st.map(_.nFiles).sum > forkFiles)
+    // AQE off for plan introspection, as in the tail-probe pin above
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val split = BlockRangeSink.forkSplit(
+        BlockRangeSink.rangeRows(spark, dir12, 1L), 1200L, "block")
+      // 1201..1999 above the fork, 1000..1200 kept
+      assert(split.collect().toSeq == Seq(Row(799L, 201L)))
+      val scanned = split.queryExecution.executedPlan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+          s.metrics("numFiles").value
+      }.sum
+      assert(scanned == forkFiles,
+        s"fork read scanned $scanned files; the fork range holds $forkFiles")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+    def rollback(dir: String): Int = {
+      CountingFileSystem.reset()
+      BlockRangeSink.dropAbove(spark, s"countfs://$dir", 1200L)
+      CountingFileSystem.calls.get()
+    }
+    val c4 = rollback(dir4)
+    val c12 = rollback(dir12)
+    assert(c4 == c12,
+      s"dropAbove listing calls grew with range count: 4 ranges $c4, 12 ranges $c12")
+    Seq(dir4, dir12).foreach { dir =>
+      assert(BlockRangeSink.stats(dir).map(_.blockRange) == Seq(0L, 1L))
+      assert(BlockRangeSink.watermark(spark, dir) == 1200L)
+      assert(BlockRangeSink.read(spark, dir).count() == 1200L)
+    }
+  }
+
+  test("footer watermark equals the scan (INT64, INT32, multi-file tail); " +
+      "no-statistics and null-block tails fall back to the scan") {
+    def check(dir: String, expected: Long, fromFooter: Boolean): Unit = {
+      val tail = BlockRangeSink.stats(dir).map(_.blockRange).max
+      val probe = BlockRangeSink.tailMaxProbe(spark, dir, tail, "block")
+        .head().getLong(0)
+      assert(probe == expected)
+      assert(BlockRangeSink.watermark(spark, dir) == probe)
+      assert(BlockRangeSink.footerMax(dir, tail, "block").isDefined ==
+        fromFooter, s"footer answer expected=$fromFooter for $dir")
+    }
+    def table(name: String) =
+      Files.createTempDirectory(s"graft_sink_footer_$name").toString
+
+    val i64 = table("i64")
+    BlockRangeSink.write((1L to 3500L).map(b => (b, s"tx$b"))
+      .toDF("block", "txid").repartition(4), i64)
+    assert(BlockRangeSink.stats(i64).last.nFiles > 1, "tail not multi-file")
+    check(i64, 3500L, fromFooter = true)
+
+    val i32 = table("i32")
+    BlockRangeSink.write((1 to 2500).map(b => (b, s"tx$b"))
+      .toDF("block", "txid"), i32)
+    check(i32, 2500L, fromFooter = true)
+
+    // tail ranges written straight into their directory, so the write
+    // can carry its own parquet settings (and a null block, which the
+    // partitioned write would route to a non-numeric range)
+    def withTail(name: String, tail: DataFrame,
+        opts: Map[String, String] = Map.empty): String = {
+      val dir = table(name)
+      BlockRangeSink.write((1L to 1999L).map(b => (b, s"tx$b"))
+        .toDF("block", "txid"), dir)
+      tail.write.options(opts).parquet(s"$dir/blockRange=2")
+      dir
+    }
+    val noStats = withTail("nostats",
+      Seq((2001L, "a"), (2777L, "b"), (2100L, "c")).toDF("block", "txid"),
+      Map("parquet.column.statistics.enabled" -> "false"))
+    check(noStats, 2777L, fromFooter = false)
+
+    val nullBlock = withTail("null",
+      Seq((Some(2001L), "a"), (None, "b"), (Some(2500L), "c"))
+        .toDF("block", "txid"))
+    check(nullBlock, 2500L, fromFooter = false)
+  }
+
+  test("compact fails loudly when a flagged range stages no rows, and " +
+      "leaves the live table untouched") {
+    val dir = Files.createTempDirectory("graft_sink_compact_empty").toString
+    BlockRangeSink.write((1L to 1500L).map(b => (b, s"tx$b"))
+      .toDF("block", "txid"), dir)
+    // range 5 holds three zero-row files: flagged (3 files where its
+    // bytes justify 1) but the compaction read has no row to stage
+    val empty = Seq.empty[(Long, String)].toDF("block", "txid")
+    (1 to 3).foreach(_ =>
+      empty.write.mode("append").parquet(s"$dir/blockRange=5"))
+    val before = BlockRangeSink.stats(dir)
+    assert(before.find(_.blockRange == 5L).map(_.nFiles).contains(3),
+      s"fixture: $before")
+    val e = intercept[IllegalStateException](BlockRangeSink.compact(spark, dir))
+    assert(e.getMessage.contains("flagged ranges 5 staged no rows"),
+      e.getMessage)
+    // nothing swapped, lock released, rows intact
+    assert(BlockRangeSink.stats(dir) == before)
+    assert(BlockRangeSink.lockOwner(dir).isEmpty)
+    assert(BlockRangeSink.read(spark, dir).count() == 1500L)
+    // the orphan stage is swept by the next recovery
+    BlockRangeSink.recoverTable(dir)
+    assert(!new java.io.File(dir, BlockRangeSink.PendingDirName).exists())
   }
 }
