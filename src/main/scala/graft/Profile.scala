@@ -13,6 +13,9 @@ import scala.collection.mutable
   * Measurement instrument only; never part of a query path.
   */
 object Profile {
+  /** Upper bound on the 300 ms quiescence polls after each query (6 s). */
+  private val MaxDrainPolls = 20
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -63,17 +66,22 @@ object Profile {
     args.foreach { name =>
       qmap.get(name) match {
         case Some(fn) =>
-          lock.synchronized { stages.clear(); taskTimes.clear() }
+          lock.synchronized {
+            stages.clear(); taskTimes.clear(); jobOfStage.clear()
+          }
           spark.sparkContext.setJobDescription(s"profile:$name")
           val t0 = System.nanoTime()
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           val dt = (System.nanoTime() - t0) / 1e9
           // quiescence-based drain (the bus API is private[spark]):
           // poll until no new stage-completion lands for 600 ms, so a
-          // late event is no longer attributed to the next query
+          // late event is no longer attributed to the next query —
+          // capped, so a stream of late events cannot spin it forever
           var seen = -1
           var stable = 0
-          while (stable < 2) {
+          var polls = 0
+          while (stable < 2 && polls < MaxDrainPolls) {
+            polls += 1
             Thread.sleep(300)
             val now = lock.synchronized(stages.size)
             if (now == seen) stable += 1 else { stable = 0; seen = now }

@@ -85,11 +85,9 @@ object Balances {
     * clustering feeding N aligned consumers lost to N in-flight
     * exchanges at N=2 (+41% min-fold, 15M events at 100×) and only
     * reached parity at N=4, a consumer count no engine site has
-    * (PERF.md round 12; the instrument survives as
-    * [[graft.ProbeBucketedFold]], self-contained).
-    * `private[graft]` so the probe prices the real production fold.
+    * (PERF.md round 12).
     */
-  private[graft] def foldInFlight(
+  private def foldInFlight(
       merged: Dataset[BalEvent]): Dataset[AddressBalance] = {
     val spark = merged.sparkSession
     import spark.implicits._

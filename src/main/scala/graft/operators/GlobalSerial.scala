@@ -1,68 +1,87 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{coalesce, col, element_at, lit,
+  monotonically_increasing_id, shiftright, typedLit}
+import org.apache.spark.storage.StorageLevel
 
 /** W1 — deterministic global total order (the reference's
   * TxDBSerialNum sequence, reference/omniEngine.py:106,
-  * reference/sql.py:2502-2504).
+  * reference/sql.py:2502-2504). The engine's ONE serial stamper:
+  * `OmniPipeline.stamp`/`withSerials` are typed views over [[assign]].
   *
   * A naive `row_number() over (order by ...)` collapses the whole
   * dataset onto ONE partition — fatal at 100 TB. Instead: range-partition
   * by the sort key (parallel sampling + shuffle), sort within partitions,
-  * then `zipWithIndex` — which runs one lightweight count-per-partition
-  * job and assigns contiguous offsets per partition. Total work: one
-  * shuffle + one pass, fully parallel, identical result to the global
+  * and stamp by partition offsets. Total work: one shuffle + one
+  * columnar cache fill, fully parallel, identical result to the global
   * row_number as long as `order` is a total order (pass a unique
   * tiebreaker).
-  *
-  * Cache lifetime: each call persists its sorted input
-  * (MEMORY_AND_DISK) and registers the release with
-  * [[graft.CacheScope]]. A long-lived session embedding this operator
-  * MUST call `CacheScope.release()` after consuming each query's
-  * result, or the pins accumulate for the life of the session
-  * (CacheScope warns past 64 outstanding entries).
   */
 object GlobalSerial {
+
+  /** Low 33 bits of a `monotonically_increasing_id`: the row's 0-based
+    * index within its partition; the high bits are the partition id. */
+  private val LocalIdxMask = (1L << 33) - 1
+
+  /** Returns `df` plus a non-null dense 1-based `serialCol` in `order`.
+    *
+    * After the range exchange and the partition sort,
+    * `monotonically_increasing_id()` holds `(pid << 33) | localIdx` for
+    * each row, so it carries both halves of the partition-offset stamp
+    * with no object pass: the tagged rows are pinned as a columnar
+    * MEMORY_AND_DISK cache, the per-partition counts are a columnar
+    * aggregate over that cache (which doubles as the eager fill, so
+    * concurrent consumer branches never race the parse+sort prefix on
+    * cold partitions), and `serial = localIdx + 1 + offsets(pid)` is
+    * codegen arithmetic on the cached rows. Range partitions are
+    * key-ordered, so this IS the global row_number. Assumes each range
+    * partition holds fewer than 2^33 rows — Spark's own limit for the
+    * id's local-index field.
+    *
+    * The offsets array is sized from the largest partition id the
+    * counts saw. It rides as a `typedLit` array that codegen references
+    * as a plain object (no constant-pool entry per element), so at
+    * O(10⁴–10⁵) partitions of a 100 TB stream it is 80 B–800 kB of
+    * plan payload — metadata-sized, like the `collect()`ed counts that
+    * produce it. `OmniPipelineSpec` pins correctness at an adversarial
+    * 4096-partition stamp over a small stream (most partitions empty).
+    *
+    * Cache-stability assumption: the offsets are collected from the
+    * cache, and the serial expression later re-reads that SAME cache —
+    * both jobs must see one materialization. A cached block lost
+    * (evicted, executor gone) between the two jobs is recomputed from
+    * the cached plan's own lineage: the same range-exchange shuffle
+    * (its partitioner is built once per plan), then the sort on the
+    * total order and the id, so the replayed partition reproduces the
+    * same rows, order and ids, and the collected counts stay valid
+    * (`OmniPipelineSpec` evicts every block between the two jobs and
+    * pins the result). Dropping the cache ENTRY mid-query is not
+    * covered — a re-planned exchange may sample different range
+    * bounds — which is why the release is deferred to
+    * [[graft.CacheScope]]: a long-lived session MUST call
+    * `CacheScope.release()` after consuming each query's result, never
+    * before, or the pins accumulate for the life of the session
+    * (CacheScope warns past 64 outstanding entries).
+    */
   def assign(df: DataFrame, serialCol: String, order: Column*): DataFrame = {
-    val spark = df.sparkSession
-    import org.apache.spark.sql.functions.{col, element_at, typedLit}
-    // One object pass (same partition-offset mechanism as
-    // OmniPipeline.stamp/withSerials, ported r14): tag each sorted row
-    // with (partition id, 1-based local index), pin THAT columnar
-    // (query-scoped — compressed batches, not wide JVM objects), read
-    // the per-partition counts off the cache with a columnar aggregate
-    // (which doubles as the eager fill), and assign
-    // serial = offsets(pid) + localIdx as codegen arithmetic.
-    // zipWithIndex's separate count job and second full deserialize
-    // pass are gone; range partitions are key-ordered, so this IS the
-    // zipWithIndex assignment (w1_global_serial's oracle — the naive
-    // global row_number — pins it end-to-end).
-    val sorted = df.repartitionByRange(order: _*)
+    val tag = "__gs_mid"
+    val tagged = df.repartitionByRange(order: _*)
       .sortWithinPartitions(order: _*)
-    val base = sorted.schema.fields
-    val idxSchema = StructType(base :+
-      StructField("__gs_pid", org.apache.spark.sql.types.IntegerType,
-        nullable = false) :+
-      StructField("__gs_idx", LongType, nullable = false))
-    val indexed = spark.createDataFrame(
-        sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-          var i = 0L
-          it.map { row => i += 1L; Row.fromSeq(row.toSeq :+ pid :+ i) }
-        }, idxSchema)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.CacheScope.defer(() => indexed.unpersist(blocking = false))
-    val counts = indexed.groupBy(col("__gs_pid")).count()
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
-    val nParts = indexed.rdd.getNumPartitions
-    val offsets = new Array[Long](nParts)
-    var acc = 0L
-    (0 until nParts).foreach { p =>
-      offsets(p) = acc; acc += counts.getOrElse(p, 0L)
-    }
-    indexed.select(base.map(f => col("`" + f.name + "`")) :+
-      (col("__gs_idx") +
-        element_at(typedLit(offsets.toSeq), col("__gs_pid") + 1))
-        .as(serialCol): _*)
+      .withColumn(tag, monotonically_increasing_id())
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    graft.CacheScope.defer(() => tagged.unpersist(blocking = false))
+    val pid = shiftright(col(tag), 33)
+    val counts = tagged.groupBy(pid).count().collect()
+      .map(r => (r.getLong(0).toInt, r.getLong(1)))
+    val sizes = new Array[Long](counts.map(_._1 + 1).maxOption.getOrElse(0))
+    counts.foreach { case (p, n) => sizes(p) = n }
+    // offsets(p) = rows in all earlier partitions
+    val offsets = sizes.scanLeft(0L)(_ + _)
+    tagged
+      .withColumn(serialCol, col(tag).bitwiseAND(LocalIdxMask) + 1L +
+        coalesce(element_at(typedLit(offsets.toSeq), pid.cast("int") + 1),
+          lit(0L)))
+      .drop(tag)
   }
 }

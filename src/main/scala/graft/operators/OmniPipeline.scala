@@ -25,135 +25,34 @@ object OmniPipeline {
       properties: Dataset[SmartProperty])
 
   /** Deterministic serial assignment (W1): total order by
-    * (block, positioninblock) via range partition + zipWithIndex —
+    * (block, positioninblock, txid) through [[GlobalSerial.assign]] —
     * never a single-partition window (SURVEY §7.4.6).
-    *
-    * Unlike the generic [[stamp]] (which pins the PRE-zip sorted rows
-    * and leaves the stamped stream as an object RDD), this pins the
-    * STAMPED stream itself as a columnar cache. [[deriveStamped]] reads
-    * its input 6+ times (decode, DEx fold, MetaDEx, freezes, registry,
-    * tx dimension); with the cache on the object-RDD's *input*, every
-    * one of those passes re-paid the full RawTx object decode (5 Seq
-    * columns + 8 decimals per row) inside its RDD prefix. Caching the
-    * stamped rows instead lets the sparse consumers prune columnar —
-    * `where(_1.type_int …)` before DeserializeToObject — so only the
-    * decode pass still deserializes every row (measured r13: see
-    * OPTIMIZATION_r13.md). Peak scratch is UNCHANGED: the
-    * stamped cache replaces the sorted cache (same rows + one long),
-    * and the range-exchange shuffle files exist either way. The dense
-    * serial is assigned by partition-offset arithmetic instead of
-    * zipWithIndex, so the whole stamp costs ONE object pass (the cache
-    * fill), not zipWithIndex's count job + data pass.
-    *
-    * Scale headroom of the offsets literal: it is one Long per range
-    * partition, carried as a `typedLit` array that codegen references
-    * as a plain object (no constant-pool entry per element), so at
-    * O(10⁴–10⁵) partitions of a 100 TB stream it is 80 B–800 kB of
-    * plan payload — metadata-sized, like the `collect()`ed counts that
-    * produce it. `OmniPipelineSpec` pins correctness at an adversarial
-    * 4096-partition stamp over a small stream (most partitions empty).
-    *
-    * Cache-stability assumption (r13 ADVICE): the offsets are
-    * collected from the persisted `indexed` cache, and the stamping
-    * expression later re-reads that SAME cache — both jobs must see
-    * one materialization. A cached partition lost and recomputed
-    * between the two jobs re-runs the deterministic
-    * parse→range-exchange→sort→local-index lineage: repartitionByRange
-    * samples with deterministic seeds and the sort key
-    * (block, positioninblock, txid) is a total order, so the replayed
-    * partition reproduces the same rows in the same order and the
-    * collected counts stay valid. The spec's equivalence gate
-    * additionally asserts max(serial) == count as a post-hoc
-    * consistency check.
     */
-  def withSerials(txs: Dataset[RawTx]): Dataset[(RawTx, Long)] = {
-    val spark = txs.sparkSession
-    implicit val enc2: Encoder[(RawTx, Long)] =
-      Encoders.tuple(txs.encoder, Encoders.scalaLong)
-    implicit val enc3: Encoder[(RawTx, Int, Long)] =
-      Encoders.tuple(txs.encoder, Encoders.scalaInt, Encoders.scalaLong)
-    val order = Seq(col("block"), col("positioninblock"), col("txid"))
-    val sorted = txs
-      .repartitionByRange(order: _*)
-      .sortWithinPartitions(order: _*)
-    // ONE object pass total (zipWithIndex would be two: its eager count
-    // job + the data pass): tag each row with (partition id, 1-based
-    // local index), cache THAT columnar, and read the per-partition
-    // counts off the cache — the counts aggregate doubles as the eager
-    // cache fill, so concurrent consumer branches can never race the
-    // parse+sort prefix on cold partitions (first-writer-wins would
-    // recompute it per branch).
-    val indexed = spark.createDataset(
-        sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-          var i = 0L
-          it.map { tx => i += 1L; (tx, pid, i) }
-        })
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.CacheScope.defer(() => indexed.unpersist(blocking = false))
-    val counts = indexed.groupBy(col("_2")).count()
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
-    val nParts = indexed.rdd.getNumPartitions
-    // dense global serial = rows in all earlier partitions + local idx
-    // (range partitions are key-ordered, so this IS the zipWithIndex
-    // assignment); offsets ride as a literal array → plain codegen
-    // arithmetic on the cached rows, no join, no second pass.
-    val offsets = new Array[Long](nParts)
-    var acc = 0L
-    (0 until nParts).foreach { p =>
-      offsets(p) = acc; acc += counts.getOrElse(p, 0L)
-    }
-    indexed.select(col("_1"),
-        (col("_3") + element_at(typedLit(offsets.toSeq), col("_2") + 1))
-          .as("_2"))
-      .as[(RawTx, Long)]
-  }
+  def withSerials(txs: Dataset[RawTx]): Dataset[(RawTx, Long)] =
+    stamp(txs, col("block"), col("positioninblock"), col("txid"))
 
-  /** Generic serial stamper — stamp the NARROWEST dataset available
-    * (e.g. key tuples) and join/map the wide rows afterwards: the
-    * sample and count passes then move only a few columns.
+  /** Typed view of [[GlobalSerial.assign]]: each row of a product-typed
+    * (case class or tuple) dataset paired with its dense 1-based serial
+    * in `order`. Stamp the NARROWEST dataset
+    * available (e.g. key tuples) and join/map the wide rows afterwards:
+    * the sample and count passes then move only a few columns.
     *
-    * Same one-pass partition-offset mechanism as [[withSerials]]
-    * (which it previously lacked — r13 ported only the RawTx stamper):
-    * ONE object pass tags each sorted row with (partition id, 1-based
-    * local index) and is pinned as a COLUMNAR query-scoped cache (a
-    * wide row set cached as JVM objects costs ~1 kB/row of heap + GC
-    * where compressed columnar batches are several times smaller); the
-    * per-partition counts are a cheap columnar aggregate off that
-    * cache (which doubles as the eager fill), and the dense serial
-    * rides as literal-array arithmetic in codegen. zipWithIndex's
-    * count job + second full deserialize pass are gone. Range
-    * partitions are key-ordered, so the assignment IS zipWithIndex's;
-    * OmniPipelineSpec pins the equivalence for this stamper too. The
-    * cache is CacheScope-registered per call — two concurrent
-    * stamper-using queries cannot unpersist each other.
+    * The row is packed into `_1` BEFORE the stamp, with the sort keys
+    * beside it, so the stamper's cache holds it as one struct column:
+    * every typed consumer (the decode pass and each fold in
+    * [[deriveStamped]]) then reads one cached column instead of
+    * reassembling `_1` from every field of a flat cache — measured
+    * ~10% less consumer time on the sf0.01 flagship feed (4 cores,
+    * local[4]).
     */
-  def stamp[T](txs: Dataset[T], order: org.apache.spark.sql.Column*): Dataset[(T, Long)] = {
-    val spark = txs.sparkSession
-    implicit val enc2: Encoder[(T, Long)] =
-      Encoders.tuple(txs.encoder, Encoders.scalaLong)
-    implicit val enc3: Encoder[(T, Int, Long)] =
-      Encoders.tuple(txs.encoder, Encoders.scalaInt, Encoders.scalaLong)
-    val sorted = txs
-      .repartitionByRange(order: _*)
-      .sortWithinPartitions(order: _*)
-    val indexed = spark.createDataset(
-        sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-          var i = 0L
-          it.map { tx => i += 1L; (tx, pid, i) }
-        })
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.CacheScope.defer(() => indexed.unpersist(blocking = false))
-    val counts = indexed.groupBy(col("_2")).count()
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
-    val nParts = indexed.rdd.getNumPartitions
-    val offsets = new Array[Long](nParts)
-    var acc = 0L
-    (0 until nParts).foreach { p =>
-      offsets(p) = acc; acc += counts.getOrElse(p, 0L)
-    }
-    indexed.select(col("_1"),
-        (col("_3") + element_at(typedLit(offsets.toSeq), col("_2") + 1))
-          .as("_2"))
+  def stamp[T](ds: Dataset[T], order: org.apache.spark.sql.Column*): Dataset[(T, Long)] = {
+    implicit val enc: Encoder[(T, Long)] =
+      Encoders.tuple(ds.encoder, Encoders.scalaLong)
+    val keys = order.indices.map(i => s"__k$i")
+    val keyed = ds.toDF().select(struct(ds.columns.map(col): _*).as("_1") +:
+      order.zip(keys).map { case (o, k) => o.as(k) }: _*)
+    GlobalSerial.assign(keyed, "_2", keys.map(col): _*)
+      .select("_1", "_2")
       .as[(T, Long)]
   }
 
@@ -167,9 +66,8 @@ object OmniPipeline {
     * serial is unchanged: `withSerials(truncate(x, f)) ==
     * truncate'(withSerials(x), f)` exactly. The m4 sequential schedule
     * exploits that to stamp ONCE at max(fork) and serve every fork
-    * from the shared stamped prefix (the range-exchange + sort +
-    * zipWithIndex count pass is the serve's widest fork-independent
-    * slice).
+    * from the shared stamped prefix (the range exchange, sort and
+    * counts pass are the serve's widest fork-independent slice).
     */
   def deriveStamped(stamped: Dataset[(RawTx, Long)],
       tipBlock: Long): Derived = {

@@ -192,7 +192,8 @@ object JoinQueries {
   }
 
   /** W1 — deterministic global serial via [[GlobalSerial]] (range
-    * partition + zipWithIndex), never a one-partition row_number. The
+    * partition + partition-offset stamp), never a one-partition
+    * row_number. The
     * oracle IS the naive global row_number — proving the scalable path
     * computes the identical total order.
     */

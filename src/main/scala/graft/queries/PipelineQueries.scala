@@ -772,7 +772,7 @@ object PipelineQueries {
       // but via the stamper's own scoped MEMORY_AND_DISK persist
       // instead of a checkpoint: both fork plans read one
       // InMemoryRelation, so the parse, the range exchange, the sort
-      // and the zipWithIndex count pass execute once, not per fork —
+      // and the stamper's counts pass execute once, not per fork —
       // only the cheap cached-batch rescan and the per-fork ledger
       // derivation run twice. No checkpoint round-trip, no barrier:
       // at bench scale that materialization is exactly what made the
@@ -808,11 +808,9 @@ object PipelineQueries {
       // extra copy was the difference between fitting the one-box
       // sweep disk and ENOSPC mid-snapshot (measured this round); the
       // persist is the same executor-disk durability class a
-      // localCheckpoint has, so the copy buys nothing. zipWithIndex's
-      // eager count job materializes every cached partition EXCEPT the
-      // last (it only sizes partitions 0..n-2), so force the full pass
-      // before sweeping the parse shuffles the cache would otherwise
-      // need for a last-partition recompute.
+      // localCheckpoint has, so the copy buys nothing. The stamper's
+      // counts aggregate already filled every cached partition, so the
+      // parse shuffles can be swept right after the stamp.
       //
       // Under spark.graft.reliableCheckpoint the extra copy IS the
       // point (survive executor loss between the fork serves): snapshot
@@ -828,10 +826,7 @@ object PipelineQueries {
           graft.CacheScope.releaseSince(mParse)
           graft.CacheScope.register(snap)
           snap
-        } else {
-          stamped0.count()
-          stamped0
-        }
+        } else stamped0
       org.apache.spark.GraftShuffleSweep.dropSince(sc, shufParse)
       forks
         .map { case (label, fork) =>

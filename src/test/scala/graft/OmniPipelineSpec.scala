@@ -142,6 +142,58 @@ class OmniPipelineSpec extends SparkTestBase {
     }
   }
 
+  test("stamper chaos: every cached block evicted between the counts " +
+      "collect and the serve — serials still equal sort-then-enumerate") {
+    // GlobalSerial.assign collects per-partition counts off its tagged
+    // cache, then serves serials by re-reading that cache. A block lost
+    // in between must replay the same rows, order and ids from the
+    // cached plan's lineage, or the offsets no longer fit and the
+    // serials double up or leave gaps. Evict ALL of them: the serve
+    // then recomputes every partition.
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val txs = new scala.util.Random(29).shuffle((1 to 1000).map { i =>
+      simpleSend(A, B, BigDecimal(i), block = i % 41, pos = i % 3)
+        .copy(txid = f"e$i%04d")
+    }.toList)
+    try {
+      val stamped = OmniPipeline
+        .withSerials(spark.createDataset(txs).repartition(13))
+      val caches = stamped.queryExecution.withCachedData.collect {
+        case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers
+      }
+      assert(caches.size == 1)
+      caches.foreach(_.unpersist(blocking = true))
+      assert(caches.forall(c =>
+        !spark.sparkContext.getPersistentRDDs.contains(c.id)))
+      val got = stamped.collect()
+      val expected = txs
+        .sortBy(t => (t.block, t.positioninblock, t.txid))
+        .zipWithIndex.map { case (t, i) => t.txid -> (i + 1L) }.toMap
+      assert(got.length == 1000)
+      got.foreach { case (t, s) => assert(expected(t.txid) == s,
+        s"txid ${t.txid} stamped $s, expected ${expected(t.txid)}") }
+      assert(got.map(_._2).max == got.length.toLong)
+    } finally graft.queries.Q.releaseScoped()
+  }
+
+  test("GlobalSerial.assign: names with a backtick or a dot survive, " +
+      "the serial is non-null and dense") {
+    import org.apache.spark.sql.functions.col
+    val rows = new scala.util.Random(5).shuffle((1 to 200).map { i =>
+      (i.toLong, s"v$i")
+    }.toList)
+    try {
+      val df = rows.toDF("a`b", "x.y")
+      val out = graft.operators.GlobalSerial
+        .assign(df.repartition(7), "serial", col("`a``b`"))
+      assert(out.columns.toSeq == Seq("a`b", "x.y", "serial"))
+      assert(!out.schema("serial").nullable)
+      val got = out.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+      assert(got.sortBy(_._3).toSeq ==
+        rows.sorted.zipWithIndex.map { case ((k, v), i) => (k, v, i + 1L) })
+    } finally graft.queries.Q.releaseScoped()
+  }
+
   test("freeze: snapshot, receive-while-frozen redirect, unfreeze (sql.py:1408-1414)") {
     val payload31 = "00000000" + "0000001f"
     val txs = Seq(

@@ -339,6 +339,45 @@ class PlanSpec extends SparkTestBase {
       s"typed map lambda returned to the a6 offer build:\n$p")
   }
 
+  test("stamper: the cached stamp is columnar — no object or RDD operator under its InMemoryRelation") {
+    // The serial stamper pins its tagged rows as a columnar cache and
+    // stamps with expression arithmetic. Any return of the RDD form
+    // (.rdd.mapPartitionsWithIndex + createDataset/createDataFrame)
+    // shows up under the cache as an object (de)serialization, a
+    // MapPartitions, or an ExternalRDD/LogicalRDD leaf.
+    import graft.operators.{GlobalSerial, OmniPipeline}
+    import graft.streaming.IncrementalIngest
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val forbidden = Seq("DeserializeToObject", "SerializeFromObject",
+      "MapPartitions", "ExternalRDD", "LogicalRDD", "RDDScan")
+    def cachedPlans(ds: org.apache.spark.sql.Dataset[_]): Seq[String] =
+      ds.queryExecution.withCachedData.collect { case r: InMemoryRelation =>
+        r.cacheBuilder.logicalPlan.treeString + r.cacheBuilder.cachedPlan.treeString
+      }
+    val factsDir = java.nio.file.Files.createTempDirectory("graft_plan_facts").toString
+    IncrementalIngest.ingest(spark, spark.createDataset(Seq(
+      Fixtures.grant(Fixtures.A, Fixtures.A, BigDecimal("100"), block = 1),
+      Fixtures.simpleSend(Fixtures.A, Fixtures.B, BigDecimal("10"), block = 2))),
+      factsDir)
+    try {
+      val stamped = OmniPipeline.withSerials(
+        IncrementalIngest.readFacts(spark, factsDir))
+      val assigned = GlobalSerial.assign(
+        Seq((3L, "c"), (1L, "a"), (2L, "b")).toDF("k", "v"), "serial", col("k"))
+      Seq("withSerials" -> cachedPlans(stamped),
+          "GlobalSerial.assign" -> cachedPlans(assigned)).foreach { case (what, plans) =>
+        assert(plans.size == 1, s"$what: expected one stamper cache, got ${plans.size}")
+        forbidden.foreach { op =>
+          assert(!plans.head.contains(op), s"$what: $op under the stamper cache:\n" +
+            plans.head.linesIterator.map(_.take(120)).mkString("\n"))
+        }
+      }
+      assert(stamped.collect().map(_._2).sorted.toSeq == Seq(1L, 2L))
+    } finally graft.queries.Q.releaseScoped()
+  }
+
   test("bench actions: fullEval's wrapper eliminates the final sort; ordered keeps it") {
     // Pins the mechanism behind SPARK_GRAFT_ACTION=ordered: an
     // order-insensitive aggregate placed on top of a query (fullEval's
