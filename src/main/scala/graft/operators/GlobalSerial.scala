@@ -63,6 +63,15 @@ object GlobalSerial {
     * `CacheScope.release()` after consuming each query's result, never
     * before, or the pins accumulate for the life of the session
     * (CacheScope warns past 64 outstanding entries).
+    *
+    * A cache built ON TOP of this one outlives that release only if it
+    * is fully filled first: Spark re-plans a dependent cache entry whose
+    * blocks are not all loaded when the entry below it is dropped.
+    * [[graft.streaming.IncrementalIngest.derive]]'s pinned segments
+    * (stamped sealed ranges reused across calls, the one session-scoped
+    * cache) are filled by their per-range count before it returns; it
+    * stamps only the ranges above them and shifts this serial by their
+    * row count.
     */
   def assign(df: DataFrame, serialCol: String, order: Column*): DataFrame = {
     val tag = "__gs_mid"

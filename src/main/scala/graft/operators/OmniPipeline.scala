@@ -68,6 +68,16 @@ object OmniPipeline {
     * exploits that to stamp ONCE at max(fork) and serve every fork
     * from the shared stamped prefix (the range exchange, sort and
     * counts pass are the serve's widest fork-independent slice).
+    * [[graft.streaming.IncrementalIngest.derive]] exploits it the other
+    * way round: a prefix of whole block ranges keeps its serials as the
+    * store grows, so only the rows above it are stamped, each serial
+    * shifted by the prefix's row count — `withSerials(x)` equals the
+    * reused prefix ∪ `withSerials(x above it)` + its size, exactly.
+    *
+    * The order of `stamped`'s rows does not matter: every fold
+    * re-partitions and sorts by its key and serial. The DEx fold and the
+    * property registry, each read by more than one output, are cached
+    * for the query ([[graft.CacheScope]]).
     */
   def deriveStamped(stamped: Dataset[(RawTx, Long)],
       tipBlock: Long): Derived = {
@@ -88,9 +98,13 @@ object OmniPipeline {
     // correctness identical.) Each type set is the consumer's OWN
     // published constant, so a consumer that widens its types widens
     // this pre-filter in lockstep (r13 ADVICE).
-    val dex = DexLifecycle.derive(
+    // dex feeds the ledger, the offers and the accepts; properties feed
+    // the wallet view's names and the registry table: each is folded
+    // once and cached for the query (CacheScope). MetaDEx stays
+    // unpinned (see MetaDexOps).
+    val dex = graft.CacheScope.persist(DexLifecycle.derive(
       stamped.where(col("_1.type_int")
-        .isin(DexLifecycle.EventTypes.toSeq: _*)), tipBlock)
+        .isin(DexLifecycle.EventTypes.toSeq: _*)), tipBlock))
     val dexLedger = dex.flatMap(_.ledger)
     val (trades, metaLedger) = MetaDexOps.derive(
       stamped.where(col("_1.type_int")
@@ -105,9 +119,9 @@ object OmniPipeline {
     val balances = Balances.deriveWithFreezes(ledger, freezes)
     val offers = dex.flatMap(_.offers)
     val accepts = dex.flatMap(_.accepts)
-    val properties = PropertyRegistry.derive(stamped.where(
-      col("_1.valid") && col("_1.type_int")
-        .isin(PropertyRegistry.LifecycleTypes.toSeq: _*)))
+    val properties = graft.CacheScope.persist(PropertyRegistry.derive(
+      stamped.where(col("_1.valid") && col("_1.type_int")
+        .isin(PropertyRegistry.LifecycleTypes.toSeq: _*))))
 
     Derived(stamped, ledger, balances, offers, accepts, trades, properties)
   }

@@ -260,41 +260,38 @@ object BlockRangeSink {
     */
   def watermark(spark: SparkSession, path: String,
       blockCol: String = "block"): Long = {
-    val ranges = timed("watermark.stats")(stats(path).filter(_.nFiles > 0))
+    val ranges = timed("watermark.stats")(stats(path))
     if (ranges.isEmpty) -1L
-    else timed("watermark.probe")(
-      tailMax(spark, path, ranges.map(_.blockRange).max, blockCol))
+    else timed("watermark.probe")(tailMax(spark, path, ranges.last, blockCol))
   }
 
-  /** Max of `blockCol` inside range `maxRange`: the footer answer
-    * ([[footerMax]]) when every file's statistics can give it, else the
-    * [[tailMaxProbe]] scan. The choice follows what the files carry, so
-    * stores written without statistics (or holding null blocks) still
-    * answer exactly.
+  /** Max of `blockCol` inside the tail range `tail` (the last entry of
+    * a [[stats]] listing): the footer answer ([[footerMax]]) when every
+    * file's statistics can give it, else the [[tailMaxProbe]] scan. The
+    * choice follows what the files carry, so stores written without
+    * statistics (or holding null blocks) still answer exactly.
     */
   private[graft] def tailMax(spark: SparkSession, path: String,
-      maxRange: Long, blockCol: String): Long =
-    footerMax(path, maxRange, blockCol).getOrElse(
-      tailMaxProbe(spark, path, maxRange, blockCol).head().getLong(0))
+      tail: RangeStats, blockCol: String): Long =
+    footerMax(path, tail, blockCol).getOrElse(
+      tailMaxProbe(spark, path, tail.blockRange, blockCol).head().getLong(0))
 
-  /** Max of `blockCol` over range `maxRange` from parquet row-group
-    * statistics alone: one listing of the range directory plus one
-    * footer read per file, through the `FileSystem` resolved from the
-    * path — no Spark job. `None` (the caller scans instead) whenever the
-    * footers cannot give the exact answer: no data file or no row
-    * group, a top-level `blockCol` that is missing or not a signed
-    * INT32/INT64, or any row group whose statistics are absent, carry
-    * no null count, or count a null (a null block is out-of-model data;
-    * the scan's SQL `max` is the reference semantics for it).
+  /** Max of `blockCol` over range `tail` from parquet row-group
+    * statistics alone: one footer read per file the listing recorded,
+    * through the `FileSystem` resolved from the path — no listing, no
+    * Spark job. `None` (the caller scans instead) whenever the footers
+    * cannot give the exact answer: no data file or no row group, a
+    * top-level `blockCol` that is missing or not a signed INT32/INT64,
+    * or any row group whose statistics are absent, carry no null count,
+    * or count a null (a null block is out-of-model data; the scan's SQL
+    * `max` is the reference semantics for it).
     */
-  private[graft] def footerMax(path: String, maxRange: Long,
+  private[graft] def footerMax(path: String, tail: RangeStats,
       blockCol: String): Option[Long] = {
     val conf = hadoopConf
-    val (fs, dir) = fsFor(s"$path/blockRange=$maxRange")
-    val files = fs.listStatus(dir).filter { s =>
-      val n = s.getPath.getName
-      s.isFile && n.endsWith(".parquet") &&
-        !n.startsWith(".") && !n.startsWith("_")
+    val files = tail.files.map { f =>
+      new FileStatus(f.length, false, 1, 0L, f.modTime,
+        new Path(filePath(path, tail.blockRange, f)))
     }
     val target = ColumnPath.get(blockCol)
     def signedInt(p: PrimitiveType): Boolean =
@@ -357,11 +354,37 @@ object BlockRangeSink {
       range: Long): DataFrame =
     spark.read.parquet(s"$path/blockRange=$range")
 
+  /** One data file as a listing saw it. Every sink write gives its files
+    * fresh names, so (name, length, modification time) identifies a
+    * file generation: a range whose identities are unchanged holds the
+    * same rows.
+    */
+  final case class FileId(name: String, length: Long, modTime: Long)
+
   /** Per-partition file statistics — metadata-only (directory listing,
     * no data scan): the observability a long-lived table needs to
-    * decide when compaction pays.
+    * decide when compaction pays, and the file identities (sorted by
+    * name) that let a reader address exactly these files or tell that
+    * the range changed.
     */
-  final case class RangeStats(blockRange: Long, nFiles: Int, bytes: Long)
+  final case class RangeStats(blockRange: Long, files: Seq[FileId]) {
+    def nFiles: Int = files.size
+    def bytes: Long = files.map(_.length).sum
+  }
+
+  /** Full path of one listed file of range `range`. */
+  private[graft] def filePath(path: String, range: Long, f: FileId): String =
+    s"$path/blockRange=$range/${f.name}"
+
+  /** A data file as Spark's file index sees one: parquet, not hidden. */
+  private def isDataFile(s: FileStatus): Boolean = {
+    val n = s.getPath.getName
+    s.isFile && n.endsWith(".parquet") && !n.startsWith(".") &&
+      !n.startsWith("_")
+  }
+
+  private def fileId(s: FileStatus): FileId =
+    FileId(s.getPath.getName, s.getLen, s.getModificationTime)
 
   /** Listing strategy is SCHEME-AWARE, because the costs invert
     * between stores:
@@ -404,30 +427,28 @@ object BlockRangeSink {
         .filter(s => s.isDirectory &&
           s.getPath.getName.startsWith("blockRange="))
         .map { d =>
-          val files = fs.listStatus(d.getPath)
-            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
           RangeStats(d.getPath.getName.stripPrefix("blockRange=").toLong,
-            files.length, files.map(_.getLen).sum)
+            fs.listStatus(d.getPath).filter(isDataFile).map(fileId)
+              .sortBy(_.name).toSeq)
         }
         .filter(_.nFiles > 0)
         .sortBy(_.blockRange)
     else {
       val qroot = fs.makeQualified(root)
-      val acc = scala.collection.mutable.Map.empty[Long, (Int, Long)]
+      val acc = scala.collection.mutable.Map.empty[Long, Vector[FileId]]
       val it = fs.listFiles(qroot, true)
       while (it.hasNext) {
         val f = it.next()
         val dir = f.getPath.getParent
-        if (f.getPath.getName.endsWith(".parquet") &&
+        if (isDataFile(f) &&
             dir != null && dir.getName.startsWith("blockRange=") &&
             dir.getParent == qroot) {
           val r = dir.getName.stripPrefix("blockRange=").toLong
-          val (n, b) = acc.getOrElse(r, (0, 0L))
-          acc.update(r, (n + 1, b + f.getLen))
+          acc.update(r, acc.getOrElse(r, Vector.empty) :+ fileId(f))
         }
       }
       acc.toSeq
-        .map { case (r, (n, b)) => RangeStats(r, n, b) }
+        .map { case (r, ids) => RangeStats(r, ids.sortBy(_.name)) }
         .sortBy(_.blockRange)
     }
   }

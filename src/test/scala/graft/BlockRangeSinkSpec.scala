@@ -303,9 +303,9 @@ class BlockRangeSinkSpec extends SparkTestBase {
   test("footer watermark equals the scan (INT64, INT32, multi-file tail); " +
       "no-statistics and null-block tails fall back to the scan") {
     def check(dir: String, expected: Long, fromFooter: Boolean): Unit = {
-      val tail = BlockRangeSink.stats(dir).map(_.blockRange).max
-      val probe = BlockRangeSink.tailMaxProbe(spark, dir, tail, "block")
-        .head().getLong(0)
+      val tail = BlockRangeSink.stats(dir).last
+      val probe = BlockRangeSink.tailMaxProbe(spark, dir, tail.blockRange,
+        "block").head().getLong(0)
       assert(probe == expected)
       assert(BlockRangeSink.watermark(spark, dir) == probe)
       assert(BlockRangeSink.footerMax(dir, tail, "block").isDefined ==

@@ -52,6 +52,29 @@ class CacheHygieneSpec extends SparkTestBase {
         left.values.map(_.name).mkString(", "))
   }
 
+  test("incremental derive: the pinned segments are the one cache left " +
+      "after the harness release, and IncrementalIngest.release() frees them") {
+    import graft.streaming.IncrementalIngest
+    import spark.implicits._
+    Q.releaseScoped() // clean slate
+    val dir = java.nio.file.Files.createTempDirectory("graft_hygiene_derive").toString
+    IncrementalIngest.ingest(spark, spark.createDataset(Seq(
+      Fixtures.grant(Fixtures.A, Fixtures.A, BigDecimal("100"), block = 1),
+      Fixtures.simpleSend(Fixtures.A, Fixtures.B, BigDecimal("10"), block = 1500))),
+      dir)
+    try {
+      val d = IncrementalIngest.derive(spark, dir)
+      Seq(d.balances, d.offers, d.accepts, d.properties).foreach(_.count())
+      Q.releaseScoped()
+      assert(spark.sparkContext.getPersistentRDDs.nonEmpty,
+        "the sealed range's segment did not survive the harness release")
+      IncrementalIngest.release()
+      val left = spark.sparkContext.getPersistentRDDs
+      assert(left.isEmpty, s"derive left ${left.size} cached RDDs: " +
+        left.values.map(_.name).mkString(", "))
+    } finally IncrementalIngest.release()
+  }
+
   test("cache-heavy queries leave zero persistent RDDs after release") {
     assume(new java.io.File(dir).isDirectory)
     val qmap = SparkEntry.queries

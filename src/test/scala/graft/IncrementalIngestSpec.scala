@@ -34,15 +34,96 @@ class IncrementalIngestSpec extends SparkTestBase {
       spark.createDataset(chain), factsDir) == 0L)
     assert(IncrementalIngest.readFacts(spark, factsDir).count() == 5L)
 
-    val incremental = IncrementalIngest.derive(spark, factsDir)
-      .balances.collect()
-      .map(b => (b.address, b.propertyId) -> b.available).toMap
+    val incremental =
+      try IncrementalIngest.derive(spark, factsDir)
+        .balances.collect()
+        .map(b => (b.address, b.propertyId) -> b.available).toMap
+      finally IncrementalIngest.release()
     val oneShot = graft.operators.OmniPipeline
       .derive(spark.createDataset(chain), 5)
       .balances.collect()
       .map(b => (b.address, b.propertyId) -> b.available).toMap
     assert(incremental == oneShot)
     assert(incremental((D, 31L)) == 200000000L)
+  }
+
+  test("warm derive after a tail-only ingest scans only the changed " +
+      "range's files and lists the store once, at any range count") {
+    import graft.sinks.BlockRangeSink
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countfs.impl", classOf[CountingFileSystem].getName)
+    object Plans extends AdaptiveSparkPlanHelper
+    // (files the derive scanned, files of the ranges the tail ingest
+    // changed, list calls of the derive) on a store of `n` ranges
+    def run(n: Int): (Long, Long, Int) = {
+      val dir = "countfs://" +
+        Files.createTempDirectory(s"graft_derive_scope$n").toString
+      val history = grant(A, A, BigDecimal("1000"), block = 1) +:
+        (1 until n * 4).map(i => simpleSend(A, B, BigDecimal(i),
+          block = i * 250L))
+      try {
+        IncrementalIngest.ingest(spark, spark.createDataset(history), dir)
+        IncrementalIngest.derive(spark, dir) // warm: pins ranges 0..n-2
+        graft.queries.Q.releaseScoped()
+        val before = BlockRangeSink.stats(dir)
+        IncrementalIngest.ingest(spark, spark.createDataset(Seq(
+          simpleSend(B, C, BigDecimal("1"), block = n * 1000L - 10))), dir)
+        val changed = BlockRangeSink.stats(dir).filterNot(before.contains)
+        CountingFileSystem.reset()
+        val d = IncrementalIngest.derive(spark, dir)
+        val lists = CountingFileSystem.calls.get()
+        assert(d.txs.count() == history.size + 1L)
+        // the scan inside this derive's stamper cache; pinned segments
+        // hold no scan of their own (theirs ran in an earlier derive)
+        val scanned = d.txs.queryExecution.withCachedData.collect {
+          case r: InMemoryRelation => Plans.collect(r.cacheBuilder.cachedPlan) {
+            case s: FileSourceScanExec => s.metrics("numFiles").value
+          }.sum
+        }.sum
+        (scanned, changed.map(_.nFiles.toLong).sum, lists)
+      } finally {
+        IncrementalIngest.release()
+        graft.queries.Q.releaseScoped()
+      }
+    }
+    val (scanned4, changed4, lists4) = run(4)
+    val (scanned12, changed12, lists12) = run(12)
+    assert(changed4 > 0 && scanned4 == changed4,
+      s"4 ranges: derive scanned $scanned4 files; the changed range holds $changed4")
+    assert(changed12 > 0 && scanned12 == changed12,
+      s"12 ranges: derive scanned $scanned12 files; the changed range holds $changed12")
+    assert(lists4 == lists12,
+      s"derive listing calls grew with range count: 4 ranges $lists4, 12 ranges $lists12")
+  }
+
+  test("one sealed range per derive: the segments merge past their cap " +
+      "and the stream still equals a cold derive") {
+    import graft.sinks.BlockRangeSink
+    val dir = Files.createTempDirectory("graft_derive_merge").toString
+    def txs(r: Long) = if (r == 0L) Seq(grant(A, A, BigDecimal("1000"), block = 5))
+      else Seq(simpleSend(A, B, BigDecimal(r), block = r * 1000 + 5),
+        simpleSend(B, C, BigDecimal(1), block = r * 1000 + 7, pos = 1))
+    try {
+      // each tick opens a new range and seals the one below it: one
+      // new segment per derive, twelve in all
+      (0L to 12L).foreach { r =>
+        IncrementalIngest.ingest(spark, spark.createDataset(txs(r)), dir)
+        IncrementalIngest.derive(spark, dir)
+        graft.queries.Q.releaseScoped()
+      }
+      val d = IncrementalIngest.derive(spark, dir)
+      assert(IncrementalIngest.lastReuse == (12, 13))
+      val cold = graft.operators.OmniPipeline.derive(
+        IncrementalIngest.readFacts(spark, dir), BlockRangeSink.watermark(spark, dir))
+      assert(d.txs.collect().toSeq.sortBy(_._2) == cold.txs.collect().toSeq.sortBy(_._2))
+      assert(d.balances.collect().toSet == cold.balances.collect().toSet)
+    } finally {
+      IncrementalIngest.release()
+      graft.queries.Q.releaseScoped()
+    }
   }
 
   test("raw JSON source round-trips the RawTx schema (S2/S3)") {

@@ -258,9 +258,41 @@ class PlanSpec extends SparkTestBase {
       releaseScopedCaches()
     } finally
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-    val p = plan(graft.queries.PipelineQueries.e2eIngestChain)
+    val q = graft.queries.PipelineQueries.e2eIngestChain.run(spark, dir)
+    val p = q.queryExecution.executedPlan.toString
     // wallet map and pending tallies broadcast into the serving join
     assert(p.split("BroadcastHashJoin").length - 1 >= 2, p)
+    // with auto-broadcast ON, size-adaptive planning may broadcast the
+    // vin→vout join, but only its smaller ESTIMATED side, and only one
+    // under the threshold — a stats misestimate that made the planner
+    // broadcast the larger UTXO side trips here
+    locally {
+      import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
+      import org.apache.spark.sql.catalyst.plans.logical.Join
+      import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+        ShuffledHashJoinExec, SortMergeJoinExec}
+      val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+      def utxo(keys: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+        keys.exists(_.references.exists(_.name == "pTxid"))
+      val joins = q.queryExecution.sparkPlan.collect {
+        case b: BroadcastHashJoinExec if utxo(b.leftKeys ++ b.rightKeys) =>
+          Some(b)
+        case j: SortMergeJoinExec if utxo(j.leftKeys ++ j.rightKeys) => None
+        case j: ShuffledHashJoinExec if utxo(j.leftKeys ++ j.rightKeys) => None
+      }
+      assert(joins.nonEmpty, s"no vin→vout equi-join in the plan:\n$p")
+      joins.flatten.foreach { b =>
+        val j = b.logicalLink.collect { case j: Join => j }
+          .getOrElse(fail(s"broadcast join without its logical join:\n$b"))
+        val (build, probe) = b.buildSide match {
+          case BuildLeft => (j.left, j.right)
+          case BuildRight => (j.right, j.left)
+        }
+        val (bs, ps) = (build.stats.sizeInBytes, probe.stats.sizeInBytes)
+        assert(bs <= ps, s"vin→vout broadcasts its larger side: $bs > $ps bytes")
+        assert(bs <= threshold, s"vin→vout broadcasts $bs bytes > $threshold")
+      }
+    }
     // serials from the W1 stamper, chain windows partitioned by ck —
     // nothing may collapse the ledger to one partition
     assert(!p.contains("Exchange SinglePartition"),
@@ -361,21 +393,38 @@ class PlanSpec extends SparkTestBase {
       Fixtures.grant(Fixtures.A, Fixtures.A, BigDecimal("100"), block = 1),
       Fixtures.simpleSend(Fixtures.A, Fixtures.B, BigDecimal("10"), block = 2))),
       factsDir)
+    // a two-range store: its second derive reuses the pinned range 0
+    val chainDir = java.nio.file.Files.createTempDirectory("graft_plan_derive").toString
+    IncrementalIngest.ingest(spark, spark.createDataset(Seq(
+      Fixtures.grant(Fixtures.A, Fixtures.A, BigDecimal("100"), block = 1),
+      Fixtures.simpleSend(Fixtures.A, Fixtures.B, BigDecimal("10"), block = 1500))),
+      chainDir)
     try {
       val stamped = OmniPipeline.withSerials(
         IncrementalIngest.readFacts(spark, factsDir))
       val assigned = GlobalSerial.assign(
         Seq((3L, "c"), (1L, "a"), (2L, "b")).toDF("k", "v"), "serial", col("k"))
-      Seq("withSerials" -> cachedPlans(stamped),
-          "GlobalSerial.assign" -> cachedPlans(assigned)).foreach { case (what, plans) =>
-        assert(plans.size == 1, s"$what: expected one stamper cache, got ${plans.size}")
-        forbidden.foreach { op =>
-          assert(!plans.head.contains(op), s"$what: $op under the stamper cache:\n" +
-            plans.head.linesIterator.map(_.take(120)).mkString("\n"))
-        }
+      IncrementalIngest.derive(spark, chainDir)
+      IncrementalIngest.ingest(spark, spark.createDataset(Seq(
+        Fixtures.simpleSend(Fixtures.B, Fixtures.C, BigDecimal("1"), block = 1600))),
+        chainDir)
+      val derived = IncrementalIngest.derive(spark, chainDir).txs
+      // derive's stream: the pinned segment plus this call's stamper cache
+      Seq(("withSerials", cachedPlans(stamped), 1),
+          ("GlobalSerial.assign", cachedPlans(assigned), 1),
+          ("IncrementalIngest.derive", cachedPlans(derived), 2)).foreach {
+        case (what, plans, n) =>
+          assert(plans.size == n, s"$what: expected $n cached relations, got ${plans.size}")
+          for (plan <- plans; op <- forbidden)
+            assert(!plan.contains(op), s"$what: $op under a stamped cache:\n" +
+              plan.linesIterator.map(_.take(120)).mkString("\n"))
       }
       assert(stamped.collect().map(_._2).sorted.toSeq == Seq(1L, 2L))
-    } finally graft.queries.Q.releaseScoped()
+      assert(derived.collect().map(_._2).sorted.toSeq == Seq(1L, 2L, 3L))
+    } finally {
+      IncrementalIngest.release()
+      graft.queries.Q.releaseScoped()
+    }
   }
 
   test("bench actions: fullEval's wrapper eliminates the final sort; ordered keeps it") {

@@ -114,6 +114,98 @@ class RandomChainSpec extends SparkTestBase {
     }
   }
 
+  test("incremental derive equals a cold derive after random ingests, " +
+      "reorgs, compaction, cache loss and a second session") {
+    import graft.sinks.BlockRangeSink
+    import graft.streaming.IncrementalIngest
+    import org.apache.spark.sql.{Dataset, SparkSession}
+    val rnd = new scala.util.Random(2027)
+    // blocks 150..7350: eight block ranges, so a reorg can cut inside
+    // the tail range, across one boundary, or deeper than a range
+    val base = randomChain(31L, 240).map(t => t.copy(block = t.block * 150))
+    val top = base.map(_.block).max
+    val dir = java.nio.file.Files.createTempDirectory("graft_incr_equiv").toString
+    var chain = base // what the node serves now
+    var branch = 0
+    def served(upTo: Long) = spark.createDataset(chain.filter(_.block <= upTo))
+    def tip() = BlockRangeSink.watermark(spark, dir)
+    var reused = 0
+    // every Derived field as "field|row json" lines, in ONE job, so the
+    // folds of all fields run side by side
+    def rows(d: OmniPipeline.Derived): Map[String, Seq[String]] = {
+      import org.apache.spark.sql.functions.{col, concat, lit, struct, to_json}
+      Seq("txs" -> d.txs, "ledger" -> d.ledger, "balances" -> d.balances,
+        "offers" -> d.offers, "accepts" -> d.accepts, "trades" -> d.trades,
+        "properties" -> d.properties).map { case (field, ds: Dataset[_]) =>
+        val df = ds.toDF()
+        df.select(concat(lit(s"$field|"),
+          to_json(struct(df.columns.map(col).toSeq: _*))))
+      }.reduce(_ union _).collect().map(_.getString(0)).toSeq
+        .groupBy(_.takeWhile(_ != '|')).view.mapValues(_.sorted).toMap
+    }
+    def deriveAndCheck(step: String, s: SparkSession = spark): Unit = {
+      val d = IncrementalIngest.derive(s, dir)
+      reused += IncrementalIngest.lastReuse._1
+      val cold = OmniPipeline.derive(IncrementalIngest.readFacts(s, dir),
+        BlockRangeSink.watermark(s, dir))
+      val (got, want) = (rows(d), rows(cold))
+      (got.keySet ++ want.keySet).foreach { field =>
+        val (g, w) = (got.getOrElse(field, Nil), want.getOrElse(field, Nil))
+        if (g != w) fail(s"$step: $field differs; incremental only: " +
+          g.diff(w).take(2).mkString("; ") + "; cold only: " +
+          w.diff(g).take(2).mkString("; "))
+      }
+      graft.queries.Q.releaseScoped()
+    }
+    def ingest(): Unit = {
+      val upTo = math.min(top, tip() + 200 + rnd.nextInt(1800))
+      IncrementalIngest.ingest(spark, served(upTo), dir)
+      deriveAndCheck(s"ingest to $upTo")
+    }
+    // roll back to a fork `depth` ranges below the tail range (0: inside
+    // it), then commit a winning branch with other payloads. Without a
+    // derive in between, the pinned ranges the branch rewrites keep their
+    // range numbers, and only their file identities tell them apart.
+    def reorg(depth: Int, deriveBetween: Boolean): Unit = {
+      val wm = tip()
+      val lo = (wm / BlockRangeSink.RangeSize - depth) * BlockRangeSink.RangeSize
+      val fork = lo + rnd.nextInt(
+        math.max(1L, math.min(BlockRangeSink.RangeSize, wm - lo)).toInt)
+      IncrementalIngest.reorg(spark, dir, fork)
+      if (deriveBetween) deriveAndCheck(s"reorg depth $depth to $fork")
+      branch += 1
+      chain = chain.filter(_.block <= fork) ++ base.filter(_.block > fork)
+        .map(t => t.copy(txid = s"${t.txid}b$branch", amount = t.amount + branch))
+      IncrementalIngest.ingest(spark, served(wm), dir)
+      deriveAndCheck(s"winning branch $branch to $wm")
+    }
+    val special: Seq[() => Unit] = Seq(
+      () => reorg(0, deriveBetween = true),
+      () => reorg(1, deriveBetween = false),
+      () => reorg(2, deriveBetween = false),
+      () => {
+        assert(BlockRangeSink.compact(spark, dir, Long.MaxValue).nonEmpty)
+        deriveAndCheck("compact")
+      },
+      () => { spark.catalog.clearCache(); deriveAndCheck("clearCache") },
+      () => { graft.CacheScope.release(); deriveAndCheck("release") },
+      () => deriveAndCheck("second session", spark.newSession()))
+    try {
+      // history with several files per range, so compaction has work
+      BlockRangeSink.write(served(top / 3).toDF().repartition(3), dir)
+      deriveAndCheck("history")
+      ingest()
+      rnd.shuffle(special ++ Seq.fill(2)(() => ingest())).foreach { op =>
+        if (tip() / BlockRangeSink.RangeSize < 3) ingest()
+        op()
+      }
+      assert(reused > 0, "no derive reused a pinned range")
+    } finally {
+      IncrementalIngest.release()
+      graft.queries.Q.releaseScoped()
+    }
+  }
+
   // Soak mode for idle-box bug hunts (mirrors SinkLifecycleRandomSpec):
   // GRAFT_CHAIN_SOAK=N runs N extra seeds through BOTH whole-chain
   // invariants — value conservation and truncate-equals-fresh-prefix —

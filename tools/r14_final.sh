@@ -1,7 +1,6 @@
 #!/bin/bash
-# Round-14 end-of-round sequence (quiet box required) — same shape as
-# r13_final.sh with the r13 ADVICE fix: the canonical bench still RUNS
-# first (time-bounded box), but the BENCH_DETAIL.json ->
+# Round-14 end-of-round sequence (quiet box required). The canonical
+# bench still RUNS first (time-bounded box), but the BENCH_DETAIL.json ->
 # BENCH_LOCAL_r14.json PROMOTION is deferred to the end and gated on
 # the correctness gates passing, so a gate failure can no longer leave
 # a canonical record for a build the round never validated.
