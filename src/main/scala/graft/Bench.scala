@@ -72,8 +72,6 @@ object Bench {
     // SPARK_GRAFT_ACTION selects the timed action for MEASUREMENT
     // EXPERIMENTS ONLY; the default — and every reported BENCH_r{N} —
     // is fullEval.
-    //  - count: the legacy pre-r8 action (bench-action audit, A/B
-    //    against old builds whose Bench hardcoded count()).
     //  - ordered: consume `df.queryExecution.toRdd` directly. With no
     //    operator placed on top of the query's own plan, EliminateSorts
     //    has nothing to fire from, so the final presentation ORDER BY —
@@ -85,9 +83,8 @@ object Bench {
     // Fail fast on a typo ('order', 'Ordered'): an unrecognized value
     // silently falling back to fullEval would report the wrong action's
     // timings with no error (r9 ADVICE).
-    require(Set("fulleval", "count", "ordered")(action),
-      s"SPARK_GRAFT_ACTION must be fulleval|count|ordered, got '$action'")
-    val legacyCount = action == "count"
+    require(Set("fulleval", "ordered")(action),
+      s"SPARK_GRAFT_ACTION must be fulleval|ordered, got '$action'")
     val orderedAction = action == "ordered"
     // (seconds, succeeded) — a failed run must never improve the
     // reported minimum or hide behind a fast exception.
@@ -97,8 +94,7 @@ object Bench {
       val ok =
         try {
           val df = fn(spark, sfDir)
-          if (legacyCount) { df.count(); () }
-          else if (orderedAction) orderedEval(df)
+          if (orderedAction) orderedEval(df)
           else fullEval(df)
           true
         }

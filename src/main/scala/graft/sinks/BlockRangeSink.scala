@@ -34,14 +34,17 @@ import org.apache.spark.sql.functions._
   *
   * Crash consistency — every mutation is recoverable from ANY crash
   * prefix: [[write]] by re-running the batch (dynamic overwrite
-  * rewrites every touched partition from source), [[compact]] and
-  * [[dropAbove]] through the journaled pending-swap protocol of
-  * [[rewritePartition]] (the new generation is durable parquet under
-  * the table's own `_graft_pending/` before anything is destroyed, and
-  * a `_graft_journal/` record makes the swap replayable). Recovery
-  * runs automatically under the writer lock at the start of every
-  * mutation ([[recoverTable]] exposes it standalone); CrashRecoverySpec
-  * model-checks every mutation prefix over object-store semantics.
+  * rewrites every touched partition from source), [[appendRanges]],
+  * [[compact]] and [[dropAbove]]'s rewrite through the journaled
+  * pending-swap protocol of [[publishAndReplay]] (the new files are
+  * durable parquet under the table's own `_graft_pending/` before
+  * anything is destroyed, and a `_graft_journal/` record naming every
+  * file dropped and moved makes the swap replayable), and
+  * [[dropAbove]]'s file and directory deletes by re-running it.
+  * Recovery runs automatically under the writer lock at the start of
+  * every mutation ([[recoverTable]] exposes it standalone);
+  * CrashRecoverySpec model-checks every mutation prefix over
+  * object-store semantics.
   *
   * Mutation concurrency — SINGLE WRITER (reference M10,
   * omniEngine.py:11-36: one lockfile around the whole engine):
@@ -277,22 +280,28 @@ object BlockRangeSink {
       tailMaxProbe(spark, path, tail.blockRange, blockCol).head().getLong(0))
 
   /** Max of `blockCol` over range `tail` from parquet row-group
-    * statistics alone: one footer read per file the listing recorded,
-    * through the `FileSystem` resolved from the path — no listing, no
-    * Spark job. `None` (the caller scans instead) whenever the footers
-    * cannot give the exact answer: no data file or no row group, a
-    * top-level `blockCol` that is missing or not a signed INT32/INT64,
-    * or any row group whose statistics are absent, carry no null count,
-    * or count a null (a null block is out-of-model data; the scan's SQL
-    * `max` is the reference semantics for it).
+    * statistics alone ([[footerSpans]]): one footer read per file the
+    * listing recorded, no listing, no Spark job. `None` (the caller
+    * scans instead) whenever the footers cannot give the exact answer.
     */
   private[graft] def footerMax(path: String, tail: RangeStats,
-      blockCol: String): Option[Long] = {
+      blockCol: String): Option[Long] =
+    footerSpans(path, tail, blockCol).map(_.map(_._3).max)
+
+  /** Each listed file of `range` with the (min, max) of `blockCol` in
+    * it, from parquet row-group statistics: one footer read per file
+    * through the `FileSystem` resolved from the path — no listing, no
+    * Spark job. `None` whenever the footers cannot give the exact
+    * answer: no data file, a file with no row group, a top-level
+    * `blockCol` that is missing or not a signed INT32/INT64, or any row
+    * group whose statistics are absent, carry no null count, or count a
+    * null (a null block is out-of-model data; a scan's SQL comparison
+    * is the reference semantics for it). Stops reading footers at the
+    * first file that cannot answer.
+    */
+  private[graft] def footerSpans(path: String, range: RangeStats,
+      blockCol: String): Option[Seq[(FileId, Long, Long)]] = {
     val conf = hadoopConf
-    val files = tail.files.map { f =>
-      new FileStatus(f.length, false, 1, 0L, f.modTime,
-        new Path(filePath(path, tail.blockRange, f)))
-    }
     val target = ColumnPath.get(blockCol)
     def signedInt(p: PrimitiveType): Boolean =
       (p.getPrimitiveTypeName == PrimitiveTypeName.INT32 ||
@@ -302,9 +311,9 @@ object BlockRangeSink {
           case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation => i.isSigned
           case _ => false
         })
-    def fileMax(st: FileStatus): Option[Long] = {
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-      val footer = try reader.getFooter finally reader.close()
+    def fileSpan(f: FileId): Option[(Long, Long)] = {
+      val footer = readFooter(conf, new FileStatus(f.length, false, 1, 0L,
+        f.modTime, new Path(filePath(path, range.blockRange, f))))
       val typed = footer.getFileMetaData.getSchema.getFields.asScala
         .find(_.getName == blockCol).exists { f =>
           f.isPrimitive && !f.isRepetition(Type.Repetition.REPEATED) &&
@@ -313,21 +322,29 @@ object BlockRangeSink {
       val groups = footer.getBlocks.asScala
       if (!typed || groups.isEmpty) None
       else {
-        val maxes = groups.map { g =>
+        val spans = groups.map { g =>
           g.getColumns.asScala.find(_.getPath == target)
             .map(_.getStatistics)
             .filter(s => s != null && s.hasNonNullValue &&
               s.isNumNullsSet && s.getNumNulls == 0)
-            .map(_.genericGetMax.asInstanceOf[Number].longValue)
+            .map(s => (s.genericGetMin.asInstanceOf[Number].longValue,
+              s.genericGetMax.asInstanceOf[Number].longValue))
         }
-        if (maxes.forall(_.isDefined)) Some(maxes.flatten.max) else None
+        if (spans.forall(_.isDefined))
+          Some((spans.flatten.map(_._1).min, spans.flatten.map(_._2).max))
+        else None
       }
     }
-    // flatMap stops reading footers at the first file that cannot answer
-    if (files.isEmpty) None
-    else files.foldLeft(Option(Long.MinValue)) { (acc, f) =>
-      acc.flatMap(a => fileMax(f).map(math.max(a, _)))
+    if (range.files.isEmpty) None
+    else range.files.foldLeft(Option(Vector.empty[(FileId, Long, Long)])) {
+      (acc, f) => acc.flatMap(v => fileSpan(f).map { case (lo, hi) =>
+        v :+ ((f, lo, hi)) })
     }
+  }
+
+  private def readFooter(conf: Configuration, st: FileStatus) = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+    try reader.getFooter finally reader.close()
   }
 
   /** The scan fallback of [[tailMax]] — factored out so the plan spec
@@ -453,23 +470,38 @@ object BlockRangeSink {
     }
   }
 
-  /** Small-file compaction: every incremental batch appends files to
-    * its tail partitions, and a year of per-block commits leaves
-    * thousands of KB-sized files per partition — death by open() at
-    * 100 TB. Rewrite each partition whose file count exceeds what its
-    * byte size justifies down to ceil(bytes/targetBytes) files, via
-    * the crash-recoverable [[rewritePartition]] protocol (the new
-    * generation is durable parquet under the table's own
-    * `_graft_pending/` BEFORE anything is destroyed, and a journaled
-    * swap makes any crash prefix recoverable — see [[recoverTable]]).
-    * Returns the compacted ranges.
+  /** Past this many files in one range, [[appendRanges]] rewrites the
+    * range instead of appending to it (the cap `IncrementalIngest.derive`
+    * puts on its pinned segments is the same number). */
+  private val MaxFiles = 8
+
+  /** [[compact]]'s default file size. */
+  private val TargetBytes = 128L << 20
+
+  /** The file count [[compact]] gives a range of `bytes`: every rewrite
+    * of this sink (compaction, the append cap, the rollback's straddling
+    * files) sizes its output with it. */
+  private def targetFiles(bytes: Long, targetBytes: Long = TargetBytes): Int =
+    math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+
+  /** Small-file compaction: a long-lived table collects small files, and
+    * thousands of KB-sized files per partition are death by open() at
+    * 100 TB. [[appendRanges]] already bounds the tail it appends to (a
+    * range past [[MaxFiles]] files is rewritten to this method's count in
+    * the same commit), so this is the tool for every other range — a
+    * fragmented [[write]], or a table written by an older build. Rewrite
+    * each partition whose file count exceeds what its byte size
+    * justifies down to ceil(bytes/targetBytes) files, through one journal
+    * ([[publishAndReplay]]: the new generation is durable parquet under
+    * the table's own `_graft_pending/` BEFORE anything is destroyed, and
+    * the journal names every listed file it drops, so any crash prefix
+    * is recoverable — see [[recoverTable]]). Returns the compacted
+    * ranges.
     */
   def compact(spark: SparkSession, path: String,
-      targetBytes: Long = 128L << 20): Seq[Long] = withWriterLock(path) {
+      targetBytes: Long = TargetBytes): Seq[Long] = withWriterLock(path) {
     recoverLocked(path)
-    val todo = stats(path).filter { s =>
-      s.nFiles > math.max(1, math.ceil(s.bytes.toDouble / targetBytes).toInt)
-    }
+    val todo = stats(path).filter(s => s.nFiles > targetFiles(s.bytes, targetBytes))
     if (todo.nonEmpty) {
       // ONE staging job + ONE journaled swap for every partition being
       // compacted (the old form ran one read-coalesce-write Spark job
@@ -485,10 +517,7 @@ object BlockRangeSink {
       val (fs, root) = fsFor(path)
       val opId = java.util.UUID.randomUUID().toString
       val stageDir = new Path(root, s"$PendingDirName/$opId")
-      val nOf = todo.map { st =>
-        st.blockRange ->
-          math.max(1, math.ceil(st.bytes.toDouble / targetBytes).toInt)
-      }.toMap
+      val nOf = todo.map(st => st.blockRange -> targetFiles(st.bytes, targetBytes)).toMap
       val totalSlots = nOf.values.sum
       val nMapCol = map(nOf.toSeq.flatMap { case (r, n) =>
         Seq(lit(r), lit(n.toLong)) }: _*)
@@ -501,21 +530,20 @@ object BlockRangeSink {
         .repartition(totalSlots, col("blockRange"), col("__slot"))
         .drop("__slot")
         .write.partitionBy("blockRange").parquet(stageDir.toString)
-      val staged = fs.listStatus(stageDir)
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith("blockRange="))
-        .map(_.getPath.getName.stripPrefix("blockRange=").toLong)
-        .sorted.toSeq
+      val staged = stagedRanges(fs, stageDir)
       // converge or fail loudly: a flagged range that staged nothing
       // (e.g. its files hold zero rows) would keep its old files, and
       // stats would re-flag it on every later cycle
       val flagged = todo.map(_.blockRange)
-      if (staged != flagged)
+      if (staged.map(_._1) != flagged)
         throw new IllegalStateException(
-          s"compact: flagged ranges ${flagged.diff(staged).mkString(",")} " +
+          s"compact: flagged ranges ${flagged.diff(staged.map(_._1)).mkString(",")} " +
             "staged no rows — refusing a partial compaction (the live " +
             "partitions are untouched; the next recovery sweeps the stage)")
-      commitStagedRanges(fs, root, opId, staged)
+      publishAndReplay(fs, root, opId, todo.zip(staged).map {
+        case (st, (r, files)) => Section(r, Some(st.files.map(_.name)),
+          moves(opId, s"blockRange=$r", r, files))
+      })
     }
     todo.map(_.blockRange)
   }
@@ -533,36 +561,63 @@ object BlockRangeSink {
     * tip and [[graft.streaming.IncrementalIngest]] silently REJECTS the
     * winning branch (it admits only blocks > watermark).
     *
-    * Tail-bounded by construction: one listing of the store ([[stats]])
-    * finds the ranges, and the only data read is the fork range's OWN
-    * directory ([[rangeRows]] — never a table-wide file index). One
-    * aggregate over it ([[forkSplit]]: rows above the fork, rows at or
-    * below it) picks the action: nothing above → no-op, nothing kept →
-    * directory delete, both → [[rewritePartition]] of the kept rows.
-    * Every range strictly above the fork's is removed as an
-    * `fs.delete(partitionDir)` (no data read). At 100 TB a reorg costs
-    * one listing, one tail-partition read + rewrite, and metadata
-    * deletes — never a table pass. Idempotent: a crashed/re-run rollback
-    * finds the tail already gone and the fork range already split (a
-    * no-op), or completes the journaled rewrite on recovery.
+    * File-granular and tail-bounded: one listing of the store ([[stats]])
+    * finds the ranges; every range above the fork's is removed as an
+    * `fs.delete(partitionDir)`, highest first, with no data read. In the
+    * fork range each listed file's block (min, max) comes from its parquet
+    * footer ([[footerSpans]], the checks [[footerMax]] applies): a file
+    * wholly above the fork is deleted, one wholly at or below it is kept,
+    * and only the files straddling the fork are read — their kept rows
+    * go to [[targetFiles]] files through one journal that names those
+    * files as its drops. Deletes run from the highest block down, so a
+    * crash prefix only ever lowers the tip. A rollback of rows an
+    * [[appendRanges]] commit added (files wholly above the fork) runs no
+    * Spark job at all.
+    *
+    * When the footers cannot answer (see [[footerSpans]]), one
+    * aggregate over the fork range's own directory ([[forkSplit]]: rows
+    * above the fork, rows at or below it) picks the action: nothing above
+    * → no-op, nothing kept → directory delete, both → a rewrite of the
+    * whole range's kept rows, dropping every listed file.
+    *
+    * At 100 TB a reorg costs one listing, the fork range's footers, at
+    * most the straddling files' read + rewrite, and metadata deletes —
+    * never a table pass. Idempotent: a crashed/re-run rollback finds the
+    * higher ranges and files already gone and the straddlers already
+    * split (a no-op), or completes the journaled rewrite on recovery.
     */
   def dropAbove(spark: SparkSession, path: String, fork: Long,
       blockCol: String = "block"): Unit = withWriterLock(path) {
     recoverLocked(path)
     val forkRange = fork / RangeSize
     val all = stats(path)
-    all.find(_.blockRange == forkRange).foreach { forkStats =>
-      val part = rangeRows(spark, path, forkRange)
-      val split = forkSplit(part, fork, blockCol).head()
-      val (above, kept) = (split.getLong(0), split.getLong(1))
-      if (above > 0) {
-        if (kept == 0) deletePartitionDir(path, forkRange)
-        else rewritePartition(path, forkRange,
-          part.where(col(blockCol) <= fork), math.max(1, forkStats.nFiles))
+    all.filter(_.blockRange > forkRange).reverse
+      .foreach(st => deleteOrFail(path, s"blockRange=${st.blockRange}"))
+    all.find(_.blockRange == forkRange).foreach { st =>
+      footerSpans(path, st, blockCol) match {
+        case Some(spans) =>
+          val above = spans.filter(_._2 > fork)
+          val straddling = spans.filter(s => s._2 <= fork && s._3 > fork).map(_._1)
+          if (above.size == spans.size) deleteOrFail(path, s"blockRange=$forkRange")
+          else {
+            above.sortBy(-_._3).foreach(s =>
+              deleteOrFail(path, s"blockRange=$forkRange/${s._1.name}"))
+            if (straddling.nonEmpty)
+              rewriteRange(path, forkRange, spark.read
+                .parquet(straddling.map(filePath(path, forkRange, _)): _*)
+                .where(col(blockCol) <= fork), straddling)
+          }
+        case None =>
+          val part = rangeRows(spark, path, forkRange)
+          val split = forkSplit(part, fork, blockCol).head()
+          val (above, kept) = (split.getLong(0), split.getLong(1))
+          if (above > 0) {
+            if (kept == 0) deleteOrFail(path, s"blockRange=$forkRange")
+            else rewriteRange(path, forkRange,
+              part.where(col(blockCol) <= fork), st.files)
+          }
       }
     }
-    all.filter(_.blockRange > forkRange)
-      .foreach(st => deletePartitionDir(path, st.blockRange))
   }
 
   /** (rows above `fork`, rows at or below it) of the fork range — one
@@ -572,210 +627,236 @@ object BlockRangeSink {
       blockCol: String): DataFrame =
     part.agg(count_if(col(blockCol) > fork), count_if(col(blockCol) <= fork))
 
-  private def deletePartitionDir(path: String, range: Long): Unit = {
-    // A swallowed failed delete here is the silent-rejection failure
-    // mode dropAbove exists to prevent: the orphaned tip would keep
-    // feeding watermark() and the ingest gate would reject the winning
-    // branch forever. Fail loudly instead.
+  /** Deletes the file or range directory `rel` of the table. A swallowed
+    * failed delete here is the silent-rejection failure mode dropAbove
+    * exists to prevent: the orphaned tip would keep feeding watermark()
+    * and the ingest gate would reject the winning branch forever. Fail
+    * loudly instead.
+    */
+  private def deleteOrFail(path: String, rel: String): Unit = {
     val (fs, root) = fsFor(path)
-    val d = new Path(root, s"blockRange=$range")
-    if (fs.exists(d) && !fs.delete(d, /* recursive = */ true)) {
+    val p = new Path(root, rel)
+    if (fs.exists(p) && !fs.delete(p, /* recursive = */ true)) {
       throw new java.io.IOException(
-        s"dropAbove: could not delete $d — aborting rollback so the " +
-          "orphaned range is not silently retained above the fork")
+        s"dropAbove: could not delete $p — aborting rollback so the " +
+          "orphaned rows are not silently retained above the fork")
     }
   }
 
-  // ---- crash-recoverable partition rewrite (pending + journal + swap) ----
+  // ---- crash-recoverable commits (pending + journal + swap) ----
 
-  /** Staged new-generation files for in-flight rewrites (leading `_`:
-    * invisible to Spark readers and to [[stats]]).
+  /** Staged new files of in-flight commits (leading `_`: invisible to
+    * Spark readers and to [[stats]]).
     */
   val PendingDirName = "_graft_pending"
 
-  /** One journal object per in-flight rewrite — the swap's intent
+  /** One journal object per in-flight commit — the swap's intent
     * record; its presence means "redo the swap", its deletion is the
     * commit point.
     */
   val JournalDirName = "_graft_journal"
 
-  /** Rewrite partition `range` to hold exactly `rows` (which may read
-    * FROM that partition) in `nFiles` files, surviving a crash at ANY
-    * point of the sequence — the property the previous
-    * snapshot + dynamic-overwrite form lacked: its job commit deletes
-    * the live partition before renaming the staged one in, and the
-    * snapshot that could restore it was freed on the failure path, so
-    * a crash in that window lost the partition with nothing on disk to
-    * recover from. Protocol:
+  /** The ingest cycle's commit
+    * ([[graft.streaming.IncrementalIngest.ingestFrame]]): add `rows` to
+    * the table as new files and return how many rows that was.
+    * `listing` is the caller's [[stats]] of the table, and every row of
+    * `rows` must lie above every block the table holds (the caller's
+    * watermark filter). No existing row changes, so no existing file is
+    * read, rewritten or deleted — except in a range the append would
+    * take past [[MaxFiles]] files.
     *
-    *  1. **Stage** — write `rows` as plain parquet under
-    *     `_graft_pending/<opId>/`: pure addition, the live partition
-    *     untouched; the new generation is durable on the TABLE'S OWN
-    *     store before anything is destroyed (executor-loss-safe by
-    *     construction — no checkpoint policy involved).
-    *  2. **Journal** — ONE object `_graft_journal/<opId>` (written via
-    *     temp + rename, so it is never visible truncated) recording
-    *     the range and every staged→target file-name pair.
-    *  3. **Swap** — delete the partition's data files not in the
-    *     target set, then rename each staged file to its recorded
-    *     target name. Every step is idempotent (delete-if-present,
-    *     skip-if-target-exists), so the swap can be REDONE from any
-    *     prefix.
-    *  4. **Clean** — delete the journal (commit point), then the
-    *     pending dir.
+    *  1. **Stage** — `rows` are written once, partitioned by range,
+    *     under `_graft_pending/<opId>/`. This is the only Spark job on
+    *     `rows`: the admitted count is the sum of the staged footers'
+    *     row counts and the touched ranges are the staged listing.
+    *  2. **Cap** — a range whose listed files plus its staged files
+    *     would exceed [[MaxFiles]] is rewritten instead: its listed and
+    *     staged rows go to [[targetFiles]] files, and its section drops
+    *     the listed files. Sealed ranges are never appended to, so only
+    *     the tail range (or a range the batch opens with more staged
+    *     files than the cap) can reach it.
+    *  3. **Journal** — ONE journal for every range of the batch
+    *     ([[publishAndReplay]]); an append section drops nothing and
+    *     moves the staged files in under fresh names.
     *
-    * A crash before 2 destroys nothing (orphan pending dirs are swept
-    * by [[recoverTable]]); a crash after 2 is completed by
-    * [[recoverTable]]'s replay, which every mutation runs first under
-    * the writer lock — and the replay itself can crash and re-run.
-    * Readers planning a scan inside the swap window can see a partial
-    * partition (same anomaly class as the previous dynamic-overwrite
-    * commit); the single-writer lock serializes mutators, not readers.
+    * The publish is the commit point for all ranges at once, and
+    * recovery replays every outstanding journal before any watermark is
+    * read. So at every crash point either no range of the batch is
+    * visible (journal unpublished; the table is as it was) or all of
+    * them are (replay completes the moves), and the re-run's admit
+    * filter re-admits exactly the uncommitted remainder: convergent
+    * from any prefix.
+    *
+    * Why not [[write]]'s dynamic overwrite: its crash contract is
+    * "re-run the SAME batch", but an ingest re-run is NOT the same batch
+    * — the admit filter moves with the watermark. A crashed overwrite
+    * commit can delete an old tail partition before its replacement
+    * lands, LOWERING the watermark; the re-run then re-admits from a feed
+    * that no longer carries the deleted historical rows, and they are
+    * gone (CrashRecoverySpec's ingest-cycle sweep caught exactly this at
+    * one prefix — round 13).
     */
-  private def rewritePartition(path: String, range: Long,
-      rows: DataFrame, nFiles: Int): Unit = {
-    val (fs, root) = fsFor(path)
-    val opId = java.util.UUID.randomUUID().toString
-    // 1. stage (blockRange rides in the dir name, never in the files —
-    // same layout write()'s partitionBy produces)
-    rows.drop("blockRange").coalesce(nFiles).write
-      .parquet(new Path(root, s"$PendingDirName/$opId").toString)
-    // 2-4. journal, swap, clean
-    commitStaged(fs, root, range, opId, opId)
-  }
-
-  /** The composite ingest-cycle write: rewrite every block range
-    * `batch` touches to hold exactly `batch`'s rows for that range,
-    * through ONE journaled swap for the whole batch — the form whose
-    * crash recovery COMPOSES with watermark-gated admission
-    * ([[graft.streaming.IncrementalIngest.ingestFrame]]).
-    *
-    * Why [[write]]'s dynamic overwrite is not enough for the ingest
-    * cycle: its crash contract is "re-run the SAME batch", but an
-    * ingest re-run is NOT the same batch — the admit filter moves with
-    * the watermark. A crashed overwrite commit can delete an old tail
-    * partition before its replacement lands, LOWERING the watermark;
-    * the re-run then re-admits from a feed that no longer carries the
-    * deleted historical rows, and they are gone (CrashRecoverySpec's
-    * ingest-cycle sweep caught exactly this at one prefix — round 13).
-    *
-    * The fix is staging + one batch journal: the batch is staged ONCE
-    * (partitioned by range, pure addition), then a single `v2` journal
-    * recording every range's staged→target files is published (temp +
-    * rename) and replayed ([[commitStagedRanges]]). The publish is the
-    * commit point for ALL ranges at once, and recovery replays every
-    * outstanding journal before any watermark is read. So at every
-    * crash point either no range of the batch is visible (journal
-    * unpublished; the old generation is intact) or all of them are
-    * (replay completes the swap) — every range is committed before the
-    * watermark that covers it is observed, and the re-run's admit filter
-    * re-admits exactly the uncommitted remainder: convergent from any
-    * prefix.
-    */
-  def upsertRanges(batch: DataFrame, path: String,
-      blockCol: String = "block"): Unit = withWriterLock(path) {
-    timed("upsert.recover")(recoverLocked(path))
+  def appendRanges(rows: DataFrame, path: String, listing: Seq[RangeStats],
+      blockCol: String = "block"): Long = withWriterLock(path) {
+    recoverLocked(path)
     val (fs, root) = fsFor(path)
     val opId = java.util.UUID.randomUUID().toString
     val stageDir = new Path(root, s"$PendingDirName/$opId")
-    // Cluster the staged generation by range before the partitioned
-    // write (guide §6: file sizing / REBALANCE-before-write; §2.2:
-    // fewer map outputs). Unclustered, every task writes one file into
-    // every range it holds — T×R files per cycle whose per-file
-    // create/rename/footer costs tax the commit and whose accumulation
-    // poisons every later read of the table. The AQE REBALANCE hint
-    // (not repartitionByRange, whose range sampling re-computes the
-    // whole merge batch — measured +2.7 s/gate at bench SF; and not a
-    // plain hash repartition, which would serialize a hot range
-    // through one task at 100 TB): one exchange, partition sizes
-    // decided from the shuffle's own map statistics — small ranges
-    // coalesce, oversized ranges split across tasks.
-    timed("upsert.stageWrite")(
-      batch.withColumn("blockRange", expr(s"$blockCol div $RangeSize"))
+    // Cluster the staged rows by range before the partitioned write
+    // (guide §6: file sizing / REBALANCE-before-write). Unclustered,
+    // every task writes one file into every range it holds — T×R files
+    // per cycle. The AQE REBALANCE hint (not repartitionByRange, whose
+    // range sampling would evaluate the batch a second time; and not a
+    // plain hash repartition, which would serialize a hot range through
+    // one task at 100 TB): one exchange, partition sizes decided from
+    // the shuffle's own map statistics — small ranges coalesce into one
+    // file each, oversized ranges split across tasks.
+    timed("append.stage")(
+      rows.withColumn("blockRange", expr(s"$blockCol div $RangeSize"))
         .hint("rebalance", col("blockRange"))
         .write.partitionBy("blockRange").parquet(stageDir.toString))
-    val ranges = fs.listStatus(stageDir)
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith("blockRange="))
-      .map(_.getPath.getName.stripPrefix("blockRange=").toLong)
-      .sorted.toSeq
-    // ONE journal for the whole batch (one temp+rename publish, one
-    // replay) instead of one per range: the commit point is atomic for
-    // the batch, so recovery completes EVERY staged range before any
-    // watermark read — strictly stronger than the old ascending
-    // per-range commit (whose invariant was "every range at-or-below
-    // the watermark is fully committed") at ~1/R of the FS-metadata
-    // bill. Measured r14: the per-range loop cost ~0.8 s per ~150-range
-    // cycle on the streaming twins.
-    timed(s"upsert.commit(${ranges.length} ranges)")(
-      if (ranges.nonEmpty) commitStagedRanges(fs, root, opId, ranges)
-      else { fs.delete(stageDir, true); deleteIfEmpty(fs, stageDir.getParent) })
-  }
-
-  /** Steps 2-4 of the rewrite protocol over an already-staged
-    * generation at `_graft_pending/<pendingRel>`: publish the journal
-    * (temp + rename: visible all-or-nothing on POSIX renames AND on
-    * object stores, where the PUT itself is atomic), then swap + clean
-    * via the same [[replayJournal]] recovery replays.
-    */
-  private def commitStaged(fs: FileSystem, root: Path, range: Long,
-      journalName: String, pendingRel: String): Unit = {
-    val pendingOp = new Path(root, s"$PendingDirName/$pendingRel")
-    val staged = fs.listStatus(pendingOp)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.getName).sorted.toSeq
-    val pairs = staged.zipWithIndex.map { case (s, i) =>
-      (s, f"graft-$journalName-p$i%05d.parquet")
-    }
-    publishAndReplay(fs, root, journalName,
-      (Seq("v1", s"range=$range", s"pending=$pendingRel") ++
-        pairs.map { case (s, t) => s"file=$s\t$t" }).mkString("\n"))
-  }
-
-  /** Steps 2-4 for a MULTI-RANGE staged generation
-    * (`_graft_pending/<stageRel>/blockRange=<r>/…`, the layout a
-    * partitioned staging write produces): ONE journal records every
-    * range's staged→target file pairs, so the whole batch has one
-    * publish (temp + rename), one replay, and one commit point —
-    * against the old one-journal-per-range loop this removes ~10 FS
-    * metadata round-trips per range, and recovery completes EVERY
-    * staged range before any watermark read (the crash-convergence
-    * invariant the ascending per-range order existed to provide).
-    */
-  private def commitStagedRanges(fs: FileSystem, root: Path,
-      stageRel: String, ranges: Seq[Long]): Unit = {
-    val stageDir = new Path(root, s"$PendingDirName/$stageRel")
-    val sections = ranges.map { r =>
-      val staged = fs.listStatus(new Path(stageDir, s"blockRange=$r"))
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.getName).sorted.toSeq
-      val pairs = staged.zipWithIndex.map { case (s, i) =>
-        (s"blockRange=$r/$s", f"graft-$stageRel-r$r-p$i%05d.parquet")
+    val staged = stagedRanges(fs, stageDir)
+    val conf = hadoopConf
+    val admitted = staged.flatMap(_._2)
+      .map(st => readFooter(conf, st).getBlocks.asScala.map(_.getRowCount).sum).sum
+    if (staged.isEmpty) {
+      fs.delete(stageDir, true)
+      deleteIfEmpty(fs, stageDir.getParent)
+    } else {
+      val live = listing.map(st => st.blockRange -> st.files).toMap
+      val sections = staged.map { case (r, files) =>
+        val old = live.getOrElse(r, Nil)
+        if (old.size + files.size <= MaxFiles)
+          Section(r, Some(Nil), moves(opId, s"blockRange=$r", r, files))
+        else {
+          val spark = rows.sparkSession
+          val fresh = spark.read.parquet(files.map(_.getPath.toString): _*)
+          val merged =
+            if (old.isEmpty) fresh
+            else spark.read.parquet(old.map(filePath(path, r, _)): _*)
+              .unionByName(fresh)
+          stageRewrite(fs, stageDir, opId, r, merged,
+            targetFiles(old.map(_.length).sum + files.map(_.getLen).sum),
+            old.map(_.name))
+        }
       }
-      Seq(s"range=$r") ++ pairs.map { case (s, t) => s"file=$s\t$t" }
+      timed(s"append.commit(${sections.size} ranges)")(
+        publishAndReplay(fs, root, opId, sections))
     }
-    publishAndReplay(fs, root, stageRel,
-      (Seq("v2", s"pending=$stageRel") ++ sections.flatten).mkString("\n"))
+    admitted
   }
 
-  private def publishAndReplay(fs: FileSystem, root: Path,
-      journalName: String, content: String): Unit = {
-    val journal = new Path(root, s"$JournalDirName/$journalName")
-    val tmp = new Path(root, s"$JournalDirName/.$journalName.tmp")
+  /** Replaces the live files `drops` of range `range` with `rows` (which
+    * may read FROM them), in [[targetFiles]] of their bytes, through one
+    * journal.
+    */
+  private def rewriteRange(path: String, range: Long, rows: DataFrame,
+      drops: Seq[FileId]): Unit = {
+    val (fs, root) = fsFor(path)
+    val opId = java.util.UUID.randomUUID().toString
+    val stageDir = new Path(root, s"$PendingDirName/$opId")
+    publishAndReplay(fs, root, opId, Seq(stageRewrite(fs, stageDir, opId,
+      range, rows, targetFiles(drops.map(_.length).sum), drops.map(_.name))))
+  }
+
+  /** Stages `rows` of range `range` as at most `nFiles` files under
+    * `<stageDir>/rewrite/blockRange=<range>/` and returns the section
+    * that replaces the live files `drops` with them. `blockRange` rides
+    * in the directory name, never in the files — the layout [[write]]'s
+    * partitionBy produces.
+    */
+  private def stageRewrite(fs: FileSystem, stageDir: Path, opId: String,
+      range: Long, rows: DataFrame, nFiles: Int, drops: Seq[String]): Section = {
+    val rel = s"rewrite/blockRange=$range"
+    rows.drop("blockRange").coalesce(nFiles).write
+      .parquet(new Path(stageDir, rel).toString)
+    Section(range, Some(drops),
+      moves(opId, rel, range, dataFiles(fs, new Path(stageDir, rel))))
+  }
+
+  /** The `blockRange=<r>` directories a partitioned staging write left
+    * under `stageDir`, ascending, each with its data files. */
+  private def stagedRanges(fs: FileSystem,
+      stageDir: Path): Seq[(Long, Seq[FileStatus])] =
+    fs.listStatus(stageDir).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("blockRange="))
+      .map(d => d.getPath.getName.stripPrefix("blockRange=").toLong ->
+        dataFiles(fs, d.getPath))
+      .filter(_._2.nonEmpty)
+      .sortBy(_._1)
+
+  private def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.filter(isDataFile).sortBy(_.getPath.getName)
+
+  /** staged → target renames of `files`, staged under `<stage>/<rel>`;
+    * every target name is fresh (it carries the op id). */
+  private def moves(opId: String, rel: String, range: Long,
+      files: Seq[FileStatus]): Seq[(String, String)] =
+    files.zipWithIndex.map { case (f, i) =>
+      (s"$rel/${f.getPath.getName}", f"graft-$opId-r$range-p$i%05d.parquet")
+    }
+
+  /** One range's part of a journal: the live files it drops and the
+    * staged → target renames that move its new files in. `drops` is
+    * `None` only in a legacy `v1`/`v2` journal, whose sections replace
+    * the whole range: there every file not among the targets is dropped.
+    */
+  private final case class Section(range: Long, drops: Option[Seq[String]],
+      moves: Seq[(String, String)])
+
+  /** Publishes one `v3` journal for `sections` and replays it — steps 2-4
+    * of the commit protocol; step 1, staging every new file under
+    * `_graft_pending/<opId>/`, is the caller's:
+    *
+    *  1. **Stage** — pure addition; the live ranges are untouched and
+    *     the new files are durable on the TABLE'S OWN store before
+    *     anything is destroyed (executor-loss-safe by construction).
+    *  2. **Journal** — ONE object `_graft_journal/<opId>`, written via
+    *     temp + rename so it is never visible truncated (all-or-nothing
+    *     on POSIX renames and on object stores, where the PUT itself is
+    *     atomic). Form: `v3`, `pending=<opId>`, then per range
+    *     `range=<r>`, one `drop=<file name>` per live file the section
+    *     removes, and one `file=<staged path>\t<target name>` per move.
+    *     An append section drops nothing; a whole-range replace names
+    *     every listed file.
+    *  3. **Swap** — per section, delete the dropped files, then rename
+    *     each staged file to its target. Every step is idempotent
+    *     (delete-if-present, skip-if-target-exists), so the swap can be
+    *     REDONE from any prefix.
+    *  4. **Clean** — delete the journal (commit point), then the stage.
+    *
+    * A crash before 2 destroys nothing (orphan stages are swept by
+    * [[recoverTable]]); a crash after 2 is completed by
+    * [[recoverTable]]'s replay, which every mutation runs first under
+    * the writer lock — and the replay itself can crash and re-run.
+    * Readers planning a scan inside the swap window can see a partial
+    * range; the single-writer lock serializes mutators, not readers.
+    */
+  private def publishAndReplay(fs: FileSystem, root: Path, opId: String,
+      sections: Seq[Section]): Unit = {
+    val content = (Seq("v3", s"pending=$opId") ++ sections.flatMap { s =>
+      s"range=${s.range}" +: (s.drops.getOrElse(Nil).map(d => s"drop=$d") ++
+        s.moves.map { case (f, t) => s"file=$f\t$t" })
+    }).mkString("\n")
+    val journal = new Path(root, s"$JournalDirName/$opId")
+    val tmp = new Path(root, s"$JournalDirName/.$opId.tmp")
     val out = fs.create(tmp, false)
     try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     if (!fs.rename(tmp, journal))
       throw new java.io.IOException(
-        s"commitStaged: could not publish journal $journal")
+        s"publishAndReplay: could not publish journal $journal")
     replayJournal(fs, root, journal)
   }
 
   /** Redo the swap recorded in `journal` from whatever prefix of it
     * already happened, then clean up. Idempotent; safe to re-run after
-    * its own crash. Two formats: `v1` (one range; staged names relative
-    * to the recorded pending dir) and `v2` (many ranges; staged names
-    * relative to the shared staging root, `blockRange=<r>/` included).
+    * its own crash. Every new journal is `v3` ([[publishAndReplay]]).
+    * The legacy forms still replay, so a table left mid-commit by an
+    * older build recovers: `v1` (one range; staged names relative to the
+    * recorded pending dir) and `v2` (many ranges; staged names relative
+    * to the shared stage, `blockRange=<r>/` included), whose sections
+    * carry no `drop=` records and replace their whole range.
     */
   private def replayJournal(fs: FileSystem, root: Path,
       journal: Path): Unit = {
@@ -791,32 +872,38 @@ object BlockRangeSink {
     }
     val lines = content.split("\n").toSeq
     val version = lines.headOption.getOrElse("<empty>")
-    require(version == "v1" || version == "v2",
+    require(Set("v1", "v2", "v3")(version),
       s"replayJournal: unknown journal version in $journal: $version")
     val pendingRel = lines.collectFirst {
       case l if l.startsWith("pending=") => l.stripPrefix("pending=")
     }.getOrElse(journal.getName)
     val pendingOp = new Path(root, s"$PendingDirName/$pendingRel")
-    // group file= lines under their range= section (v1 has exactly one)
-    var range = -1L
-    val sections =
-      scala.collection.mutable.LinkedHashMap.empty[Long, Seq[(String, String)]]
+    // group drop= and file= records under their range= section
+    val sections = scala.collection.mutable.ArrayBuffer.empty[Section]
+    def current(l: String): Section = {
+      require(sections.nonEmpty,
+        s"replayJournal: record before any range record in $journal: $l")
+      sections.last
+    }
     lines.foreach {
       case l if l.startsWith("range=") =>
-        range = l.stripPrefix("range=").toLong
-        sections.getOrElseUpdate(range, Seq.empty)
+        sections += Section(l.stripPrefix("range=").toLong,
+          if (version == "v3") Some(Nil) else None, Nil)
+      case l if l.startsWith("drop=") =>
+        require(version == "v3", s"replayJournal: drop record in a " +
+          s"$version journal $journal")
+        val s = current(l)
+        sections.update(sections.size - 1,
+          s.copy(drops = s.drops.map(_ :+ l.stripPrefix("drop="))))
       case l if l.startsWith("file=") =>
-        require(range >= 0, s"replayJournal: file record before any " +
-          s"range record in $journal")
-        val Array(s, t) = l.stripPrefix("file=").split("\t", 2)
-        sections.update(range, sections(range) :+ (s, t))
+        val s = current(l)
+        val Array(f, t) = l.stripPrefix("file=").split("\t", 2)
+        sections.update(sections.size - 1, s.copy(moves = s.moves :+ (f, t)))
       case _ => ()
     }
     if (sections.isEmpty) throw new java.io.IOException(
       s"replayJournal: no range record in $journal")
-    sections.foreach { case (r, pairs) =>
-      swapRange(fs, root, pendingOp, journal, r, pairs)
-    }
+    sections.foreach(swapRange(fs, root, pendingOp, journal, _))
     // 4. commit point, then scratch cleanup (including the protocol
     // dirs themselves once empty — mkdirs markers/parents outlive
     // their children on object stores and POSIX alike)
@@ -826,30 +913,36 @@ object BlockRangeSink {
     deleteIfEmpty(fs, pendingOp.getParent)
   }
 
-  /** One range's swap: drop the old generation, move the staged files
-    * in. Every step idempotent (delete-if-present, skip-if-target-
-    * exists), so any prefix can be redone.
+  /** One section's swap: drop the old files, move the staged files in.
+    * Every step idempotent (delete-if-present, skip-if-target-exists),
+    * so any prefix can be redone.
     */
   private def swapRange(fs: FileSystem, root: Path, pendingOp: Path,
-      journal: Path, range: Long, pairs: Seq[(String, String)]): Unit = {
-    val partDir = new Path(root, s"blockRange=$range")
-    val targets = pairs.map(_._2).toSet
-    // 3a. drop the old generation (skip what an earlier attempt already
-    // dropped; never touch the new generation's target names)
-    if (fs.exists(partDir))
-      fs.listStatus(partDir)
-        .filter(s => s.isFile && !targets.contains(s.getPath.getName))
-        .foreach(s => fs.delete(s.getPath, false))
-    else fs.mkdirs(partDir)
-    // 3b. move the new generation in (skip files already in place)
-    pairs.foreach { case (stagedName, targetName) =>
+      journal: Path, s: Section): Unit = {
+    val partDir = new Path(root, s"blockRange=${s.range}")
+    // 3a. drop the old files (skip what an earlier attempt already
+    // dropped; never touch the new files' target names)
+    s.drops match {
+      case Some(names) =>
+        names.foreach(n => fs.delete(new Path(partDir, n), false))
+        if (s.moves.nonEmpty && !fs.exists(partDir)) fs.mkdirs(partDir)
+      case None =>
+        val targets = s.moves.map(_._2).toSet
+        if (fs.exists(partDir))
+          fs.listStatus(partDir)
+            .filter(f => f.isFile && !targets.contains(f.getPath.getName))
+            .foreach(f => fs.delete(f.getPath, false))
+        else fs.mkdirs(partDir)
+    }
+    // 3b. move the new files in (skip files already in place)
+    s.moves.foreach { case (stagedName, targetName) =>
       val target = new Path(partDir, targetName)
       if (!fs.exists(target)) {
         val stagedFile = new Path(pendingOp, stagedName)
         if (!fs.exists(stagedFile))
           throw new java.io.IOException(
             s"replayJournal: $journal names $stagedFile but neither it " +
-              s"nor $target exists — the staged generation is gone; " +
+              s"nor $target exists — the staged files are gone; " +
               "refusing to commit a partial partition")
         if (!fs.rename(stagedFile, target))
           throw new java.io.IOException(

@@ -10,18 +10,19 @@ import graft.sinks.BlockRangeSink
 
 /** The incremental ingest lifecycle (reference omniEngine.py main loop,
   * SURVEY §3.1): resume from the sink's watermark, admit only new
-  * blocks, commit atomically per block range, re-derive state.
+  * blocks, commit them as one atomic append, re-derive state.
   *
-  * Tail-partition rewrite: the sink's unit of atomicity is a block
-  * RANGE partition, so an incremental batch rewrites each affected
-  * range as (existing facts in range ≤ watermark) ∪ (new facts), via
-  * the sink's single-journal batch commit
-  * ([[BlockRangeSink.upsertRanges]]: one `v2` journal for every range
-  * of the batch, replayed by recovery before any watermark read) — a
-  * crashed cycle re-runs convergently from ANY prefix (every range is
-  * committed before a watermark covering it can be observed), and
-  * untouched ranges are never rewritten (at 100 TB the tail is a
-  * vanishing fraction).
+  * Append-only tail commit: admission keeps only blocks above the
+  * watermark, so every existing row of the store stays as it is and a
+  * cycle adds files instead of rewriting ranges — the storage analogue
+  * of the reference's per-block inserts (omniEngine.py:210 `dbCommit`).
+  * The sink's single-journal append ([[BlockRangeSink.appendRanges]]:
+  * one journal for every range of the batch, replayed by recovery
+  * before any watermark read) makes a crashed cycle re-run convergently
+  * from ANY prefix (every range is committed before a watermark
+  * covering it can be observed). An existing file is never read or
+  * rewritten, except when an append would take the tail range past the
+  * sink's file cap; sealed ranges are never touched.
   */
 object IncrementalIngest {
 
@@ -40,8 +41,8 @@ object IncrementalIngest {
       .as[RawTx]
   }
 
-  /** One incremental cycle: admit blocks > watermark, rewrite affected
-    * tail ranges. Returns the number of newly ingested txs.
+  /** One incremental cycle: admit blocks > watermark, append them to
+    * the store. Returns the number of newly ingested txs.
     */
   def ingest(spark: SparkSession, raw: Dataset[RawTx],
       factsDir: String): Long =
@@ -50,60 +51,40 @@ object IncrementalIngest {
   /** [[ingest]] for an arbitrary fact schema (any frame with a `block`
     * column) — the sink itself is schema-agnostic, so composed
     * pipelines whose facts are not RawTx-shaped (e.g. the BTC chain
-    * feed) share the same admit + tail-rewrite cycle.
+    * feed) share the same admit + append cycle.
+    *
+    * Metadata first, then ONE pass over `raw`: recovery, one
+    * [[BlockRangeSink.stats]] listing and the tail range's footer watermark
+    * ([[BlockRangeSink.tailMax]]) run without reading the batch; then
+    * [[BlockRangeSink.appendRanges]] stages `raw`'s rows above the
+    * watermark — the only Spark action on `raw` — and commits them as
+    * an append. The admitted count is the staged files' footer row
+    * counts.
     */
   def ingestFrame(spark: SparkSession, raw: org.apache.spark.sql.DataFrame,
       factsDir: String): Long = {
-    // recover FIRST: the watermark probe and the existing-rows read
-    // below plan against file listings, and a crashed predecessor's
-    // outstanding journal would otherwise be replayed mid-cycle (inside
-    // upsertRanges' lock), invalidating those listings under the
-    // running merge query. Single-writer contract: nothing mutates the
-    // table between this recovery and the upsert's own locked one.
+    // recover FIRST: the watermark below reads a file listing, and a
+    // crashed predecessor's outstanding journal would otherwise be
+    // replayed mid-cycle (inside appendRanges' lock), invalidating that
+    // listing. Single-writer contract: nothing mutates the table
+    // between this recovery and the append's own locked one.
     BlockRangeSink.timed("ingest.recover")(
       BlockRangeSink.recoverTable(factsDir))
-    // ONE FS listing serves the whole cycle: the watermark's max-range
-    // lookup AND the affected-partition membership check below (the
-    // old shape listed for the watermark, then re-listed the entire
-    // table inside the merge read's file index — at 100 TB that second
-    // listing is O(all partitions) per cycle for a tail-sized merge).
+    // ONE FS listing serves the whole cycle: the watermark's tail range
+    // and the append's per-range file counts
     val existing = BlockRangeSink.timed("ingest.stats")(
       BlockRangeSink.stats(factsDir))
     val wm =
       if (existing.isEmpty) -1L
       else BlockRangeSink.timed("ingest.watermark")(
         BlockRangeSink.tailMax(spark, factsDir, existing.last, "block"))
-    val fresh = raw.filter(col("block") > wm)
-    // one pass over the feed yields both the admit count and the
-    // affected range set (the old shape ran a count job, then a second
-    // aggregate to build the semi-join's broadcast side)
-    val aggRow = BlockRangeSink.timed("ingest.freshAgg")(
-      fresh.agg(count(lit(1)),
-        collect_set(expr(s"block div ${BlockRangeSink.RangeSize}"))).head())
-    val n = aggRow.getLong(0)
-    if (n > 0) {
-      val affected = aggRow.getSeq[Long](1).toSet
-      val overlap = existing.map(_.blockRange).filter(affected)
-      val batch =
-        if (overlap.isEmpty) fresh
-        else {
-          // read EXACTLY the affected partitions' directories — no
-          // whole-table file index, no semi-join: the membership test
-          // already happened driver-side on metadata
-          val dirs = overlap.map(r => s"$factsDir/blockRange=$r")
-          spark.read.option("basePath", factsDir).parquet(dirs: _*)
-            .drop("blockRange")
-            .unionByName(fresh)
-        }
-      // NOT BlockRangeSink.write: the overwrite's crash contract is
-      // "re-run the same batch", and an ingest re-run is not the same
-      // batch (the admit filter above moves with the watermark). The
-      // single-journal batched commit makes THIS cycle
-      // crash-convergent — see BlockRangeSink.upsertRanges.
-      BlockRangeSink.timed("ingest.upsert")(
-        BlockRangeSink.upsertRanges(batch, factsDir))
-    }
-    n
+    // NOT BlockRangeSink.write: the overwrite's crash contract is
+    // "re-run the same batch", and an ingest re-run is not the same
+    // batch (the admit filter moves with the watermark) — see
+    // BlockRangeSink.appendRanges.
+    BlockRangeSink.timed("ingest.append")(
+      BlockRangeSink.appendRanges(raw.filter(col("block") > wm), factsDir,
+        existing))
   }
 
   /** Reorg under the ingest lifecycle (reference omniEngine.py main
@@ -133,7 +114,7 @@ object IncrementalIngest {
     *
     * Reuse: for one (session, store) this object pins the stamped facts
     * of SEALED ranges — every range below the store's max range; the
-    * tail range, which every ingest cycle rewrites, is never pinned — as
+    * tail range, which every ingest cycle appends to, is never pinned — as
     * an ordered list of cached segments with per-range row counts. A
     * pinned range is reused while its listed file identities
     * ([[BlockRangeSink.FileId]]: name, length, modification time) are

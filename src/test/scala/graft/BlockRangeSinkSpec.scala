@@ -300,6 +300,66 @@ class BlockRangeSinkSpec extends SparkTestBase {
     }
   }
 
+  test("file-granular rollback: files wholly above the fork are deleted " +
+      "with zero Spark jobs; only a straddling file is rewritten") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = Files.createTempDirectory("graft_sink_drop_files").toString
+    def frame(lo: Long, hi: Long) =
+      (lo to hi).map(b => (b, s"tx$b")).toDF("block", "txid")
+    BlockRangeSink.write(frame(1L, 1200L), dir)
+    // the layout appended ticks leave: range 1 holds [1000..1200]
+    // [1201..1500] [1501..1800], one file each
+    Seq((1201L, 1500L), (1501L, 1800L)).foreach { case (lo, hi) =>
+      frame(lo, hi).coalesce(1).write.mode("append")
+        .parquet(s"$dir/blockRange=1")
+    }
+    val before = BlockRangeSink.stats(dir).find(_.blockRange == 1L).get
+    assert(before.nFiles == 3, s"fixture: $before")
+
+    // jobs started under `group`; a barrier job in another group, once
+    // its start is seen, proves every earlier job start was delivered
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    def jobsIn(group: String)(body: => Unit): Int = {
+      groups.clear()
+      spark.sparkContext.setJobGroup(group, group)
+      try body finally spark.sparkContext.clearJobGroup()
+      spark.sparkContext.setJobGroup(s"$group-barrier", "barrier")
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains(s"$group-barrier") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains(s"$group-barrier"), "listener never saw the barrier")
+      groups.toArray.count(_ == group)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // fork at a file boundary: [1501..1800] is wholly above, nothing
+      // straddles — footers decide, no row is read
+      assert(jobsIn("drop-clean")(BlockRangeSink.dropAbove(spark, dir, 1500L)) == 0)
+      val clean = BlockRangeSink.stats(dir).find(_.blockRange == 1L).get
+      assert(clean.files.toSet.subsetOf(before.files.toSet) && clean.nFiles == 2,
+        s"expected the two files at or below the fork kept as they were: $clean")
+      assert(BlockRangeSink.watermark(spark, dir) == 1500L)
+      // fork inside [1201..1500]: that straddler is rewritten by a job,
+      // the [1000..1200] file below it stays as it was
+      val below = clean.files.filter(f => spark.read
+        .parquet(BlockRangeSink.filePath(dir, 1L, f))
+        .agg(org.apache.spark.sql.functions.max($"block")).head().getLong(0) <= 1200L)
+      assert(jobsIn("drop-straddle")(BlockRangeSink.dropAbove(spark, dir, 1350L)) > 0)
+      val split = BlockRangeSink.stats(dir).find(_.blockRange == 1L).get
+      assert(below.size == 1 && split.nFiles == 2 && split.files.contains(below.head),
+        s"straddler rewrite touched more than the straddler: $split")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(BlockRangeSink.watermark(spark, dir) == 1350L)
+    val rows = BlockRangeSink.read(spark, dir).select($"block").as[Long]
+      .collect().sorted.toSeq
+    assert(rows == (1L to 1350L))
+  }
+
   test("footer watermark equals the scan (INT64, INT32, multi-file tail); " +
       "no-statistics and null-block tails fall back to the scan") {
     def check(dir: String, expected: Long, fromFooter: Boolean): Unit = {

@@ -2,11 +2,12 @@ package graft
 
 import java.net.URI
 
-import org.apache.hadoop.fs.{FileStatus, LocatedFileStatus, Path,
-  RawLocalFileSystem, RemoteIterator}
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus,
+  LocatedFileStatus, Path, RawLocalFileSystem, RemoteIterator}
 
 /** Counting-FS test double (r11 verdict ask #4): a `countfs://` scheme
-  * over the local filesystem that counts CLIENT-level listing calls —
+  * over the local filesystem that records every `open` and `delete`
+  * path and counts CLIENT-level listing calls —
   * what [[graft.sinks.BlockRangeSink.stats]] pays the metadata store
   * per invocation. Hadoop's generic `listFiles(recursive = true)` is
   * implemented as an internal per-directory walk on local FS, so the
@@ -28,6 +29,16 @@ class CountingFileSystem extends RawLocalFileSystem {
   private def sanitize(s: FileStatus): FileStatus =
     new FileStatus(s.getLen, s.isDirectory, 1, s.getBlockSize,
       s.getModificationTime, s.getPath)
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    CountingFileSystem.opened.add(f.toUri.getPath)
+    super.open(f, bufferSize)
+  }
+
+  override def delete(f: Path, recursive: Boolean): Boolean = {
+    CountingFileSystem.deleted.add(f.toUri.getPath)
+    super.delete(f, recursive)
+  }
 
   override def listFiles(f: Path, recursive: Boolean)
       : RemoteIterator[LocatedFileStatus] =
@@ -60,5 +71,14 @@ object CountingFileSystem {
       try body finally inCall.set(java.lang.Boolean.FALSE)
     }
 
-  def reset(): Unit = calls.set(0)
+  /** Paths (URI path part) of every `open` and `delete` since the last
+    * [[reset]], in call order — what a mutation touched of the data. */
+  val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  val deleted = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  def reset(): Unit = {
+    calls.set(0)
+    opened.clear()
+    deleted.clear()
+  }
 }

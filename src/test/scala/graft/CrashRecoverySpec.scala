@@ -60,8 +60,20 @@ class CrashRecoverySpec extends SparkTestBase {
   private def frame(blocks: Range, tag: String = "tx") =
     blocks.map(b => (b.toLong, s"$tag$b")).toDF("block", "txid")
 
+  /** `shape` checks, on the listings before and after the never-crashed
+    * run, that the fixture takes the protocol path the op is named for. */
   private case class MutOp(name: String,
-      setup: String => Unit, run: String => Unit)
+      setup: String => Unit, run: String => Unit,
+      shape: (Seq[BlockRangeSink.RangeStats],
+        Seq[BlockRangeSink.RangeStats]) => Unit = (_, _) => ())
+
+  private def ingest(dir: String, blocks: Range, tag: String = "tx"): Unit = {
+    graft.streaming.IncrementalIngest.ingestFrame(spark, frame(blocks, tag), dir)
+    ()
+  }
+
+  private def names(st: Seq[BlockRangeSink.RangeStats], range: Long) =
+    st.find(_.blockRange == range).toSeq.flatMap(_.files.map(_.name)).toSet
 
   private val ops = Seq(
     MutOp("write-batch",
@@ -96,6 +108,53 @@ class CrashRecoverySpec extends SparkTestBase {
         graft.streaming.IncrementalIngest.ingestFrame(
           spark, frame(2400 to 3200, "alt"), dir)
         ()
+      }),
+    // the append commit inside a partly filled tail: one journal section
+    // that drops nothing and moves the staged file in
+    MutOp("ingest-append",
+      setup = dir => BlockRangeSink.write(frame(1 to 2500), dir),
+      run = dir => ingest(dir, 2400 to 2900, "alt"),
+      shape = (before, after) => {
+        assert(after.map(_.blockRange) == before.map(_.blockRange))
+        assert(names(before, 2L).subsetOf(names(after, 2L)) &&
+          names(after, 2L).size > names(before, 2L).size,
+          s"not a pure append: $before -> $after")
+        assert(before.filter(_.blockRange < 2L) == after.filter(_.blockRange < 2L))
+      }),
+    // the tail already holds the file cap, so its append section turns
+    // into a rewrite (dropping all eight files) in the same journal as
+    // the append that opens range 3
+    MutOp("ingest-cap",
+      setup = dir => {
+        BlockRangeSink.write(frame(1 to 2500), dir)
+        BlockRangeSink.write(
+          frame(2000 to 2500).repartition(8, $"block"), dir)
+      },
+      run = dir => ingest(dir, 2400 to 3200, "alt"),
+      shape = (before, after) => {
+        assert(before.find(_.blockRange == 2L).map(_.nFiles).contains(8),
+          s"fixture: $before")
+        assert(after.find(_.blockRange == 2L).map(_.nFiles).contains(1) &&
+          names(before, 2L).intersect(names(after, 2L)).isEmpty,
+          s"tail not rewritten to one file: $after")
+        assert(after.map(_.blockRange) == Seq(0L, 1L, 2L, 3L))
+      }),
+    // range 1 holds five appended files: two wholly at or below the
+    // fork, one straddling it and two wholly above; range 2 is above.
+    // Only the straddler is rewritten.
+    MutOp("dropAbove-files",
+      setup = dir => {
+        BlockRangeSink.write(frame(1 to 1200), dir)
+        Seq(1400, 1600, 1800, 2300).foreach(hi => ingest(dir, 1 to hi))
+      },
+      run = dir => BlockRangeSink.dropAbove(spark, dir, 1500L),
+      shape = (before, after) => {
+        assert(before.find(_.blockRange == 1L).map(_.nFiles).contains(5),
+          s"fixture: $before")
+        assert(after.map(_.blockRange) == Seq(0L, 1L))
+        val kept = names(after, 1L)
+        assert(kept.size == 3 && names(before, 1L).intersect(kept).size == 2,
+          s"expected the two files below the fork kept and one rewrite: $after")
       }))
 
   /** Reboot the store and run the documented recovery: clear the
@@ -132,10 +191,12 @@ class CrashRecoverySpec extends SparkTestBase {
 
       // the never-crashed run: expected content + the op's mutation
       // count M, which is the crash-prefix domain
+      val before = BlockRangeSink.stats(dir)
       ObjectStoreFileSystem.resetMutationCount()
       op.run(dir)
       val m = ObjectStoreFileSystem.mutationCount
       val expected = content(dir)
+      op.shape(before, BlockRangeSink.stats(dir))
       assert(m > 0, s"${op.name}: no mutating requests measured")
       assert(residue(dir).isEmpty && BlockRangeSink.lockOwner(dir).isEmpty)
 
@@ -267,4 +328,69 @@ class CrashRecoverySpec extends SparkTestBase {
       "recoverTable did not complete the journaled compaction")
     assert(residue(dir).isEmpty && BlockRangeSink.lockOwner(dir).isEmpty)
   }
+  for (version <- Seq("v1", "v2"))
+    test(s"a $version journal left by an older build replays to the " +
+        "never-crashed state from every prefix of its replay") {
+      val bucket = s"crash-legacy-$version"
+      def dir = s"objfs://$bucket/facts"
+      ObjectStoreFileSystem.clearOutage()
+      ObjectStoreFileSystem.resetBucket(bucket)
+      BlockRangeSink.write(frame(1 to 2500), dir)
+      // what the older build's tail upsert staged and journaled for range
+      // 2 before it died: the whole range's new rows (existing ∪ fresh);
+      // its sections carry no drop= records and replace the range
+      val range2 = frame(2000 to 2500).union(frame(2501 to 2900, "alt"))
+      val fs = new Path(dir).getFileSystem(conf)
+      val op = s"legacy-$version"
+      val stage = new Path(dir, s"${BlockRangeSink.PendingDirName}/$op")
+      val fileLines =
+        if (version == "v1") {
+          range2.coalesce(1).write.parquet(stage.toString)
+          fs.listStatus(stage).map(_.getPath.getName)
+            .filter(_.endsWith(".parquet")).sorted.zipWithIndex
+            .map { case (n, i) => f"file=$n\tgraft-$op-p$i%05d.parquet" }
+        } else {
+          range2.withColumn("blockRange", $"block".divide(1000).cast("long"))
+            .coalesce(1).write.partitionBy("blockRange").parquet(stage.toString)
+          fs.listStatus(new Path(stage, "blockRange=2")).map(_.getPath.getName)
+            .filter(_.endsWith(".parquet")).sorted.zipWithIndex
+            .map { case (n, i) =>
+              f"file=blockRange=2/$n\tgraft-$op-r2-p$i%05d.parquet" }
+        }
+      val header =
+        if (version == "v1") Seq("v1", "range=2", s"pending=$op")
+        else Seq("v2", s"pending=$op", "range=2")
+      val out = fs.create(new Path(dir, s"${BlockRangeSink.JournalDirName}/$op"))
+      try out.write((header ++ fileLines).mkString("\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+      val state0 = ObjectStoreFileSystem.snapshotBucket(bucket)
+      val expected = ((1 to 2500).map(b => (b.toLong, s"tx$b")) ++
+        (2501 to 2900).map(b => (b.toLong, s"alt$b"))).sorted
+
+      ObjectStoreFileSystem.resetMutationCount()
+      BlockRangeSink.recoverTable(dir)
+      val m = ObjectStoreFileSystem.mutationCount
+      assert(content(dir) == expected)
+      assert(BlockRangeSink.stats(dir).find(_.blockRange == 2L).map(_.nFiles)
+        .contains(1), "the replay did not replace range 2 whole")
+      var crashed = 0
+      try {
+        for (k <- 0L until m) {
+          ObjectStoreFileSystem.restoreBucket(bucket, state0)
+          ObjectStoreFileSystem.injectOutageAfter(k)
+          try BlockRangeSink.recoverTable(dir)
+          catch { case _: Throwable => crashed += 1 }
+          ObjectStoreFileSystem.clearOutage()
+          if (BlockRangeSink.lockOwner(dir).nonEmpty)
+            BlockRangeSink.forceUnlock(dir)
+          BlockRangeSink.recoverTable(dir)
+          assert(content(dir) == expected,
+            s"$version replay diverged after a crash at prefix $k")
+          assert(residue(dir).isEmpty && BlockRangeSink.lockOwner(dir).isEmpty)
+        }
+      } finally ObjectStoreFileSystem.clearOutage()
+      assert(crashed > 0, s"$version: no prefix crashed the replay")
+      info(s"$version replay: M=$m mutations, $crashed crashed+recovered")
+    }
 }

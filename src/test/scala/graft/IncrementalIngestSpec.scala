@@ -126,6 +126,84 @@ class IncrementalIngestSpec extends SparkTestBase {
     }
   }
 
+  test("ingestFrame evaluates its input once per cycle") {
+    val dir = Files.createTempDirectory("graft_ingest_once").toString
+    val chain = grant(A, A, BigDecimal("100"), block = 1) +:
+      (2 to 40).map(i => simpleSend(A, B, BigDecimal(i), block = i * 100L))
+    // every row of the input passes this map once per evaluation
+    def counted(txs: Seq[graft.model.RawTx]) = {
+      val acc = spark.sparkContext.longAccumulator("raw rows")
+      (acc, spark.createDataset(txs).map { t => acc.add(1); t })
+    }
+    val (first, raw1) = counted(chain.take(25))
+    assert(IncrementalIngest.ingest(spark, raw1, dir) == 25L)
+    assert(first.value == 25L, s"first cycle read its input ${first.value} " +
+      "rows for 25: evaluated more than once")
+    // an overlapping re-delivery: the watermark admits 15 of 40
+    val (second, raw2) = counted(chain)
+    assert(IncrementalIngest.ingest(spark, raw2, dir) == 15L)
+    assert(second.value == 40L, s"second cycle read its input " +
+      s"${second.value} rows for 40: evaluated more than once")
+    assert(IncrementalIngest.readFacts(spark, dir).count() == 40L)
+  }
+
+  test("an append tick opens no existing data file beyond the footer " +
+      "watermark's one read per tail file, and deletes none") {
+    import graft.sinks.BlockRangeSink
+    import scala.jdk.CollectionConverters._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countfs.impl", classOf[CountingFileSystem].getName)
+    val local = Files.createTempDirectory("graft_append_io").toString
+    val dir = "countfs://" + local
+    val history = grant(A, A, BigDecimal("1000"), block = 1) +:
+      (1 until 12).map(i => simpleSend(A, B, BigDecimal(i), block = i * 250L))
+    IncrementalIngest.ingest(spark, spark.createDataset(history), dir)
+    val before = BlockRangeSink.stats(dir)
+    val tail = before.last
+    assert(tail.blockRange == 2L, s"fixture: $before")
+    val tailPaths = tail.files.map(f => s"$local/blockRange=2/${f.name}")
+
+    CountingFileSystem.reset()
+    assert(IncrementalIngest.ingest(spark, spark.createDataset(Seq(
+      simpleSend(C, D, BigDecimal("1"), block = 2900L))), dir) == 1L)
+    val opened = CountingFileSystem.opened.asScala.toSeq
+      .filter(_.startsWith(s"$local/blockRange="))
+    val deleted = CountingFileSystem.deleted.asScala.toSeq
+      .filter(_.startsWith(s"$local/blockRange="))
+    assert(deleted.isEmpty, s"the append deleted live data: $deleted")
+    assert(opened.sorted == tailPaths.sorted,
+      s"the append opened ${opened.mkString(", ")}; only the tail's footers " +
+        s"(${tailPaths.mkString(", ")}) should be read, once each")
+    val after = BlockRangeSink.stats(dir)
+    assert(after.dropRight(1) == before.dropRight(1))
+    assert(tail.files.toSet.subsetOf(after.last.files.toSet) &&
+      after.last.nFiles == tail.nFiles + 1)
+    assert(IncrementalIngest.readFacts(spark, dir).count() == history.size + 1L)
+  }
+
+  test("ticks into one range never leave it past the file cap; the cap " +
+      "rewrite leaves compact's target count") {
+    import graft.sinks.BlockRangeSink
+    val dir = Files.createTempDirectory("graft_append_cap").toString
+    val counts = (1 to 20).map { i =>
+      val t = if (i == 1) grant(A, A, BigDecimal("1000"), block = 10)
+        else simpleSend(A, B, BigDecimal(i), block = i * 10L)
+      assert(IncrementalIngest.ingest(spark, spark.createDataset(Seq(t)), dir) == 1L)
+      val st = BlockRangeSink.stats(dir)
+      assert(st.map(_.blockRange) == Seq(0L), s"tick $i: $st")
+      // right after a cap rewrite compact has nothing to do: the range
+      // holds exactly compact's target count for its bytes
+      if (i % 8 == 1 && i > 1)
+        assert(BlockRangeSink.compact(spark, dir).isEmpty, s"tick $i: $st")
+      st.head.nFiles
+    }
+    // one file per tick up to the cap of 8; the ninth append rewrites
+    // the range to one file (its bytes justify one) and appending resumes
+    assert(counts == (1 to 20).map(i => (i - 1) % 8 + 1),
+      s"files per tick: $counts")
+    assert(IncrementalIngest.readFacts(spark, dir).count() == 20L)
+  }
+
   test("raw JSON source round-trips the RawTx schema (S2/S3)") {
     val dir = Files.createTempDirectory("graft_raw").toString
     val txs = Seq(
