@@ -394,7 +394,7 @@ object StreamingQueries {
     val (mn, mx) = conf.agg(min($"block"), max($"block"))
       .as[(Long, Long)].head()
 
-    def runOnce(): Unit = graft.sinks.BlockRangeSink.timed("twin.fileDrop") {
+    def runOnce(): Unit = {
       val q = s.readStream.schema(conf.schema).parquet(feedDir)
         .writeStream
         .foreachBatch { (b: DataFrame, _: Long) =>
@@ -409,9 +409,8 @@ object StreamingQueries {
     (0L to 3L).foreach { b =>
       // ascending block ranges: (block-mn)*4 div span is 0..3 exactly
       // (integer `div`, not `/` — Column./ on longs yields DOUBLE)
-      graft.sinks.BlockRangeSink.timed("twin.feedWrite")(
-        conf.where(expr(s"(block - $mn) * 4 div ${mx - mn + 1}") === b)
-          .write.mode("append").parquet(feedDir))
+      conf.where(expr(s"(block - $mn) * 4 div ${mx - mn + 1}") === b)
+        .write.mode("append").parquet(feedDir)
       runOnce()
     }
     runOnce() // no-new-files restart: the file-source log must admit nothing
@@ -522,7 +521,7 @@ object StreamingQueries {
       .withColumn("amt", $"amt" + 97L)
       .withColumn("pay", $"amt" % 1000L + 1L)
 
-    def runOnce(): Unit = graft.sinks.BlockRangeSink.timed("twin.fileDrop") {
+    def runOnce(): Unit = {
       val q = s.readStream.schema(conf.schema).parquet(feedDir)
         .writeStream
         .foreachBatch { (b: DataFrame, _: Long) =>
@@ -593,20 +592,17 @@ object StreamingQueries {
     val parts = sys.env.getOrElse("GRAFT_STREAM_PARTS", "8")
     val savedParts = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", parts)
-    graft.sinks.BlockRangeSink.timed("twin.fileDrop") {
-      val q =
-        try stream.writeStream
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            graft.sinks.BlockRangeSink.timed("twin.batch")(
-              b.write.mode("append").parquet(outDir)); ()
-          }
-          .outputMode(mode)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
-      q.awaitTermination()
-    }
+    val q =
+      try stream.writeStream
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          b.write.mode("append").parquet(outDir); ()
+        }
+        .outputMode(mode)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
+    q.awaitTermination()
   }
 
   /** mapGroupsWithState balances through the FILE path — same oracle

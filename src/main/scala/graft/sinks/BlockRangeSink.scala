@@ -41,9 +41,10 @@ import org.apache.spark.sql.functions._
   * anything is destroyed, and a `_graft_journal/` record naming every
   * file dropped and moved makes the swap replayable), and
   * [[dropAbove]]'s file and directory deletes by re-running it.
-  * Recovery runs automatically under the writer lock at the start of
-  * every mutation ([[recoverTable]] exposes it standalone);
-  * CrashRecoverySpec model-checks every mutation prefix over
+  * Recovery lives in the writer lock itself: [[withWriterLock]] runs it
+  * right after taking the lock, before any mutation's body, so every
+  * mutation starts from a clean table ([[recoverTable]] is the bare
+  * lock); CrashRecoverySpec model-checks every mutation prefix over
   * object-store semantics.
   *
   * Mutation concurrency — SINGLE WRITER (reference M10,
@@ -51,8 +52,11 @@ import org.apache.spark.sql.functions._
   * [[write]], [[compact]] and [[dropAbove]] rewrite partitions, which
   * is safe against a CRASH of the same logical operation but not
   * against a CONCURRENT different one (a cron'd compactor racing a
-  * reorg rollback could resurrect a dropped partition). Each therefore
-  * takes a sink-level writer lock — create-no-overwrite of `_graft_writer.lock`
+  * reorg rollback could resurrect a dropped partition), and
+  * [[appendRanges]] admits rows by the tip it reads (a rollback between
+  * that read and the commit would leave the winning branch's blocks
+  * below the old tip unadmitted). Each therefore runs whole inside ONE
+  * hold of a sink-level writer lock — create-no-overwrite of `_graft_writer.lock`
   * under the table root, plus an owner stamp (host/pid/nonce) that is
   * read back before the mutation runs, so even on stores where the
   * create itself is NOT atomic (S3A's HEAD-then-PUT, RawLocal's
@@ -69,21 +73,6 @@ object BlockRangeSink {
   val RangeSize = 1000L
 
   val LockName = "_graft_writer.lock"
-
-  /** Dev measurement instrument (GRAFT_SINK_TIMING=1): wall-clock per
-    * protocol segment to stderr, so the journal protocol's cost can be
-    * itemized per ingest cycle (guide §1). Zero-cost when unset; never
-    * part of any timed artifact (stderr only).
-    */
-  private val timing = sys.env.get("GRAFT_SINK_TIMING").contains("1")
-  private[graft] def timed[T](label: String)(body: => T): T =
-    if (!timing) body
-    else {
-      val t0 = System.nanoTime()
-      try body
-      finally System.err.println(
-        f"[sink-timing] $label ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    }
 
   /** Hadoop conf for FS resolution: the active session's (carries
     * cluster credentials/filesystem settings) when one exists, else a
@@ -122,6 +111,10 @@ object BlockRangeSink {
     * the stamp: deleting a lock someone else now owns (after a mistaken
     * mid-mutation forceUnlock) would re-admit the race, so a stolen
     * lock fails loudly instead.
+    *
+    * Every holder starts with [[recoverLocked]] — outstanding journals
+    * replayed, orphan scratch swept — before `body`, so no mutation can
+    * skip recovery and `body` sees a clean table for its whole run.
     */
   private def withWriterLock[T](path: String)(body: => T): T = {
     val (fs, root) = fsFor(path)
@@ -143,7 +136,7 @@ object BlockRangeSink {
     // winner's lock on its way out.
     verifyLockOwner(fs, lock, token)
     var bodyFailure: Throwable = null
-    try body
+    try { recoverLocked(path); body }
     catch { case t: Throwable => bodyFailure = t; throw t }
     finally {
       try releaseLock(fs, lock, token)
@@ -238,7 +231,6 @@ object BlockRangeSink {
 
   def write(df: DataFrame, path: String, blockCol: String = "block"): Unit =
     withWriterLock(path) {
-      recoverLocked(path)
       df.withColumn("blockRange", expr(s"$blockCol div $RangeSize"))
         .write
         .partitionBy("blockRange")
@@ -262,11 +254,15 @@ object BlockRangeSink {
     * footers, never a table pass and, on the common path, no Spark job.
     */
   def watermark(spark: SparkSession, path: String,
-      blockCol: String = "block"): Long = {
-    val ranges = timed("watermark.stats")(stats(path))
-    if (ranges.isEmpty) -1L
-    else timed("watermark.probe")(tailMax(spark, path, ranges.last, blockCol))
-  }
+      blockCol: String = "block"): Long =
+    listedTip(spark, path, stats(path), blockCol)
+
+  /** Max of `blockCol` in the table `listing` (a [[stats]] of `path`)
+    * describes: -1 when it lists no range, else [[tailMax]] of its last.
+    */
+  private[graft] def listedTip(spark: SparkSession, path: String,
+      listing: Seq[RangeStats], blockCol: String): Long =
+    listing.lastOption.fold(-1L)(tailMax(spark, path, _, blockCol))
 
   /** Max of `blockCol` inside the tail range `tail` (the last entry of
     * a [[stats]] listing): the footer answer ([[footerMax]]) when every
@@ -500,7 +496,6 @@ object BlockRangeSink {
     */
   def compact(spark: SparkSession, path: String,
       targetBytes: Long = TargetBytes): Seq[Long] = withWriterLock(path) {
-    recoverLocked(path)
     val todo = stats(path).filter(s => s.nFiles > targetFiles(s.bytes, targetBytes))
     if (todo.nonEmpty) {
       // ONE staging job + ONE journaled swap for every partition being
@@ -588,7 +583,6 @@ object BlockRangeSink {
     */
   def dropAbove(spark: SparkSession, path: String, fork: Long,
       blockCol: String = "block"): Unit = withWriterLock(path) {
-    recoverLocked(path)
     val forkRange = fork / RangeSize
     val all = stats(path)
     all.filter(_.blockRange > forkRange).reverse
@@ -657,18 +651,21 @@ object BlockRangeSink {
   val JournalDirName = "_graft_journal"
 
   /** The ingest cycle's commit
-    * ([[graft.streaming.IncrementalIngest.ingestFrame]]): add `rows` to
-    * the table as new files and return how many rows that was.
-    * `listing` is the caller's [[stats]] of the table, and every row of
-    * `rows` must lie above every block the table holds (the caller's
-    * watermark filter). No existing row changes, so no existing file is
-    * read, rewritten or deleted — except in a range the append would
-    * take past [[MaxFiles]] files.
+    * ([[graft.streaming.IncrementalIngest.ingestFrame]]): admit the rows
+    * of `rows` above the table's tip, add them as new files and return
+    * how many rows that was. The whole cycle is one writer-lock critical
+    * section ([[withWriterLock]]): recovery, ONE [[stats]] listing, the
+    * tip from the tail range's footers ([[listedTip]]), the stage and
+    * the publish. No rollback can move the tip between the read and the
+    * commit, and no existing row changes, so no existing file is read,
+    * rewritten or deleted — except in a range the append would take past
+    * [[MaxFiles]] files.
     *
-    *  1. **Stage** — `rows` are written once, partitioned by range,
-    *     under `_graft_pending/<opId>/`. This is the only Spark job on
-    *     `rows`: the admitted count is the sum of the staged footers'
-    *     row counts and the touched ranges are the staged listing.
+    *  1. **Stage** — the admitted rows (`blockCol` above the tip) are
+    *     written once, partitioned by range, under
+    *     `_graft_pending/<opId>/`. This is the only Spark job on `rows`:
+    *     the admitted count is the sum of the staged footers' row counts
+    *     and the touched ranges are the staged listing.
     *  2. **Cap** — a range whose listed files plus its staged files
     *     would exceed [[MaxFiles]] is rewritten instead: its listed and
     *     staged rows go to [[targetFiles]] files, and its section drops
@@ -680,8 +677,8 @@ object BlockRangeSink {
     *     moves the staged files in under fresh names.
     *
     * The publish is the commit point for all ranges at once, and
-    * recovery replays every outstanding journal before any watermark is
-    * read. So at every crash point either no range of the batch is
+    * recovery replays every outstanding journal before the tip is read.
+    * So at every crash point either no range of the batch is
     * visible (journal unpublished; the table is as it was) or all of
     * them are (replay completes the moves), and the re-run's admit
     * filter re-admits exactly the uncommitted remainder: convergent
@@ -696,9 +693,10 @@ object BlockRangeSink {
     * gone (CrashRecoverySpec's ingest-cycle sweep caught exactly this at
     * one prefix — round 13).
     */
-  def appendRanges(rows: DataFrame, path: String, listing: Seq[RangeStats],
+  def appendRanges(rows: DataFrame, path: String,
       blockCol: String = "block"): Long = withWriterLock(path) {
-    recoverLocked(path)
+    val listing = stats(path)
+    val tip = listedTip(rows.sparkSession, path, listing, blockCol)
     val (fs, root) = fsFor(path)
     val opId = java.util.UUID.randomUUID().toString
     val stageDir = new Path(root, s"$PendingDirName/$opId")
@@ -711,10 +709,10 @@ object BlockRangeSink {
     // one task at 100 TB): one exchange, partition sizes decided from
     // the shuffle's own map statistics — small ranges coalesce into one
     // file each, oversized ranges split across tasks.
-    timed("append.stage")(
-      rows.withColumn("blockRange", expr(s"$blockCol div $RangeSize"))
-        .hint("rebalance", col("blockRange"))
-        .write.partitionBy("blockRange").parquet(stageDir.toString))
+    rows.filter(col(blockCol) > tip)
+      .withColumn("blockRange", expr(s"$blockCol div $RangeSize"))
+      .hint("rebalance", col("blockRange"))
+      .write.partitionBy("blockRange").parquet(stageDir.toString)
     val staged = stagedRanges(fs, stageDir)
     val conf = hadoopConf
     val admitted = staged.flatMap(_._2)
@@ -740,8 +738,7 @@ object BlockRangeSink {
             old.map(_.name))
         }
       }
-      timed(s"append.commit(${sections.size} ranges)")(
-        publishAndReplay(fs, root, opId, sections))
+      publishAndReplay(fs, root, opId, sections)
     }
     admitted
   }
@@ -964,13 +961,12 @@ object BlockRangeSink {
     * destructive happened; the live partition is intact) and
     * `.spark-staging-*`/`_temporary` dirs from a crashed [[write]]
     * commit (whose recovery contract is re-running the batch: dynamic
-    * overwrite rewrites every touched partition from source). Runs
-    * automatically at the start of every locked mutation; exposed for
-    * operators who want recovery without a mutation (e.g. before a
-    * read-side audit after [[forceUnlock]]).
+    * overwrite rewrites every touched partition from source).
+    * [[withWriterLock]] runs it at the start of every mutation; this is
+    * that lock with no mutation inside, for operators who want recovery
+    * alone (e.g. before a read-side audit after [[forceUnlock]]).
     */
-  def recoverTable(path: String): Unit =
-    withWriterLock(path) { recoverLocked(path) }
+  def recoverTable(path: String): Unit = withWriterLock(path)(())
 
   private def recoverLocked(path: String): Unit = {
     val (fs, root) = fsFor(path)

@@ -16,13 +16,16 @@ import graft.sinks.BlockRangeSink
   * watermark, so every existing row of the store stays as it is and a
   * cycle adds files instead of rewriting ranges — the storage analogue
   * of the reference's per-block inserts (omniEngine.py:210 `dbCommit`).
-  * The sink's single-journal append ([[BlockRangeSink.appendRanges]]:
-  * one journal for every range of the batch, replayed by recovery
-  * before any watermark read) makes a crashed cycle re-run convergently
-  * from ANY prefix (every range is committed before a watermark
-  * covering it can be observed). An existing file is never read or
-  * rewritten, except when an append would take the tail range past the
-  * sink's file cap; sealed ranges are never touched.
+  * The sink owns the whole cycle ([[BlockRangeSink.appendRanges]]): one
+  * hold of its writer lock recovers, reads the watermark, stages the
+  * admitted rows and publishes one journal for every range of the
+  * batch — the reference's one lockfile around its whole cycle
+  * (omniEngine.py:11-36). A rollback cannot run between the watermark
+  * read and the commit, and a crashed cycle re-runs convergently from
+  * ANY prefix (every range is committed before a watermark covering it
+  * can be observed). An existing file is never read or rewritten,
+  * except when an append would take the tail range past the sink's
+  * file cap; sealed ranges are never touched.
   */
 object IncrementalIngest {
 
@@ -53,39 +56,16 @@ object IncrementalIngest {
     * pipelines whose facts are not RawTx-shaped (e.g. the BTC chain
     * feed) share the same admit + append cycle.
     *
-    * Metadata first, then ONE pass over `raw`: recovery, one
-    * [[BlockRangeSink.stats]] listing and the tail range's footer watermark
-    * ([[BlockRangeSink.tailMax]]) run without reading the batch; then
-    * [[BlockRangeSink.appendRanges]] stages `raw`'s rows above the
-    * watermark — the only Spark action on `raw` — and commits them as
-    * an append. The admitted count is the staged files' footer row
-    * counts.
+    * One sink call, [[BlockRangeSink.appendRanges]], under one writer
+    * lock: recovery, one listing and the tail range's footer watermark
+    * run without reading the batch, then `raw`'s rows above the
+    * watermark are staged — the only Spark action on `raw` — and
+    * committed as an append. The admitted count is the staged files'
+    * footer row counts.
     */
   def ingestFrame(spark: SparkSession, raw: org.apache.spark.sql.DataFrame,
-      factsDir: String): Long = {
-    // recover FIRST: the watermark below reads a file listing, and a
-    // crashed predecessor's outstanding journal would otherwise be
-    // replayed mid-cycle (inside appendRanges' lock), invalidating that
-    // listing. Single-writer contract: nothing mutates the table
-    // between this recovery and the append's own locked one.
-    BlockRangeSink.timed("ingest.recover")(
-      BlockRangeSink.recoverTable(factsDir))
-    // ONE FS listing serves the whole cycle: the watermark's tail range
-    // and the append's per-range file counts
-    val existing = BlockRangeSink.timed("ingest.stats")(
-      BlockRangeSink.stats(factsDir))
-    val wm =
-      if (existing.isEmpty) -1L
-      else BlockRangeSink.timed("ingest.watermark")(
-        BlockRangeSink.tailMax(spark, factsDir, existing.last, "block"))
-    // NOT BlockRangeSink.write: the overwrite's crash contract is
-    // "re-run the same batch", and an ingest re-run is not the same
-    // batch (the admit filter moves with the watermark) — see
-    // BlockRangeSink.appendRanges.
-    BlockRangeSink.timed("ingest.append")(
-      BlockRangeSink.appendRanges(raw.filter(col("block") > wm), factsDir,
-        existing))
-  }
+      factsDir: String): Long =
+    BlockRangeSink.appendRanges(raw, factsDir)
 
   /** Reorg under the ingest lifecycle (reference omniEngine.py main
     * loop: a tip-hash mismatch triggers reorgRollback(fork) and the
@@ -108,7 +88,7 @@ object IncrementalIngest {
     * previous call.
     *
     * One [[BlockRangeSink.stats]] listing serves the whole call: the
-    * tip ([[BlockRangeSink.tailMax]] over the tail range's listed
+    * tip ([[BlockRangeSink.listedTip]] over the tail range's listed
     * files), the reuse check, and the explicit file paths of the read —
     * no table-root file index is ever built.
     *
@@ -142,8 +122,7 @@ object IncrementalIngest {
   def derive(spark: SparkSession, factsDir: String): OmniPipeline.Derived =
     synchronized {
       val listing = BlockRangeSink.stats(factsDir)
-      val tip = listing.lastOption
-        .fold(-1L)(BlockRangeSink.tailMax(spark, factsDir, _, "block"))
+      val tip = BlockRangeSink.listedTip(spark, factsDir, listing, "block")
       // the first block of the tail range: every block below it is sealed
       val sealedEnd =
         listing.lastOption.fold(0L)(_.blockRange) * BlockRangeSink.RangeSize

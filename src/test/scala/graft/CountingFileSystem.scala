@@ -2,12 +2,13 @@ package graft
 
 import java.net.URI
 
-import org.apache.hadoop.fs.{FSDataInputStream, FileStatus,
-  LocatedFileStatus, Path, RawLocalFileSystem, RemoteIterator}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream,
+  FileStatus, LocatedFileStatus, Path, RawLocalFileSystem, RemoteIterator}
+import org.apache.hadoop.util.Progressable
 
 /** Counting-FS test double (r11 verdict ask #4): a `countfs://` scheme
-  * over the local filesystem that records every `open` and `delete`
-  * path and counts CLIENT-level listing calls —
+  * over the local filesystem that records every `open`, `create` and
+  * `delete` path and counts CLIENT-level listing calls —
   * what [[graft.sinks.BlockRangeSink.stats]] pays the metadata store
   * per invocation. Hadoop's generic `listFiles(recursive = true)` is
   * implemented as an internal per-directory walk on local FS, so the
@@ -32,7 +33,15 @@ class CountingFileSystem extends RawLocalFileSystem {
 
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     CountingFileSystem.opened.add(f.toUri.getPath)
+    CountingFileSystem.onOpen(f.toUri.getPath)
     super.open(f, bufferSize)
+  }
+
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    CountingFileSystem.created.add(f.toUri.getPath)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
   }
 
   override def delete(f: Path, recursive: Boolean): Boolean = {
@@ -71,14 +80,23 @@ object CountingFileSystem {
       try body finally inCall.set(java.lang.Boolean.FALSE)
     }
 
-  /** Paths (URI path part) of every `open` and `delete` since the last
-    * [[reset]], in call order — what a mutation touched of the data. */
+  /** Paths (URI path part) of every `open`, `create` and `delete` since
+    * the last [[reset]], in call order — what a mutation touched of the
+    * data. */
   val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  val created = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   val deleted = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  /** Runs with the path of every `open`, before the file is opened — a
+    * seam for acting in the middle of an operation. [[reset]] clears it.
+    */
+  @volatile var onOpen: String => Unit = _ => ()
 
   def reset(): Unit = {
     calls.set(0)
     opened.clear()
+    created.clear()
     deleted.clear()
+    onOpen = _ => ()
   }
 }

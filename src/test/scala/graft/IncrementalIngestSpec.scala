@@ -204,6 +204,67 @@ class IncrementalIngestSpec extends SparkTestBase {
     assert(IncrementalIngest.readFacts(spark, dir).count() == 20L)
   }
 
+  test("an ingest tick takes the writer lock once") {
+    import graft.sinks.BlockRangeSink
+    import scala.jdk.CollectionConverters._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countfs.impl", classOf[CountingFileSystem].getName)
+    val local = Files.createTempDirectory("graft_tick_lock").toString
+    val dir = "countfs://" + local
+    IncrementalIngest.ingest(spark, spark.createDataset(Seq(
+      grant(A, A, BigDecimal("1000"), block = 1),
+      simpleSend(A, B, BigDecimal("1"), block = 1200))), dir)
+    CountingFileSystem.reset()
+    assert(IncrementalIngest.ingest(spark, spark.createDataset(Seq(
+      simpleSend(B, C, BigDecimal("1"), block = 1300))), dir) == 1L)
+    val locks = CountingFileSystem.created.asScala.toSeq
+      .count(_ == s"$local/${BlockRangeSink.LockName}")
+    assert(locks == 1, s"the tick created the writer lock $locks times")
+  }
+
+  test("the writer lock covers a tick's watermark read: a rollback " +
+      "attempted then fails, and retried after the tick it lets the " +
+      "winning branch land whole") {
+    import graft.sinks.BlockRangeSink
+    import scala.util.Try
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countfs.impl", classOf[CountingFileSystem].getName)
+    val local = Files.createTempDirectory("graft_tick_rollback").toString
+    val dir = "countfs://" + local
+    val fork = 1500L
+    val history = grant(A, A, BigDecimal("1000"), block = 1) +:
+      (1 until 12).map(i => simpleSend(A, B, BigDecimal(i), block = i * 250L))
+    IncrementalIngest.ingest(spark, spark.createDataset(history), dir)
+
+    // the first data-file open of the tick is its tail footer read
+    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    @volatile var rollback: Option[Try[Unit]] = None
+    CountingFileSystem.reset()
+    CountingFileSystem.onOpen = p =>
+      if (p.startsWith(s"$local/blockRange=") && fired.compareAndSet(false, true))
+        rollback = Some(Try(BlockRangeSink.dropAbove(spark, dir, fork)))
+    val tick =
+      try Try(IncrementalIngest.ingest(spark, spark.createDataset(Seq(
+        simpleSend(B, C, BigDecimal("1"), block = 2900L))), dir))
+      finally CountingFileSystem.reset()
+    assert(rollback.isDefined, "the tick read no tail footer")
+    assert(rollback.get.failed.toOption.exists(e =>
+      e.isInstanceOf[IllegalStateException] &&
+        e.getMessage.contains("writer lock")),
+      s"a rollback ran between the tick's watermark read and its commit: " +
+        rollback.get)
+    assert(tick.toOption.contains(1L), s"tick: $tick")
+
+    assert(IncrementalIngest.reorg(spark, dir, fork) == fork)
+    val branch = (1 to 8).map(i =>
+      simpleSend(A, C, BigDecimal(i), block = fork + i * 200L))
+    assert(IncrementalIngest.ingest(spark, spark.createDataset(branch), dir) ==
+      branch.size.toLong)
+    def keys(txs: Seq[graft.model.RawTx]) = txs.map(t => (t.block, t.txid)).sorted
+    assert(keys(IncrementalIngest.readFacts(spark, dir).collect().toSeq) ==
+      keys(history.filter(_.block <= fork) ++ branch))
+  }
+
   test("raw JSON source round-trips the RawTx schema (S2/S3)") {
     val dir = Files.createTempDirectory("graft_raw").toString
     val txs = Seq(
