@@ -44,8 +44,4 @@ object Tables {
       d.withColumn(c, d.col(c).cast(org.apache.spark.sql.types.TimestampType))
     }
   }
-
-  /** Register all tables as temp views (for spark.sql-style queries). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => t(spark, dir, n).createOrReplaceTempView(n))
 }

@@ -737,26 +737,16 @@ object PipelineQueries {
     * where co-resident scratch ~2×15 GB starts crowding a one-box
     * sweep disk; every driver/bench SF is 5 orders of magnitude below
     * it, every regime the sequential form was built for is above it).
-    * `GRAFT_M4_FORKS=sequential|coresident` pins the schedule,
-    * `GRAFT_M4_SEQ_ROWS` moves the auto threshold. Both schedules
-    * produce identical rows (spec-pinned in `FullReorgSpec`); the
-    * policy only trades latency against peak scratch.
+    * Both schedules produce identical rows (spec-pinned in
+    * `FullReorgSpec`); the policy only trades latency against peak
+    * scratch.
     */
   private[graft] def m4Sequential(ordersRows: Long): Boolean =
-    sys.env.get("GRAFT_M4_FORKS") match {
-      case Some("sequential") => true
-      case Some("coresident") => false
-      case Some(other) => throw new IllegalArgumentException(
-        s"GRAFT_M4_FORKS must be 'sequential' or 'coresident', got '$other'")
-      case None => ordersRows >=
-        sys.env.get("GRAFT_M4_SEQ_ROWS").map { v =>
-          try v.toLong
-          catch { case e: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"GRAFT_M4_SEQ_ROWS must be a row count (long), got '$v'", e)
-          }
-        }.getOrElse(50000000L)
-    }
+    ordersRows >= M4SequentialRows
+
+  /** [[m4Sequential]]'s threshold: orders rows from which the fork
+    * serves run one at a time. */
+  private val M4SequentialRows = 50000000L
 
   /** Union of the two reorg fork serves under either schedule — see
     * [[m4Sequential]] for when each is chosen.

@@ -38,9 +38,6 @@ object Q {
     */
   def releaseScoped(): Unit = graft.CacheScope.release()
 
-  def noOracle(name: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, run, None)
-
   /** Cross-engine-safe decimal cast for INTERMEDIATE math only (DuckDB
     * and Spark agree on double→decimal rounding off ties; 4 fractional
     * digits keep the 2-dp synthetic money values exact). Final output

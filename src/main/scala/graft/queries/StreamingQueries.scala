@@ -1,11 +1,13 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import graft.Tables.t
 import graft.model.{AddressBalance, LedgerEntry}
-import graft.streaming.{StreamingBalances, StreamingSessions}
+import graft.streaming.{IncrementalIngest, StreamingBalances, StreamingSessions}
 
 /** Streaming↔batch equivalence as DRIVER-CHECKED gate rows (round-3
   * verdict item 7): the driver cannot run a stream, but it can check
@@ -379,10 +381,7 @@ object StreamingQueries {
     "streaming_chain_equiv",
     PipelineQueries.chainOracleSql) { (s, dir) =>
     import s.implicits._
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.streaming.Trigger
     import graft.sinks.BlockRangeSink
-    import graft.streaming.IncrementalIngest
 
     val base = graft.CacheScope.scratchTempDir("graft_chain_stream")
     val feedDir = base.resolve("feed").toString
@@ -394,17 +393,7 @@ object StreamingQueries {
     val (mn, mx) = conf.agg(min($"block"), max($"block"))
       .as[(Long, Long)].head()
 
-    def runOnce(): Unit = {
-      val q = s.readStream.schema(conf.schema).parquet(feedDir)
-        .writeStream
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          IncrementalIngest.ingestFrame(s, b, factsDir); ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    def runOnce(): Unit = ingestDrop(s, conf.schema, feedDir, factsDir, ckpt)
 
     (0L to 3L).foreach { b =>
       // ascending block ranges: (block-mn)*4 div span is 0..3 exactly
@@ -499,10 +488,7 @@ object StreamingQueries {
       |LEFT JOIN pend p ON b.address = p.address
       |ORDER BY b.address, b.propertyId""".stripMargin) { (s, dir) =>
     import s.implicits._
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.streaming.Trigger
     import graft.sinks.BlockRangeSink
-    import graft.streaming.IncrementalIngest
 
     val base = graft.CacheScope.scratchTempDir("graft_reorg_stream")
     val feedDir = base.resolve("feed").toString
@@ -521,17 +507,7 @@ object StreamingQueries {
       .withColumn("amt", $"amt" + 97L)
       .withColumn("pay", $"amt" % 1000L + 1L)
 
-    def runOnce(): Unit = {
-      val q = s.readStream.schema(conf.schema).parquet(feedDir)
-        .writeStream
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          IncrementalIngest.ingestFrame(s, b, factsDir); ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    def runOnce(): Unit = ingestDrop(s, conf.schema, feedDir, factsDir, ckpt)
 
     // 1. original chain, two watermark-gated drops through the stream
     val mid = (mnA + mxA) / 2L
@@ -580,18 +556,14 @@ object StreamingQueries {
   // ---------------------------------------------------------------
 
   /** Run one AvailableNow pass of `stream` with emissions appended to
-    * `outDir`. State-store fan-out at replay scale is 8 partitions
-    * (see balancesEquiv); GRAFT_STREAM_PARTS overrides for scaled
-    * sweeps, where 8 would idle 3/4 of the box.
+    * `outDir`. State-store fan-out is 8 partitions, the replay-scale
+    * count (see balancesEquiv).
     */
-  private def runFileDrop(s: org.apache.spark.sql.SparkSession,
-      stream: org.apache.spark.sql.DataFrame, outDir: String,
+  private def runFileDrop(s: SparkSession,
+      stream: DataFrame, outDir: String,
       ckpt: String, mode: String): Unit = {
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.streaming.Trigger
-    val parts = sys.env.getOrElse("GRAFT_STREAM_PARTS", "8")
     val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", parts)
+    s.conf.set("spark.sql.shuffle.partitions", "8")
     val q =
       try stream.writeStream
         .foreachBatch { (b: DataFrame, _: Long) =>
@@ -602,6 +574,23 @@ object StreamingQueries {
         .trigger(Trigger.AvailableNow())
         .start()
       finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
+    q.awaitTermination()
+  }
+
+  /** One AvailableNow pass of a checkpointed parquet `readStream` over
+    * `feedDir` (schema `schema`), each micro-batch committed to the
+    * facts store `factsDir` by [[IncrementalIngest.ingestFrame]].
+    */
+  private def ingestDrop(s: SparkSession, schema: StructType,
+      feedDir: String, factsDir: String, ckpt: String): Unit = {
+    val q = s.readStream.schema(schema).parquet(feedDir)
+      .writeStream
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        IncrementalIngest.ingestFrame(s, b, factsDir); ()
+      }
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
     q.awaitTermination()
   }
 
@@ -677,7 +666,7 @@ object StreamingQueries {
     val (mn, mx) = e
       .agg(min(expr("unix_micros(ts)")), max(expr("unix_micros(ts)")))
       .as[(Long, Long)].head()
-    def drop(df: org.apache.spark.sql.DataFrame): Unit = {
+    def drop(df: DataFrame): Unit = {
       df.write.mode("append").parquet(feedDir)
       runFileDrop(s,
         StreamingSessions.sessions(

@@ -1,5 +1,8 @@
 package graft.sinks
 
+import java.io.FileNotFoundException
+import java.nio.charset.StandardCharsets
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
@@ -165,11 +168,8 @@ object BlockRangeSink {
     * whose non-atomic create also "succeeded" on S3A/RawLocal).
     */
   private[graft] def stampLock(fs: FileSystem, lock: Path, token: String,
-      overwrite: Boolean): Unit = {
-    val out = fs.create(lock, overwrite)
-    try out.write(token.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+      overwrite: Boolean): Unit =
+    writeText(fs, lock, token, overwrite)
 
   /** Read back the stamp; a mismatch means another creator won the
     * non-atomic create race — fail loudly, leave THEIR lock alone.
@@ -199,17 +199,23 @@ object BlockRangeSink {
     }
 
   private def readLock(fs: FileSystem, lock: Path): Option[String] =
-    try {
-      val in = fs.open(lock)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](512)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        Some(new String(buf.toByteArray,
-          java.nio.charset.StandardCharsets.UTF_8))
-      } finally in.close()
-    } catch { case _: java.io.IOException => None }
+    try Some(readText(fs, lock))
+    catch { case _: java.io.IOException => None }
+
+  /** The whole of the small file `p` as UTF-8 (a lock stamp, a journal). */
+  private def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8)
+    finally in.close()
+  }
+
+  /** Creates `p` holding `text` as UTF-8. */
+  private def writeText(fs: FileSystem, p: Path, text: String,
+      overwrite: Boolean): Unit = {
+    val out = fs.create(p, overwrite)
+    try out.write(text.getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+  }
 
   /** Who holds the writer lock (the owner stamp), if anyone — the
     * operator-facing view for deciding whether [[forceUnlock]] is safe
@@ -249,7 +255,7 @@ object BlockRangeSink {
     * Spark's `agg(max(partitionCol))` is NOT metadata-only by default,
     * so the previous form silently scanned the whole table to learn the
     * max partition), and the in-partition max comes from that single
-    * tail partition's parquet footers ([[tailMax]]). At 100 TB / ~100k
+    * tail partition's parquet footers ([[listedTip]]). At 100 TB / ~100k
     * partitions this is one directory listing plus one partition's
     * footers, never a table pass and, on the common path, no Spark job.
     */
@@ -258,22 +264,17 @@ object BlockRangeSink {
     listedTip(spark, path, stats(path), blockCol)
 
   /** Max of `blockCol` in the table `listing` (a [[stats]] of `path`)
-    * describes: -1 when it lists no range, else [[tailMax]] of its last.
+    * describes: -1 when it lists no range, else the max inside its last
+    * range — the footer answer ([[footerMax]]) when every file's
+    * statistics can give it, else the [[tailMaxProbe]] scan. The choice
+    * follows what the files carry, so stores written without statistics
+    * (or holding null blocks) still answer exactly.
     */
   private[graft] def listedTip(spark: SparkSession, path: String,
       listing: Seq[RangeStats], blockCol: String): Long =
-    listing.lastOption.fold(-1L)(tailMax(spark, path, _, blockCol))
-
-  /** Max of `blockCol` inside the tail range `tail` (the last entry of
-    * a [[stats]] listing): the footer answer ([[footerMax]]) when every
-    * file's statistics can give it, else the [[tailMaxProbe]] scan. The
-    * choice follows what the files carry, so stores written without
-    * statistics (or holding null blocks) still answer exactly.
-    */
-  private[graft] def tailMax(spark: SparkSession, path: String,
-      tail: RangeStats, blockCol: String): Long =
-    footerMax(path, tail, blockCol).getOrElse(
-      tailMaxProbe(spark, path, tail.blockRange, blockCol).head().getLong(0))
+    listing.lastOption.fold(-1L)(tail => footerMax(path, tail, blockCol)
+      .getOrElse(tailMaxProbe(spark, path, tail.blockRange, blockCol)
+        .head().getLong(0)))
 
   /** Max of `blockCol` over range `tail` from parquet row-group
     * statistics alone ([[footerSpans]]): one footer read per file the
@@ -343,7 +344,7 @@ object BlockRangeSink {
     try reader.getFooter finally reader.close()
   }
 
-  /** The scan fallback of [[tailMax]] — factored out so the plan spec
+  /** The scan fallback of [[listedTip]] — factored out so the plan spec
     * can assert (via the scan's own numFiles metric) that it reads
     * exactly the max partition's files and nothing else.
     *
@@ -436,16 +437,8 @@ object BlockRangeSink {
     val (fs, root) = fsFor(path)
     if (!fs.exists(root)) Seq.empty
     else if (fs.makeQualified(root).toUri.getScheme == "file")
-      fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith("blockRange="))
-        .map { d =>
-          RangeStats(d.getPath.getName.stripPrefix("blockRange=").toLong,
-            fs.listStatus(d.getPath).filter(isDataFile).map(fileId)
-              .sortBy(_.name).toSeq)
-        }
-        .filter(_.nFiles > 0)
-        .sortBy(_.blockRange)
+      rangeDirs(fs, root).map { case (r, files) =>
+        RangeStats(r, files.map(fileId)) }
     else {
       val qroot = fs.makeQualified(root)
       val acc = scala.collection.mutable.Map.empty[Long, Vector[FileId]]
@@ -510,8 +503,7 @@ object BlockRangeSink {
       // a new file per partition VALUE), never split them, so a
       // re-run's stats threshold cannot re-flag a compacted range.
       val (fs, root) = fsFor(path)
-      val opId = java.util.UUID.randomUUID().toString
-      val stageDir = new Path(root, s"$PendingDirName/$opId")
+      val (opId, stageDir) = newStage(root)
       val nOf = todo.map(st => st.blockRange -> targetFiles(st.bytes, targetBytes)).toMap
       val totalSlots = nOf.values.sum
       val nMapCol = map(nOf.toSeq.flatMap { case (r, n) =>
@@ -525,7 +517,7 @@ object BlockRangeSink {
         .repartition(totalSlots, col("blockRange"), col("__slot"))
         .drop("__slot")
         .write.partitionBy("blockRange").parquet(stageDir.toString)
-      val staged = stagedRanges(fs, stageDir)
+      val staged = rangeDirs(fs, stageDir)
       // converge or fail loudly: a flagged range that staged nothing
       // (e.g. its files hold zero rows) would keep its old files, and
       // stats would re-flag it on every later cycle
@@ -575,14 +567,22 @@ object BlockRangeSink {
     * → no-op, nothing kept → directory delete, both → a rewrite of the
     * whole range's kept rows, dropping every listed file.
     *
+    * Returns the tip the rollback leaves ([[listedTip]], what a
+    * [[watermark]] read right after it gives), decided inside the same
+    * lock hold: the ranges below the fork's are as the one listing saw
+    * them (nothing else mutates under the lock), every range above it is
+    * gone, and the fork range is re-listed with one `listStatus` of its
+    * directory (absent when the rollback deleted it).
+    *
     * At 100 TB a reorg costs one listing, the fork range's footers, at
-    * most the straddling files' read + rewrite, and metadata deletes —
-    * never a table pass. Idempotent: a crashed/re-run rollback finds the
-    * higher ranges and files already gone and the straddlers already
-    * split (a no-op), or completes the journaled rewrite on recovery.
+    * most the straddling files' read + rewrite, metadata deletes, and the
+    * fork directory's re-list — never a table pass. Idempotent: a
+    * crashed/re-run rollback finds the higher ranges and files already
+    * gone and the straddlers already split (a no-op), or completes the
+    * journaled rewrite on recovery.
     */
   def dropAbove(spark: SparkSession, path: String, fork: Long,
-      blockCol: String = "block"): Unit = withWriterLock(path) {
+      blockCol: String = "block"): Long = withWriterLock(path) {
     val forkRange = fork / RangeSize
     val all = stats(path)
     all.filter(_.blockRange > forkRange).reverse
@@ -612,6 +612,13 @@ object BlockRangeSink {
           }
       }
     }
+    val (fs, root) = fsFor(path)
+    val forkFiles =
+      try dataFiles(fs, new Path(root, s"blockRange=$forkRange")).map(fileId)
+      catch { case _: FileNotFoundException => Nil }
+    val left = all.filter(_.blockRange < forkRange) ++
+      (if (forkFiles.isEmpty) Nil else Seq(RangeStats(forkRange, forkFiles)))
+    listedTip(spark, path, left, blockCol)
   }
 
   /** (rows above `fork`, rows at or below it) of the fork range — one
@@ -698,8 +705,7 @@ object BlockRangeSink {
     val listing = stats(path)
     val tip = listedTip(rows.sparkSession, path, listing, blockCol)
     val (fs, root) = fsFor(path)
-    val opId = java.util.UUID.randomUUID().toString
-    val stageDir = new Path(root, s"$PendingDirName/$opId")
+    val (opId, stageDir) = newStage(root)
     // Cluster the staged rows by range before the partitioned write
     // (guide §6: file sizing / REBALANCE-before-write). Unclustered,
     // every task writes one file into every range it holds — T×R files
@@ -713,7 +719,7 @@ object BlockRangeSink {
       .withColumn("blockRange", expr(s"$blockCol div $RangeSize"))
       .hint("rebalance", col("blockRange"))
       .write.partitionBy("blockRange").parquet(stageDir.toString)
-    val staged = stagedRanges(fs, stageDir)
+    val staged = rangeDirs(fs, stageDir)
     val conf = hadoopConf
     val admitted = staged.flatMap(_._2)
       .map(st => readFooter(conf, st).getBlocks.asScala.map(_.getRowCount).sum).sum
@@ -750,8 +756,7 @@ object BlockRangeSink {
   private def rewriteRange(path: String, range: Long, rows: DataFrame,
       drops: Seq[FileId]): Unit = {
     val (fs, root) = fsFor(path)
-    val opId = java.util.UUID.randomUUID().toString
-    val stageDir = new Path(root, s"$PendingDirName/$opId")
+    val (opId, stageDir) = newStage(root)
     publishAndReplay(fs, root, opId, Seq(stageRewrite(fs, stageDir, opId,
       range, rows, targetFiles(drops.map(_.length).sum), drops.map(_.name))))
   }
@@ -771,17 +776,25 @@ object BlockRangeSink {
       moves(opId, rel, range, dataFiles(fs, new Path(stageDir, rel))))
   }
 
-  /** The `blockRange=<r>` directories a partitioned staging write left
-    * under `stageDir`, ascending, each with its data files. */
-  private def stagedRanges(fs: FileSystem,
-      stageDir: Path): Seq[(Long, Seq[FileStatus])] =
-    fs.listStatus(stageDir).toSeq
+  /** A fresh op id and its stage directory `_graft_pending/<opId>`. */
+  private def newStage(root: Path): (String, Path) = {
+    val opId = java.util.UUID.randomUUID().toString
+    (opId, new Path(root, s"$PendingDirName/$opId"))
+  }
+
+  /** The `blockRange=<r>` directories directly under `dir` (a table root,
+    * or the stage of a partitioned write) that hold data files,
+    * ascending, each with its [[dataFiles]]. */
+  private def rangeDirs(fs: FileSystem,
+      dir: Path): Seq[(Long, Seq[FileStatus])] =
+    fs.listStatus(dir).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("blockRange="))
       .map(d => d.getPath.getName.stripPrefix("blockRange=").toLong ->
         dataFiles(fs, d.getPath))
       .filter(_._2.nonEmpty)
       .sortBy(_._1)
 
+  /** The data files directly in `dir`, sorted by name. */
   private def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
     fs.listStatus(dir).toSeq.filter(isDataFile).sortBy(_.getPath.getName)
 
@@ -837,9 +850,7 @@ object BlockRangeSink {
     }).mkString("\n")
     val journal = new Path(root, s"$JournalDirName/$opId")
     val tmp = new Path(root, s"$JournalDirName/.$opId.tmp")
-    val out = fs.create(tmp, false)
-    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    writeText(fs, tmp, content, overwrite = false)
     if (!fs.rename(tmp, journal))
       throw new java.io.IOException(
         s"publishAndReplay: could not publish journal $journal")
@@ -857,17 +868,7 @@ object BlockRangeSink {
     */
   private def replayJournal(fs: FileSystem, root: Path,
       journal: Path): Unit = {
-    val content = {
-      val in = fs.open(journal)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](4096)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-      } finally in.close()
-    }
-    val lines = content.split("\n").toSeq
+    val lines = readText(fs, journal).split("\n").toSeq
     val version = lines.headOption.getOrElse("<empty>")
     require(Set("v1", "v2", "v3")(version),
       s"replayJournal: unknown journal version in $journal: $version")

@@ -25,7 +25,9 @@ import graft.sinks.BlockRangeSink
   * ANY prefix (every range is committed before a watermark covering it
   * can be observed). An existing file is never read or rewritten,
   * except when an append would take the tail range past the sink's
-  * file cap; sealed ranges are never touched.
+  * file cap; sealed ranges are never touched. A rollback ([[reorg]]) is
+  * likewise one sink call and one lock hold, which also returns the tip
+  * the follower resumes from.
   */
 object IncrementalIngest {
 
@@ -69,18 +71,17 @@ object IncrementalIngest {
 
   /** Reorg under the ingest lifecycle (reference omniEngine.py main
     * loop: a tip-hash mismatch triggers reorgRollback(fork) and the
-    * follower resumes syncing from fork+1). The storage truncation is
+    * follower resumes syncing from fork+1). One sink call,
     * [[BlockRangeSink.dropAbove]] — physical, reads only the fork
-    * range, idempotent — after which [[BlockRangeSink.watermark]] reads
-    * ≤ fork and the NEXT [[ingest]]/[[ingestFrame]] cycle admits the winning
+    * range, idempotent — whose one writer-lock hold truncates the store
+    * and decides the tip it leaves (≤ fork), with one listing of the
+    * store. The NEXT [[ingest]]/[[ingestFrame]] cycle admits the winning
     * branch's blocks through the exact same watermark gate as normal
     * sync (no special re-admission path to get wrong). Returns the
     * post-rollback watermark.
     */
-  def reorg(spark: SparkSession, factsDir: String, fork: Long): Long = {
+  def reorg(spark: SparkSession, factsDir: String, fork: Long): Long =
     BlockRangeSink.dropAbove(spark, factsDir, fork)
-    BlockRangeSink.watermark(spark, factsDir)
-  }
 
   /** Re-derive all state from the facts store (the reference's
     * per-block derived-table updates, done as one deterministic batch),

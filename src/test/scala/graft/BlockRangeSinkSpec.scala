@@ -360,6 +360,53 @@ class BlockRangeSinkSpec extends SparkTestBase {
     assert(rows == (1L to 1350L))
   }
 
+  test("dropAbove returns the tip it leaves: a watermark read right after " +
+      "it gives the same, for every rollback shape") {
+    def frame(lo: Long, hi: Long) =
+      (lo to hi).map(b => (b, s"tx$b")).toDF("block", "txid")
+    def table(name: String) =
+      Files.createTempDirectory(s"graft_sink_tip_$name").toString
+    def check(dir: String, fork: Long, expected: Long): Unit = {
+      val tip = BlockRangeSink.dropAbove(spark, dir, fork)
+      assert(tip == BlockRangeSink.watermark(spark, dir),
+        s"fork $fork: dropAbove returned $tip, the watermark then read " +
+          BlockRangeSink.watermark(spark, dir))
+      assert(tip == expected, s"fork $fork: tip $tip, expected $expected")
+    }
+
+    // range 1 holds [1000..1200] [1201..1500] [1501..1800], one file
+    // each, and range 2 is above them
+    val files = table("files")
+    BlockRangeSink.write(frame(1L, 1200L), files)
+    Seq((1201L, 1500L), (1501L, 1800L)).foreach { case (lo, hi) =>
+      frame(lo, hi).coalesce(1).write.mode("append")
+        .parquet(s"$files/blockRange=1")
+    }
+    BlockRangeSink.write(frame(2000L, 2400L), files)
+    check(files, 1500L, 1500L) // range 2 and [1501..1800] deleted
+    check(files, 1350L, 1350L) // [1201..1500] straddles: rewritten
+    check(files, 5000L, 1350L) // above the tip: nothing to drop
+
+    // range 2 holds only blocks above the fork: it goes, and the tip
+    // comes from range 1
+    val gap = table("gap")
+    BlockRangeSink.write(frame(1L, 1500L).union(frame(2500L, 3500L)), gap)
+    check(gap, 2100L, 1500L)
+    check(gap, -1L, -1L) // below every block: the store empties
+
+    // a tail without statistics: the tip comes from the scan
+    val noStats = table("nostats")
+    BlockRangeSink.write(frame(1L, 1999L), noStats)
+    Seq((2001L, "a"), (2777L, "b"), (2100L, "c")).toDF("block", "txid")
+      .write.option("parquet.column.statistics.enabled", "false")
+      .parquet(s"$noStats/blockRange=2")
+    assert(BlockRangeSink.footerMax(noStats,
+      BlockRangeSink.stats(noStats).last, "block").isEmpty)
+    check(noStats, 3500L, 2777L) // fork range never existed
+    check(noStats, 2900L, 2777L) // fork in the tail, nothing above it
+    check(noStats, 2500L, 2100L) // forkSplit rewrite of the tail
+  }
+
   test("footer watermark equals the scan (INT64, INT32, multi-file tail); " +
       "no-statistics and null-block tails fall back to the scan") {
     def check(dir: String, expected: Long, fromFooter: Boolean): Unit = {

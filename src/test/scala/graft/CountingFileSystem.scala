@@ -8,7 +8,7 @@ import org.apache.hadoop.util.Progressable
 
 /** Counting-FS test double (r11 verdict ask #4): a `countfs://` scheme
   * over the local filesystem that records every `open`, `create` and
-  * `delete` path and counts CLIENT-level listing calls —
+  * `delete` path and counts and records CLIENT-level listing calls —
   * what [[graft.sinks.BlockRangeSink.stats]] pays the metadata store
   * per invocation. Hadoop's generic `listFiles(recursive = true)` is
   * implemented as an internal per-directory walk on local FS, so the
@@ -21,7 +21,9 @@ class CountingFileSystem extends RawLocalFileSystem {
   override def getUri: URI = URI.create("countfs:///")
 
   override def listStatus(f: Path): Array[FileStatus] =
-    CountingFileSystem.counted { super.listStatus(f).map(sanitize) }
+    CountingFileSystem.counted(f, recursive = false) {
+      super.listStatus(f).map(sanitize)
+    }
 
   /** RawLocal's lazy statuses load permissions via `new File(uri)`,
     * which rejects the countfs:// scheme — copy to a plain FileStatus
@@ -51,7 +53,7 @@ class CountingFileSystem extends RawLocalFileSystem {
 
   override def listFiles(f: Path, recursive: Boolean)
       : RemoteIterator[LocatedFileStatus] =
-    CountingFileSystem.counted {
+    CountingFileSystem.counted(f, recursive) {
       // drain the lazy walk here so its per-subdir listings stay inside
       // the reentrancy guard (they are implementation detail of ONE
       // client call, and on a real object store they are one LIST)
@@ -72,10 +74,11 @@ object CountingFileSystem {
     override def initialValue(): java.lang.Boolean = java.lang.Boolean.FALSE
   }
 
-  def counted[T](body: => T): T =
+  def counted[T](f: Path, recursive: Boolean)(body: => T): T =
     if (inCall.get()) body
     else {
       calls.incrementAndGet()
+      listed.add((f.toUri.getPath, recursive))
       inCall.set(java.lang.Boolean.TRUE)
       try body finally inCall.set(java.lang.Boolean.FALSE)
     }
@@ -87,6 +90,10 @@ object CountingFileSystem {
   val created = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   val deleted = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
+  /** (path, recursive) of every client-level listing call since the last
+    * [[reset]], in call order — one entry per [[calls]] increment. */
+  val listed = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]()
+
   /** Runs with the path of every `open`, before the file is opened — a
     * seam for acting in the middle of an operation. [[reset]] clears it.
     */
@@ -97,6 +104,7 @@ object CountingFileSystem {
     opened.clear()
     created.clear()
     deleted.clear()
+    listed.clear()
     onOpen = _ => ()
   }
 }

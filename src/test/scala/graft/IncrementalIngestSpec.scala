@@ -265,6 +265,29 @@ class IncrementalIngestSpec extends SparkTestBase {
       keys(history.filter(_.block <= fork) ++ branch))
   }
 
+  test("a reorg lists the store once, inside its lock, and returns the " +
+      "tip a watermark read then gives") {
+    import graft.sinks.BlockRangeSink
+    import scala.jdk.CollectionConverters._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countfs.impl", classOf[CountingFileSystem].getName)
+    val local = Files.createTempDirectory("graft_reorg_listing").toString
+    val dir = "countfs://" + local
+    val history = grant(A, A, BigDecimal("1000"), block = 1) +:
+      (1 until 12).map(i => simpleSend(A, B, BigDecimal(i), block = i * 250L))
+    IncrementalIngest.ingest(spark, spark.createDataset(history), dir)
+    CountingFileSystem.reset()
+    // fork 1600: range 2 goes, range 1 keeps 1000..1500
+    val (tip, recursive) =
+      try (IncrementalIngest.reorg(spark, dir, 1600L),
+        CountingFileSystem.listed.asScala.toSeq.filter(_._2).map(_._1))
+      finally CountingFileSystem.reset()
+    assert(recursive == Seq(local),
+      s"the reorg made recursive listings $recursive; one of the table root expected")
+    assert(tip == 1500L && BlockRangeSink.watermark(spark, dir) == tip,
+      s"reorg returned $tip")
+  }
+
   test("raw JSON source round-trips the RawTx schema (S2/S3)") {
     val dir = Files.createTempDirectory("graft_raw").toString
     val txs = Seq(
