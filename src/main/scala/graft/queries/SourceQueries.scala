@@ -165,11 +165,12 @@ object SourceQueries {
   }
 
   /** S8 — the per-block atomic sink as a GATE: facts flow through
-    * [[graft.sinks.BlockRangeSink]] (idempotent dynamic-partition
-    * overwrite, the reference's per-block Postgres transaction
-    * omniEngine.py:210 re-expressed for object storage), a tail batch
-    * is deliberately RE-RUN (the crashed-batch recovery path — must add
-    * nothing), partitions are compacted, and the read-back content is
+    * [[graft.sinks.BlockRangeSink]] (one journaled commit per write that
+    * replaces exactly the ranges the batch holds, the reference's
+    * per-block Postgres transaction omniEngine.py:210 re-expressed for
+    * object storage), a tail batch is deliberately RE-RUN (the
+    * crashed-batch re-run — must add nothing), partitions are
+    * compacted, and the read-back content is
     * checked against a relational oracle over the same facts. The
     * n_files column pins the compaction invariant — exactly one file
     * per partition at an unbounded byte target — so a sink that
@@ -195,7 +196,7 @@ object SourceQueries {
         round($"value" * 100).cast(LongType).as("cents"))
     BlockRangeSink.write(facts, path)
     // crashed-batch recovery: re-run the batch owning the watermark's
-    // partition — dynamic overwrite rewrites it in place, adding nothing
+    // range — the write replaces that range whole, adding nothing
     val wm = BlockRangeSink.watermark(s, path)
     BlockRangeSink.write(
       facts.where(expr(s"block div ${BlockRangeSink.RangeSize}")

@@ -12,54 +12,52 @@ import org.apache.parquet.hadoop.metadata.ColumnPath
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType, Type}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** S8 — the per-block atomic commit (reference omniEngine.py:210: one
-  * Postgres transaction per block; rollback on failure :212-220),
-  * re-expressed as idempotent partition overwrite:
+  * Postgres transaction per block, rollback on failure :212-220; and a
+  * reorg rolled back inside one transaction, sql.py:85-218),
+  * re-expressed as one journaled commit per mutation:
   *
   * Facts are written partitioned by `blockRange = block div rangeSize`.
-  * A batch covering blocks [a, b] rewrites exactly the partitions it
-  * owns (dynamic partition overwrite), so a re-run of a failed batch is
-  * idempotent — the Spark analog of the reference's per-block
-  * transaction, and the unit of reorg truncation (drop partitions >
-  * fork, rewrite the fork partition).
+  * Every mutation — [[write]], [[appendRanges]], [[compact]] and
+  * [[dropAbove]] — stages its new files under the table's own
+  * `_graft_pending/` and then publishes ONE journal
+  * ([[publishAndReplay]]) naming every live file it drops, every range
+  * it drops whole and every staged file it moves in. The range is the
+  * unit of overwrite, of append and of reorg truncation.
   *
   * At 100 TB, blockRange is also the pruning key: incremental runs and
   * reorg checks touch only the tail partitions.
   *
-  * All metadata operations (watermark probe, stats, partition deletes,
-  * the writer lock) go through the Hadoop `FileSystem` API resolved
-  * from the path + the session's hadoopConfiguration — the same code
-  * path works against `file://`, HDFS, or an S3A table root; nothing
-  * here assumes a local filesystem.
+  * All metadata operations (watermark probe, stats, the journal's
+  * deletes and renames, the writer lock) go through the Hadoop
+  * `FileSystem` API resolved from the path + the session's
+  * hadoopConfiguration — the same code path works against `file://`,
+  * HDFS, or an S3A table root; nothing here assumes a local filesystem.
   *
-  * Crash consistency — every mutation is recoverable from ANY crash
-  * prefix: [[write]] by re-running the batch (dynamic overwrite
-  * rewrites every touched partition from source), [[appendRanges]],
-  * [[compact]] and [[dropAbove]]'s rewrite through the journaled
-  * pending-swap protocol of [[publishAndReplay]] (the new files are
-  * durable parquet under the table's own `_graft_pending/` before
-  * anything is destroyed, and a `_graft_journal/` record naming every
-  * file dropped and moved makes the swap replayable), and
-  * [[dropAbove]]'s file and directory deletes by re-running it.
-  * Recovery lives in the writer lock itself: [[withWriterLock]] runs it
-  * right after taking the lock, before any mutation's body, so every
-  * mutation starts from a clean table ([[recoverTable]] is the bare
-  * lock); CrashRecoverySpec model-checks every mutation prefix over
-  * object-store semantics.
+  * Crash consistency — one contract for every mutation: the journal's
+  * publish is its commit point. A crash before it has destroyed nothing
+  * (the next recovery sweeps the stage, and the table is as it was); a
+  * crash after it is completed by the next recovery's replay. So from
+  * ANY crash prefix, recovery alone leaves either the pre-mutation
+  * table or the never-crashed one. Recovery lives in the writer lock
+  * itself: [[withWriterLock]] runs it right after taking the lock,
+  * before any mutation's body, so every mutation starts from a clean
+  * table ([[recoverTable]] is the bare lock); CrashRecoverySpec
+  * model-checks every mutation prefix over object-store semantics.
   *
   * Mutation concurrency — SINGLE WRITER (reference M10,
-  * omniEngine.py:11-36: one lockfile around the whole engine):
-  * [[write]], [[compact]] and [[dropAbove]] rewrite partitions, which
-  * is safe against a CRASH of the same logical operation but not
-  * against a CONCURRENT different one (a cron'd compactor racing a
-  * reorg rollback could resurrect a dropped partition), and
-  * [[appendRanges]] admits rows by the tip it reads (a rollback between
-  * that read and the commit would leave the winning branch's blocks
-  * below the old tip unadmitted). Each therefore runs whole inside ONE
-  * hold of a sink-level writer lock — create-no-overwrite of `_graft_writer.lock`
+  * omniEngine.py:11-36: one lockfile around the whole engine): every
+  * mutation decides what its journal drops from a listing it takes, and
+  * [[appendRanges]] admits rows by the tip it reads, so a CONCURRENT
+  * different mutation between that read and the commit would be undone
+  * or resurrected (a cron'd compactor racing a reorg rollback could
+  * bring back a dropped range; a rollback between a tick's tip read and
+  * its commit would leave the winning branch's blocks below the old tip
+  * unadmitted). Each therefore runs whole inside ONE hold of a
+  * sink-level writer lock — create-no-overwrite of `_graft_writer.lock`
   * under the table root, plus an owner stamp (host/pid/nonce) that is
   * read back before the mutation runs, so even on stores where the
   * create itself is NOT atomic (S3A's HEAD-then-PUT, RawLocal's
@@ -235,14 +233,25 @@ object BlockRangeSink {
     fs.delete(new Path(root, LockName), false)
   }
 
+  /** Replaces every range `df` holds rows of with exactly those rows and
+    * leaves every other range as it was, so re-running a batch that owns
+    * its ranges adds nothing. The rows are staged once, partitioned by
+    * range, under `_graft_pending/<opId>/`; one journal
+    * ([[publishAndReplay]]) then drops, in each staged range, the files
+    * one [[stats]] listing shows there and moves the staged files in —
+    * one commit point for every range of the batch.
+    */
   def write(df: DataFrame, path: String, blockCol: String = "block"): Unit =
     withWriterLock(path) {
+      val live = stats(path).map(st => st.blockRange -> st.files.map(_.name)).toMap
+      val (fs, root) = fsFor(path)
+      val (opId, stageDir) = newStage(root)
       df.withColumn("blockRange", expr(s"$blockCol div $RangeSize"))
-        .write
-        .partitionBy("blockRange")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode(SaveMode.Overwrite)
-        .parquet(path)
+        .write.partitionBy("blockRange").parquet(stageDir.toString)
+      publishAndReplay(fs, root, opId, rangeDirs(fs, stageDir).map {
+        case (r, files) => Section(r, Some(live.getOrElse(r, Nil)),
+          moves(opId, s"blockRange=$r", r, files))
+      })
     }
 
   def read(spark: SparkSession, path: String): DataFrame =
@@ -418,9 +427,9 @@ object BlockRangeSink {
     *    min-fold at sf0.1) when it replaced the loop unconditionally.
     *
     * Recursive arm semantics: only files sitting DIRECTLY in a
-    * root-level `blockRange=` dir count — in-flight commit attempts
-    * nest the partition dir under `_temporary/...`, and the depth
-    * check keeps them (and any `_graft_checkpoint/` snapshot files)
+    * root-level `blockRange=` dir count — in-flight commits stage their
+    * range dirs under `_graft_pending/<opId>/`, and the depth check
+    * keeps them (and any `_graft_checkpoint/` snapshot files)
     * invisible, as the top-level-dirs-only loop is by construction. A
     * partition dir holding zero data files is NOT reported by EITHER
     * arm (the recursive listing never sees it; the local loop filters
@@ -535,84 +544,81 @@ object BlockRangeSink {
     todo.map(_.blockRange)
   }
 
-  /** M4 — reorg truncation at the storage layer: keep facts ≤ fork. */
-  def truncateTo(spark: SparkSession, path: String, fork: Long,
-      blockCol: String = "block"): DataFrame =
-    read(spark, path).where(col(blockCol) <= fork)
-
   /** M4 under streaming — PHYSICAL reorg rollback (reference
     * reorgRollback sql.py:85-218: DELETE every derived row with
-    * blocknumber > fork inside one transaction). [[truncateTo]] is the
-    * read-side filter; a long-lived facts store must also drop the
-    * orphaned bytes, or the next [[watermark]] still reads the orphaned
-    * tip and [[graft.streaming.IncrementalIngest]] silently REJECTS the
-    * winning branch (it admits only blocks > watermark).
+    * blocknumber > fork inside one transaction). A long-lived facts
+    * store must drop the orphaned bytes, or the next [[watermark]] still
+    * reads the orphaned tip and [[graft.streaming.IncrementalIngest]]
+    * silently REJECTS the winning branch (it admits only blocks >
+    * watermark).
     *
-    * File-granular and tail-bounded: one listing of the store ([[stats]])
-    * finds the ranges; every range above the fork's is removed as an
-    * `fs.delete(partitionDir)`, highest first, with no data read. In the
-    * fork range each listed file's block (min, max) comes from its parquet
-    * footer ([[footerSpans]], the checks [[footerMax]] applies): a file
-    * wholly above the fork is deleted, one wholly at or below it is kept,
-    * and only the files straddling the fork are read — their kept rows
-    * go to [[targetFiles]] files through one journal that names those
-    * files as its drops. Deletes run from the highest block down, so a
-    * crash prefix only ever lowers the tip. A rollback of rows an
-    * [[appendRanges]] commit added (files wholly above the fork) runs no
-    * Spark job at all.
+    * File-granular and tail-bounded, and ONE journal
+    * ([[publishAndReplay]]) like every other mutation: one listing of
+    * the store ([[stats]]) finds the ranges, and every range above the
+    * fork's is dropped whole, with no data read. In the fork range each
+    * listed file's block (min, max) comes from its parquet footer
+    * ([[footerSpans]], the checks [[footerMax]] applies): a file wholly
+    * above the fork is dropped, one wholly at or below it is kept, and
+    * only the files straddling the fork are read — they are dropped too,
+    * and their kept rows are staged as [[targetFiles]] files that the
+    * same section moves in. A rollback of rows an [[appendRanges]]
+    * commit added (files wholly above the fork) runs no Spark job at
+    * all. When nothing lies above the fork it publishes nothing.
     *
     * When the footers cannot answer (see [[footerSpans]]), one
     * aggregate over the fork range's own directory ([[forkSplit]]: rows
-    * above the fork, rows at or below it) picks the action: nothing above
-    * → no-op, nothing kept → directory delete, both → a rewrite of the
-    * whole range's kept rows, dropping every listed file.
+    * above the fork, rows at or below it) picks the fork range's section:
+    * nothing above → none, nothing kept → the whole range dropped, both →
+    * every listed file dropped and the range's kept rows moved in.
     *
     * Returns the tip the rollback leaves ([[listedTip]], what a
     * [[watermark]] read right after it gives), decided inside the same
     * lock hold: the ranges below the fork's are as the one listing saw
     * them (nothing else mutates under the lock), every range above it is
     * gone, and the fork range is re-listed with one `listStatus` of its
-    * directory (absent when the rollback deleted it).
+    * directory (absent when the rollback dropped it).
     *
     * At 100 TB a reorg costs one listing, the fork range's footers, at
-    * most the straddling files' read + rewrite, metadata deletes, and the
-    * fork directory's re-list — never a table pass. Idempotent: a
-    * crashed/re-run rollback finds the higher ranges and files already
-    * gone and the straddlers already split (a no-op), or completes the
-    * journaled rewrite on recovery.
+    * most the straddling files' read + rewrite, the journal's metadata
+    * deletes, and the fork directory's re-list — never a table pass.
+    * Idempotent: a re-run finds nothing above the fork and publishes
+    * nothing.
     */
   def dropAbove(spark: SparkSession, path: String, fork: Long,
       blockCol: String = "block"): Long = withWriterLock(path) {
+    val (fs, root) = fsFor(path)
+    val (opId, stageDir) = newStage(root)
     val forkRange = fork / RangeSize
+    def dropRange(r: Long) = Section(r, Some(Seq(DropAll)), Nil)
+    // moves in the rows of `rows` at or below the fork, staged as
+    // compact's file count for `from`, the files they are read from
+    def keptRows(from: Seq[FileId], rows: DataFrame) =
+      stageRewrite(fs, stageDir, opId, forkRange,
+        rows.where(col(blockCol) <= fork), targetFiles(from.map(_.length).sum))
     val all = stats(path)
-    all.filter(_.blockRange > forkRange).reverse
-      .foreach(st => deleteOrFail(path, s"blockRange=${st.blockRange}"))
-    all.find(_.blockRange == forkRange).foreach { st =>
+    val forkSection = all.find(_.blockRange == forkRange).flatMap { st =>
       footerSpans(path, st, blockCol) match {
         case Some(spans) =>
-          val above = spans.filter(_._2 > fork)
+          val above = spans.filter(_._2 > fork).map(_._1)
           val straddling = spans.filter(s => s._2 <= fork && s._3 > fork).map(_._1)
-          if (above.size == spans.size) deleteOrFail(path, s"blockRange=$forkRange")
-          else {
-            above.sortBy(-_._3).foreach(s =>
-              deleteOrFail(path, s"blockRange=$forkRange/${s._1.name}"))
-            if (straddling.nonEmpty)
-              rewriteRange(path, forkRange, spark.read
-                .parquet(straddling.map(filePath(path, forkRange, _)): _*)
-                .where(col(blockCol) <= fork), straddling)
-          }
+          if (above.size == spans.size) Some(dropRange(forkRange))
+          else if (above.isEmpty && straddling.isEmpty) None
+          else Some(Section(forkRange, Some((above ++ straddling).map(_.name)),
+            if (straddling.isEmpty) Nil
+            else keptRows(straddling, spark.read.parquet(
+              straddling.map(filePath(path, forkRange, _)): _*))))
         case None =>
           val part = rangeRows(spark, path, forkRange)
           val split = forkSplit(part, fork, blockCol).head()
           val (above, kept) = (split.getLong(0), split.getLong(1))
-          if (above > 0) {
-            if (kept == 0) deleteOrFail(path, s"blockRange=$forkRange")
-            else rewriteRange(path, forkRange,
-              part.where(col(blockCol) <= fork), st.files)
-          }
+          if (above == 0) None
+          else if (kept == 0) Some(dropRange(forkRange))
+          else Some(Section(forkRange, Some(st.files.map(_.name)),
+            keptRows(st.files, part)))
       }
     }
-    val (fs, root) = fsFor(path)
+    publishAndReplay(fs, root, opId, forkSection.toSeq ++
+      all.filter(_.blockRange > forkRange).map(st => dropRange(st.blockRange)))
     val forkFiles =
       try dataFiles(fs, new Path(root, s"blockRange=$forkRange")).map(fileId)
       catch { case _: FileNotFoundException => Nil }
@@ -627,22 +633,6 @@ object BlockRangeSink {
   private[graft] def forkSplit(part: DataFrame, fork: Long,
       blockCol: String): DataFrame =
     part.agg(count_if(col(blockCol) > fork), count_if(col(blockCol) <= fork))
-
-  /** Deletes the file or range directory `rel` of the table. A swallowed
-    * failed delete here is the silent-rejection failure mode dropAbove
-    * exists to prevent: the orphaned tip would keep feeding watermark()
-    * and the ingest gate would reject the winning branch forever. Fail
-    * loudly instead.
-    */
-  private def deleteOrFail(path: String, rel: String): Unit = {
-    val (fs, root) = fsFor(path)
-    val p = new Path(root, rel)
-    if (fs.exists(p) && !fs.delete(p, /* recursive = */ true)) {
-      throw new java.io.IOException(
-        s"dropAbove: could not delete $p — aborting rollback so the " +
-          "orphaned rows are not silently retained above the fork")
-    }
-  }
 
   // ---- crash-recoverable commits (pending + journal + swap) ----
 
@@ -690,15 +680,6 @@ object BlockRangeSink {
     * them are (replay completes the moves), and the re-run's admit
     * filter re-admits exactly the uncommitted remainder: convergent
     * from any prefix.
-    *
-    * Why not [[write]]'s dynamic overwrite: its crash contract is
-    * "re-run the SAME batch", but an ingest re-run is NOT the same batch
-    * — the admit filter moves with the watermark. A crashed overwrite
-    * commit can delete an old tail partition before its replacement
-    * lands, LOWERING the watermark; the re-run then re-admits from a feed
-    * that no longer carries the deleted historical rows, and they are
-    * gone (CrashRecoverySpec's ingest-cycle sweep caught exactly this at
-    * one prefix — round 13).
     */
   def appendRanges(rows: DataFrame, path: String,
       blockCol: String = "block"): Long = withWriterLock(path) {
@@ -723,60 +704,41 @@ object BlockRangeSink {
     val conf = hadoopConf
     val admitted = staged.flatMap(_._2)
       .map(st => readFooter(conf, st).getBlocks.asScala.map(_.getRowCount).sum).sum
-    if (staged.isEmpty) {
-      fs.delete(stageDir, true)
-      deleteIfEmpty(fs, stageDir.getParent)
-    } else {
-      val live = listing.map(st => st.blockRange -> st.files).toMap
-      val sections = staged.map { case (r, files) =>
-        val old = live.getOrElse(r, Nil)
-        if (old.size + files.size <= MaxFiles)
-          Section(r, Some(Nil), moves(opId, s"blockRange=$r", r, files))
-        else {
-          val spark = rows.sparkSession
-          val fresh = spark.read.parquet(files.map(_.getPath.toString): _*)
-          val merged =
-            if (old.isEmpty) fresh
-            else spark.read.parquet(old.map(filePath(path, r, _)): _*)
-              .unionByName(fresh)
-          stageRewrite(fs, stageDir, opId, r, merged,
-            targetFiles(old.map(_.length).sum + files.map(_.getLen).sum),
-            old.map(_.name))
-        }
+    val live = listing.map(st => st.blockRange -> st.files).toMap
+    publishAndReplay(fs, root, opId, staged.map { case (r, files) =>
+      val old = live.getOrElse(r, Nil)
+      if (old.size + files.size <= MaxFiles)
+        Section(r, Some(Nil), moves(opId, s"blockRange=$r", r, files))
+      else {
+        val spark = rows.sparkSession
+        val fresh = spark.read.parquet(files.map(_.getPath.toString): _*)
+        val merged =
+          if (old.isEmpty) fresh
+          else spark.read.parquet(old.map(filePath(path, r, _)): _*)
+            .unionByName(fresh)
+        Section(r, Some(old.map(_.name)), stageRewrite(fs, stageDir, opId, r,
+          merged, targetFiles(old.map(_.length).sum + files.map(_.getLen).sum)))
       }
-      publishAndReplay(fs, root, opId, sections)
-    }
+    })
     admitted
   }
 
-  /** Replaces the live files `drops` of range `range` with `rows` (which
-    * may read FROM them), in [[targetFiles]] of their bytes, through one
-    * journal.
-    */
-  private def rewriteRange(path: String, range: Long, rows: DataFrame,
-      drops: Seq[FileId]): Unit = {
-    val (fs, root) = fsFor(path)
-    val (opId, stageDir) = newStage(root)
-    publishAndReplay(fs, root, opId, Seq(stageRewrite(fs, stageDir, opId,
-      range, rows, targetFiles(drops.map(_.length).sum), drops.map(_.name))))
-  }
-
   /** Stages `rows` of range `range` as at most `nFiles` files under
-    * `<stageDir>/rewrite/blockRange=<range>/` and returns the section
-    * that replaces the live files `drops` with them. `blockRange` rides
-    * in the directory name, never in the files — the layout [[write]]'s
-    * partitionBy produces.
+    * `<stageDir>/rewrite/blockRange=<range>/` and returns the moves that
+    * bring them into the range. `blockRange` rides in the directory
+    * name, never in the files — the layout [[write]]'s partitionBy
+    * produces.
     */
   private def stageRewrite(fs: FileSystem, stageDir: Path, opId: String,
-      range: Long, rows: DataFrame, nFiles: Int, drops: Seq[String]): Section = {
+      range: Long, rows: DataFrame, nFiles: Int): Seq[(String, String)] = {
     val rel = s"rewrite/blockRange=$range"
     rows.drop("blockRange").coalesce(nFiles).write
       .parquet(new Path(stageDir, rel).toString)
-    Section(range, Some(drops),
-      moves(opId, rel, range, dataFiles(fs, new Path(stageDir, rel))))
+    moves(opId, rel, range, dataFiles(fs, new Path(stageDir, rel)))
   }
 
-  /** A fresh op id and its stage directory `_graft_pending/<opId>`. */
+  /** A fresh op id and its stage directory `_graft_pending/<opId>`
+    * (created only by a write into it). */
   private def newStage(root: Path): (String, Path) = {
     val opId = java.util.UUID.randomUUID().toString
     (opId, new Path(root, s"$PendingDirName/$opId"))
@@ -808,15 +770,25 @@ object BlockRangeSink {
 
   /** One range's part of a journal: the live files it drops and the
     * staged → target renames that move its new files in. `drops` is
-    * `None` only in a legacy `v1`/`v2` journal, whose sections replace
-    * the whole range: there every file not among the targets is dropped.
+    * `Some(Seq(DropAll))` for a range dropped whole (such a section moves
+    * nothing in), and `None` only in a legacy `v1`/`v2` journal, whose
+    * sections replace the whole range: there every file not among the
+    * targets is dropped.
     */
   private final case class Section(range: Long, drops: Option[Seq[String]],
       moves: Seq[(String, String)])
 
+  /** The `drop=` record of a whole-range drop (no data file is named
+    * `*`): its replay deletes the range's directory in one recursive
+    * delete, listing nothing, so a rollback's cost stays flat in the
+    * number of ranges it drops and no empty directory is left behind.
+    */
+  private val DropAll = "*"
+
   /** Publishes one `v3` journal for `sections` and replays it — steps 2-4
     * of the commit protocol; step 1, staging every new file under
-    * `_graft_pending/<opId>/`, is the caller's:
+    * `_graft_pending/<opId>/`, is the caller's. With no section it
+    * publishes nothing and only sweeps the stage.
     *
     *  1. **Stage** — pure addition; the live ranges are untouched and
     *     the new files are durable on the TABLE'S OWN store before
@@ -828,11 +800,14 @@ object BlockRangeSink {
     *     `range=<r>`, one `drop=<file name>` per live file the section
     *     removes, and one `file=<staged path>\t<target name>` per move.
     *     An append section drops nothing; a whole-range replace names
-    *     every listed file.
-    *  3. **Swap** — per section, delete the dropped files, then rename
-    *     each staged file to its target. Every step is idempotent
-    *     (delete-if-present, skip-if-target-exists), so the swap can be
-    *     REDONE from any prefix.
+    *     every listed file; a range dropped whole is the one record
+    *     `drop=*` ([[DropAll]]) and moves nothing.
+    *  3. **Swap** — per section, delete the dropped files (or the
+    *     range's directory), then rename each staged file to its target.
+    *     Every step is idempotent (delete-if-present,
+    *     skip-if-target-exists), so the swap can be REDONE from any
+    *     prefix; a delete the store refuses fails the replay and leaves
+    *     the journal for the next recovery.
     *  4. **Clean** — delete the journal (commit point), then the stage.
     *
     * A crash before 2 destroys nothing (orphan stages are swept by
@@ -843,19 +818,21 @@ object BlockRangeSink {
     * range; the single-writer lock serializes mutators, not readers.
     */
   private def publishAndReplay(fs: FileSystem, root: Path, opId: String,
-      sections: Seq[Section]): Unit = {
-    val content = (Seq("v3", s"pending=$opId") ++ sections.flatMap { s =>
-      s"range=${s.range}" +: (s.drops.getOrElse(Nil).map(d => s"drop=$d") ++
-        s.moves.map { case (f, t) => s"file=$f\t$t" })
-    }).mkString("\n")
-    val journal = new Path(root, s"$JournalDirName/$opId")
-    val tmp = new Path(root, s"$JournalDirName/.$opId.tmp")
-    writeText(fs, tmp, content, overwrite = false)
-    if (!fs.rename(tmp, journal))
-      throw new java.io.IOException(
-        s"publishAndReplay: could not publish journal $journal")
-    replayJournal(fs, root, journal)
-  }
+      sections: Seq[Section]): Unit =
+    if (sections.isEmpty) cleanStage(fs, new Path(root, s"$PendingDirName/$opId"))
+    else {
+      val content = (Seq("v3", s"pending=$opId") ++ sections.flatMap { s =>
+        s"range=${s.range}" +: (s.drops.getOrElse(Nil).map(d => s"drop=$d") ++
+          s.moves.map { case (f, t) => s"file=$f\t$t" })
+      }).mkString("\n")
+      val journal = new Path(root, s"$JournalDirName/$opId")
+      val tmp = new Path(root, s"$JournalDirName/.$opId.tmp")
+      writeText(fs, tmp, content, overwrite = false)
+      if (!fs.rename(tmp, journal))
+        throw new java.io.IOException(
+          s"publishAndReplay: could not publish journal $journal")
+      replayJournal(fs, root, journal)
+    }
 
   /** Redo the swap recorded in `journal` from whatever prefix of it
     * already happened, then clean up. Idempotent; safe to re-run after
@@ -906,14 +883,20 @@ object BlockRangeSink {
     // dirs themselves once empty — mkdirs markers/parents outlive
     // their children on object stores and POSIX alike)
     fs.delete(journal, false)
-    fs.delete(pendingOp, true)
     deleteIfEmpty(fs, journal.getParent)
+    cleanStage(fs, pendingOp)
+  }
+
+  /** Deletes the stage `pendingOp`, and `_graft_pending/` once empty. */
+  private def cleanStage(fs: FileSystem, pendingOp: Path): Unit = {
+    fs.delete(pendingOp, true)
     deleteIfEmpty(fs, pendingOp.getParent)
   }
 
   /** One section's swap: drop the old files, move the staged files in.
     * Every step idempotent (delete-if-present, skip-if-target-exists),
-    * so any prefix can be redone.
+    * so any prefix can be redone. This is the only code that deletes or
+    * moves a live data file.
     */
   private def swapRange(fs: FileSystem, root: Path, pendingOp: Path,
       journal: Path, s: Section): Unit = {
@@ -921,15 +904,16 @@ object BlockRangeSink {
     // 3a. drop the old files (skip what an earlier attempt already
     // dropped; never touch the new files' target names)
     s.drops match {
+      case Some(Seq(DropAll)) => deleteLive(fs, partDir, recursive = true)
       case Some(names) =>
-        names.foreach(n => fs.delete(new Path(partDir, n), false))
+        names.foreach(n => deleteLive(fs, new Path(partDir, n), recursive = false))
         if (s.moves.nonEmpty && !fs.exists(partDir)) fs.mkdirs(partDir)
       case None =>
         val targets = s.moves.map(_._2).toSet
         if (fs.exists(partDir))
           fs.listStatus(partDir)
             .filter(f => f.isFile && !targets.contains(f.getPath.getName))
-            .foreach(f => fs.delete(f.getPath, false))
+            .foreach(f => deleteLive(fs, f.getPath, recursive = false))
         else fs.mkdirs(partDir)
     }
     // 3b. move the new files in (skip files already in place)
@@ -949,6 +933,18 @@ object BlockRangeSink {
     }
   }
 
+  /** Deletes `p` if present. A delete the store refuses fails the replay
+    * while its journal is still there: swallowed, the dropped file would
+    * stay live beside its replacement (every row twice after a compact)
+    * or above the fork (the orphaned tip would keep feeding [[watermark]]
+    * and the ingest gate would reject the winning branch), and the next
+    * recovery could not retry it.
+    */
+  private def deleteLive(fs: FileSystem, p: Path, recursive: Boolean): Unit =
+    if (!fs.delete(p, recursive) && fs.exists(p))
+      throw new java.io.IOException(s"replayJournal: the store refused to " +
+        s"delete $p — the journal stays for the next recovery to retry")
+
   private def deleteIfEmpty(fs: FileSystem, dir: Path): Unit =
     try {
       if (fs.exists(dir) && fs.listStatus(dir).isEmpty)
@@ -956,13 +952,11 @@ object BlockRangeSink {
     } catch { case _: java.io.FileNotFoundException => () }
 
   /** Bring the table to a clean state after a crashed mutation: replay
-    * any journaled in-flight swaps (completing the crashed rewrite),
-    * then sweep scratch a crashed Spark job left behind — orphan
-    * `_graft_pending/` generations that never journaled (nothing
-    * destructive happened; the live partition is intact) and
-    * `.spark-staging-*`/`_temporary` dirs from a crashed [[write]]
-    * commit (whose recovery contract is re-running the batch: dynamic
-    * overwrite rewrites every touched partition from source).
+    * any journaled in-flight swap (completing the crashed commit), then
+    * sweep orphan `_graft_pending/` stages that never journaled (nothing
+    * destructive happened; the live ranges are intact). From any crash
+    * prefix this alone leaves the table either as it was before the
+    * crashed mutation or as that mutation would have left it.
     * [[withWriterLock]] runs it at the start of every mutation; this is
     * that lock with no mutation inside, for operators who want recovery
     * alone (e.g. before a read-side audit after [[forceUnlock]]).
@@ -982,10 +976,5 @@ object BlockRangeSink {
     deleteIfEmpty(fs, journalRoot)
     val pendingRoot = new Path(root, PendingDirName)
     if (fs.exists(pendingRoot)) fs.delete(pendingRoot, true)
-    fs.listStatus(root)
-      .filter(s => s.isDirectory &&
-        (s.getPath.getName.startsWith(".spark-staging-") ||
-          s.getPath.getName == "_temporary"))
-      .foreach(s => fs.delete(s.getPath, true))
   }
 }

@@ -22,11 +22,10 @@ class BlockRangeSinkSpec extends SparkTestBase {
     val retry = (1000L to 1500L).map(b => (b, s"tx$b")).toDF("block", "txid")
     BlockRangeSink.write(retry, dir)
     assert(BlockRangeSink.read(spark, dir).count() == 1500L)
-    // range 0 (blocks 1..999) untouched by the dynamic overwrite
+    // range 0 (blocks 1..999) untouched: the write replaces only the
+    // ranges it holds rows of
     assert(BlockRangeSink.read(spark, dir)
       .where($"blockRange" === 0L).count() == 999L)
-
-    assert(BlockRangeSink.truncateTo(spark, dir, 1200L).count() == 1200L)
   }
 
   test("dropAbove physically truncates the tail: partition dirs removed, " +
@@ -53,9 +52,9 @@ class BlockRangeSinkSpec extends SparkTestBase {
 
     // the winning branch re-syncs through the ordinary ingest gate —
     // NOT raw write(): the branch straddles the kept partition (range 1
-    // holds 1000..1200), and a direct dynamic-overwrite write would
-    // clobber those kept rows; ingestFrame's affected-range union is
-    // the contract that preserves them
+    // holds 1000..1200), and a direct write, which replaces every range
+    // it holds rows of, would clobber those kept rows; ingestFrame's
+    // append is the contract that preserves them
     val branch = (1201L to 2100L).map(b => (b, s"alt$b")).toDF("block", "txid")
     assert(graft.streaming.IncrementalIngest.ingestFrame(
       spark, branch, dir) == 900L)
@@ -452,6 +451,31 @@ class BlockRangeSinkSpec extends SparkTestBase {
       Seq((Some(2001L), "a"), (None, "b"), (Some(2500L), "c"))
         .toDF("block", "txid"))
     check(nullBlock, 2500L, fromFooter = false)
+  }
+
+  test("a delete the store refuses fails the commit and leaves its " +
+      "journal; recovery then completes it without duplicating a row") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countfs.impl", classOf[CountingFileSystem].getName)
+    val local = Files.createTempDirectory("graft_sink_refuse").toString
+    val dir = s"countfs://$local"
+    BlockRangeSink.write((1L to 2000L).map(b => (b, s"tx$b"))
+      .toDF("block", "txid").repartition(4), local)
+    val rows = BlockRangeSink.read(spark, local).count()
+    assert(BlockRangeSink.stats(local).exists(_.nFiles > 1), "fixture not fragmented")
+    CountingFileSystem.reset()
+    CountingFileSystem.refuseDelete = _.startsWith(s"$local/blockRange=")
+    try intercept[java.io.IOException](BlockRangeSink.compact(spark, dir))
+    finally CountingFileSystem.reset()
+    val journals = new java.io.File(local, BlockRangeSink.JournalDirName).list()
+    assert(journals != null && journals.exists(!_.startsWith(".")),
+      "the refused compact deleted its journal")
+    assert(BlockRangeSink.lockOwner(local).isEmpty)
+
+    BlockRangeSink.recoverTable(dir)
+    assert(BlockRangeSink.read(spark, local).count() == rows)
+    assert(BlockRangeSink.stats(local).forall(_.nFiles == 1))
+    assert(!new java.io.File(local, BlockRangeSink.JournalDirName).exists())
   }
 
   test("compact fails loudly when a flagged range stages no rows, and " +

@@ -48,7 +48,7 @@ class CountingFileSystem extends RawLocalFileSystem {
 
   override def delete(f: Path, recursive: Boolean): Boolean = {
     CountingFileSystem.deleted.add(f.toUri.getPath)
-    super.delete(f, recursive)
+    !CountingFileSystem.refuseDelete(f.toUri.getPath) && super.delete(f, recursive)
   }
 
   override def listFiles(f: Path, recursive: Boolean)
@@ -99,6 +99,12 @@ object CountingFileSystem {
     */
   @volatile var onOpen: String => Unit = _ => ()
 
+  /** Whether the store refuses the `delete` of a path: a refused delete
+    * removes nothing and returns false, as a store that turned the
+    * request down would. [[reset]] clears it.
+    */
+  @volatile var refuseDelete: String => Boolean = _ => false
+
   def reset(): Unit = {
     calls.set(0)
     opened.clear()
@@ -106,5 +112,6 @@ object CountingFileSystem {
     deleted.clear()
     listed.clear()
     onOpen = _ => ()
+    refuseDelete = _ => false
   }
 }

@@ -9,20 +9,22 @@ import graft.sinks.BlockRangeSink
   * kills the store at the k-th mutating request — the k-th itself is
   * refused, everything after fails — leaving exactly the state a
   * crashed writer leaves on a real object store. For EVERY sampled
-  * prefix k of every lifecycle operation, the documented recovery
-  * (reboot → `forceUnlock` if the lock was orphaned → re-run the
-  * operation, which replays any `_graft_journal` entry first) must
-  * converge to the bit-level state of the never-crashed run, with zero
-  * journal/pending/staging residue and no lock left behind.
+  * prefix k of every lifecycle operation, two recoveries are checked
+  * (reboot → `forceUnlock` if the lock was orphaned → then):
   *
-  * This is the property the r12 design could NOT give: compact /
-  * dropAbove went through dynamic-partition overwrite, whose job
-  * commit deletes the live partition before renaming the staged one
-  * in, while the snapshot that could restore it was freed on the
-  * failure path — a crash in that window lost the partition
-  * unrecoverably. The journaled pending-swap protocol
-  * (BlockRangeSink.rewritePartition) closes it; this spec is the
-  * evidence, including crashes DURING recovery itself.
+  *  - `recoverTable` alone, which replays any `_graft_journal` entry and
+  *    sweeps the stage, must leave either the pre-op state or the
+  *    never-crashed one — all or nothing, the reference's one
+  *    transaction per block and per reorg rollback;
+  *  - re-running the operation (recovery runs first, inside it) must
+  *    converge to the bit-level state of the never-crashed run.
+  *
+  * Both must leave zero journal/pending/staging residue and no lock.
+  * Every mutation commits through the same journaled pending-swap
+  * protocol (`BlockRangeSink.publishAndReplay`: the new files are
+  * durable under `_graft_pending/` and the journal names every drop and
+  * move before anything is destroyed); this spec is the evidence,
+  * including crashes DURING recovery itself.
   *
   * CI runs a strided slice of prefixes per operation; GRAFT_CRASH_SOAK=1
   * sweeps every prefix (the full model check, run once per round).
@@ -100,8 +102,8 @@ class CrashRecoverySpec extends SparkTestBase {
     // this cycle crash-convergent (round 13 found exactly that: a
     // crashed overwrite commit that had deleted the old tail partition
     // left a LOWER watermark and a feed that no longer carried the
-    // deleted rows — blocks lost; hence ingest now runs through the
-    // journaled ascending per-range rewrite)
+    // deleted rows — blocks lost; hence ingest commits through the
+    // journal)
     MutOp("ingest-cycle",
       setup = dir => BlockRangeSink.write(frame(1 to 2500), dir),
       run = dir => {
@@ -225,6 +227,53 @@ class CrashRecoverySpec extends SparkTestBase {
         "— the injection never fired, the sweep was vacuous")
       info(s"${op.name}: M=$m mutations, ${prefixes(m).size} prefixes, " +
         s"$crashed crashed+recovered")
+    }
+
+  for (op <- ops)
+    test(s"${op.name}: recovery alone leaves the pre-op or the " +
+        "never-crashed state at every sampled crash prefix") {
+      val bucket = s"crash-alone-${op.name}"
+      def dir = s"objfs://$bucket/facts"
+      ObjectStoreFileSystem.clearOutage()
+      ObjectStoreFileSystem.resetBucket(bucket)
+      op.setup(dir)
+      val state0 = ObjectStoreFileSystem.snapshotBucket(bucket)
+      // content and files per range: a compaction changes only the latter
+      def state = (content(dir),
+        BlockRangeSink.stats(dir).map(st => (st.blockRange, st.nFiles)))
+      val pre = state
+      ObjectStoreFileSystem.resetMutationCount()
+      op.run(dir)
+      val m = ObjectStoreFileSystem.mutationCount
+      val expected = state
+      assert(expected != pre, s"${op.name}: the op changed nothing")
+
+      var crashed = 0
+      var rolledBack = 0
+      try {
+        for (k <- prefixes(m)) {
+          ObjectStoreFileSystem.restoreBucket(bucket, state0)
+          ObjectStoreFileSystem.injectOutageAfter(k)
+          try op.run(dir) catch { case _: Throwable => crashed += 1 }
+          ObjectStoreFileSystem.clearOutage()
+          if (BlockRangeSink.lockOwner(dir).nonEmpty) BlockRangeSink.forceUnlock(dir)
+          BlockRangeSink.recoverTable(dir)
+          val got = state
+          assert(got == pre || got == expected,
+            s"${op.name}: recovery alone from prefix $k left neither the " +
+              "pre-op nor the never-crashed state")
+          if (got == pre) rolledBack += 1
+          assert(residue(dir).isEmpty,
+            s"${op.name}: residue after recovery from prefix $k: " +
+              residue(dir).mkString(", "))
+          assert(BlockRangeSink.lockOwner(dir).isEmpty,
+            s"${op.name}: lock left behind after recovery from prefix $k")
+        }
+      } finally ObjectStoreFileSystem.clearOutage()
+      assert(crashed > 0, s"${op.name}: no sampled prefix crashed the op " +
+        "— the injection never fired, the sweep was vacuous")
+      info(s"${op.name}: M=$m mutations, ${prefixes(m).size} prefixes, " +
+        s"$crashed crashed, $rolledBack recovered to the pre-op state")
     }
 
   test("crash DURING recovery: a second store death mid-replay still " +

@@ -139,9 +139,6 @@ class FullReorgSpec extends SparkTestBase {
   }
 
   test("m4 auto schedule flips sequential exactly at the row threshold") {
-    // CI runs with GRAFT_M4_FORKS unset, so this exercises the auto arm.
-    assume(sys.env.get("GRAFT_M4_FORKS").isEmpty
-      && sys.env.get("GRAFT_M4_SEQ_ROWS").isEmpty)
     assert(!queries.PipelineQueries.m4Sequential(50000000L - 1))
     assert(queries.PipelineQueries.m4Sequential(50000000L))
   }
