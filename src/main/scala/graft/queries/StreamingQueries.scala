@@ -420,7 +420,7 @@ object StreamingQueries {
     * proves the STORAGE lifecycle: the original chain is ingested
     * through the checkpointed stream, the fork physically truncates
     * the facts store ([[graft.sinks.BlockRangeSink.dropAbove]] — one
-    * journal that drops the tail ranges and rewrites the straddling
+    * commit that drops the tail ranges and rewrites the straddling
     * files, called TWICE to pin idempotence), the watermark falls back to ≤ fork,
     * and the competing branch (same heights, different payloads:
     * amt+97, pay re-derived) is admitted by the SAME watermark gate as

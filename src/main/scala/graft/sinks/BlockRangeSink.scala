@@ -2,6 +2,7 @@ package graft.sinks
 
 import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets
+import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
@@ -25,8 +26,10 @@ import org.apache.spark.sql.functions._
   * [[dropAbove]] — stages its new files under the table's own
   * `_graft_pending/` and then publishes ONE journal
   * ([[publishAndReplay]]) naming every live file it drops, every range
-  * it drops whole and every staged file it moves in. The range is the
-  * unit of overwrite, of append and of reorg truncation.
+  * it drops whole and every staged file it moves in. A rollback that
+  * moves nothing in needs no journal: its whole intent is its fork,
+  * which its writer-lock stamp already carries. The range is the unit
+  * of overwrite, of append and of reorg truncation.
   *
   * At 100 TB, blockRange is also the pruning key: incremental runs and
   * reorg checks touch only the tail partitions.
@@ -40,9 +43,12 @@ import org.apache.spark.sql.functions._
   * Crash consistency — one contract for every mutation: the journal's
   * publish is its commit point. A crash before it has destroyed nothing
   * (the next recovery sweeps the stage, and the table is as it was); a
-  * crash after it is completed by the next recovery's replay. So from
-  * ANY crash prefix, recovery alone leaves either the pre-mutation
-  * table or the never-crashed one. Recovery lives in the writer lock
+  * crash after it is completed by the next recovery's replay. A
+  * journal-less rollback commits when its lock is stamped: a crash
+  * after that leaves the stamp, [[forceUnlock]] journals the fork it
+  * names, and recovery redoes the rollback. So from ANY crash prefix,
+  * recovery alone leaves either the pre-mutation table or the
+  * never-crashed one. Recovery lives in the writer lock
   * itself: [[withWriterLock]] runs it right after taking the lock,
   * before any mutation's body, so every mutation starts from a clean
   * table ([[recoverTable]] is the bare lock); CrashRecoverySpec
@@ -116,12 +122,17 @@ object BlockRangeSink {
     * Every holder starts with [[recoverLocked]] — outstanding journals
     * replayed, orphan scratch swept — before `body`, so no mutation can
     * skip recovery and `body` sees a clean table for its whole run.
+    *
+    * A `rollback` record ([[rollbackRecord]]) rides in the stamp, on its
+    * own newline-terminated line, so [[forceUnlock]] can journal a
+    * crashed holder's rollback.
     */
-  private def withWriterLock[T](path: String)(body: => T): T = {
+  private def withWriterLock[T](path: String,
+      rollback: Option[String] = None)(body: => T): T = {
     val (fs, root) = fsFor(path)
     if (!fs.exists(root)) fs.mkdirs(root)
     val lock = new Path(root, LockName)
-    val token = newLockToken()
+    val token = newLockToken() + rollback.fold("")(r => s"\n$r\n")
     try stampLock(fs, lock, token, overwrite = false)
     catch {
       case e: java.io.IOException =>
@@ -140,13 +151,10 @@ object BlockRangeSink {
     try { recoverLocked(path); body }
     catch { case t: Throwable => bodyFailure = t; throw t }
     finally {
+      // don't mask the body's own failure with the release failure
       try releaseLock(fs, lock, token)
-      catch {
-        case r: Throwable =>
-          // don't mask the body's own failure with the release failure
-          if (bodyFailure != null) bodyFailure.addSuppressed(r)
-          else throw r
-      }
+      catch { case r: Throwable =>
+        if (bodyFailure != null) bodyFailure.addSuppressed(r) else throw r }
     }
   }
 
@@ -158,7 +166,7 @@ object BlockRangeSink {
       try java.net.InetAddress.getLocalHost.getHostName
       catch { case _: Exception => "unknown-host" }
     s"$host pid=${ProcessHandle.current().pid()} " +
-      s"nonce=${java.util.UUID.randomUUID()} ts=${System.currentTimeMillis()}"
+      s"nonce=${UUID.randomUUID()} ts=${System.currentTimeMillis()}"
   }
 
   /** Create the lock file carrying `token`. `overwrite = true` exists
@@ -226,11 +234,17 @@ object BlockRangeSink {
 
   /** Clear a writer lock orphaned by a crashed mutator. Deliberate,
     * named recovery — never called implicitly; check [[lockOwner]]
-    * first.
+    * first. When the stamp names a rollback (a whole line, so never a
+    * torn one), that rollback is first published as a journal, and the
+    * next recovery redoes it ([[replayJournal]]).
     */
   def forceUnlock(path: String): Boolean = {
     val (fs, root) = fsFor(path)
-    fs.delete(new Path(root, LockName), false)
+    val lock = new Path(root, LockName)
+    readLock(fs, lock).filter(_.endsWith("\n"))
+      .flatMap(_.split("\n").find(Rollback.matches))
+      .foreach(r => publish(fs, root, s"rollback-${UUID.randomUUID()}", Seq("v4", r)))
+    fs.delete(lock, false)
   }
 
   /** Replaces every range `df` holds rows of with exactly those rows and
@@ -552,10 +566,10 @@ object BlockRangeSink {
     * silently REJECTS the winning branch (it admits only blocks >
     * watermark).
     *
-    * File-granular and tail-bounded, and ONE journal
-    * ([[publishAndReplay]]) like every other mutation: one listing of
-    * the store ([[stats]]) finds the ranges, and every range above the
-    * fork's is dropped whole, with no data read. In the fork range each
+    * File-granular and tail-bounded, and ONE all-or-nothing commit like
+    * every other mutation: one listing of the store ([[stats]]) finds
+    * the ranges, and every range above the fork's is dropped whole, with
+    * no data read. In the fork range each
     * listed file's block (min, max) comes from its parquet footer
     * ([[footerSpans]], the checks [[footerMax]] applies): a file wholly
     * above the fork is dropped, one wholly at or below it is kept, and
@@ -564,6 +578,16 @@ object BlockRangeSink {
     * same section moves in. A rollback of rows an [[appendRanges]]
     * commit added (files wholly above the fork) runs no Spark job at
     * all. When nothing lies above the fork it publishes nothing.
+    *
+    * Only a rollback that moves staged rows in publishes a journal. One
+    * that only drops (whole ranges, files wholly above the fork) swaps
+    * directly: its intent record is the fork in its lock stamp
+    * ([[withWriterLock]]), and a redo from the fork drops exactly what is
+    * still above it. A crash mid-swap leaves the stamp for
+    * [[forceUnlock]] to journal; a swap that fails (a refused delete)
+    * journals the rollback itself before it rethrows. Either way the next
+    * recovery completes it, so the object store sees no write beyond the
+    * lock stamp on this path.
     *
     * When the footers cannot answer (see [[footerSpans]]), one
     * aggregate over the fork range's own directory ([[forkSplit]]: rows
@@ -579,13 +603,25 @@ object BlockRangeSink {
     * directory (absent when the rollback dropped it).
     *
     * At 100 TB a reorg costs one listing, the fork range's footers, at
-    * most the straddling files' read + rewrite, the journal's metadata
-    * deletes, and the fork directory's re-list — never a table pass.
+    * most the straddling files' read + rewrite, the metadata deletes,
+    * and the fork directory's re-list — never a table pass.
     * Idempotent: a re-run finds nothing above the fork and publishes
     * nothing.
     */
   def dropAbove(spark: SparkSession, path: String, fork: Long,
-      blockCol: String = "block"): Long = withWriterLock(path) {
+      blockCol: String = "block"): Long =
+    withWriterLock(path, Some(rollbackRecord(fork, blockCol))) {
+      rollbackLocked(spark, path, fork, blockCol) }
+
+  /** The `rollback=<fork>\t<blockCol>` record of a rollback: in its lock
+    * stamp, and alone in a `v4` journal that asks recovery to redo it. */
+  private def rollbackRecord(fork: Long, blockCol: String) = s"rollback=$fork\t$blockCol"
+
+  private val Rollback = "rollback=(-?\\d+)\t(.+)".r
+
+  /** [[dropAbove]]'s body, under a lock the caller holds. */
+  private def rollbackLocked(spark: SparkSession, path: String, fork: Long,
+      blockCol: String): Long = {
     val (fs, root) = fsFor(path)
     val (opId, stageDir) = newStage(root)
     val forkRange = fork / RangeSize
@@ -617,8 +653,14 @@ object BlockRangeSink {
             keptRows(st.files, part)))
       }
     }
-    publishAndReplay(fs, root, opId, forkSection.toSeq ++
-      all.filter(_.blockRange > forkRange).map(st => dropRange(st.blockRange)))
+    val sections = forkSection.toSeq ++
+      all.filter(_.blockRange > forkRange).map(st => dropRange(st.blockRange))
+    if (sections.exists(_.moves.nonEmpty)) publishAndReplay(fs, root, opId, sections)
+    else try sections.foreach(swapRange(fs, root, stageDir, _))
+    catch { case t: Throwable =>
+      try publish(fs, root, s"rollback-$opId", Seq("v4", rollbackRecord(fork, blockCol)))
+      catch { case p: Throwable => t.addSuppressed(p) }
+      throw t }
     val forkFiles =
       try dataFiles(fs, new Path(root, s"blockRange=$forkRange")).map(fileId)
       catch { case _: FileNotFoundException => Nil }
@@ -740,7 +782,7 @@ object BlockRangeSink {
   /** A fresh op id and its stage directory `_graft_pending/<opId>`
     * (created only by a write into it). */
   private def newStage(root: Path): (String, Path) = {
-    val opId = java.util.UUID.randomUUID().toString
+    val opId = UUID.randomUUID().toString
     (opId, new Path(root, s"$PendingDirName/$opId"))
   }
 
@@ -785,7 +827,7 @@ object BlockRangeSink {
     */
   private val DropAll = "*"
 
-  /** Publishes one `v3` journal for `sections` and replays it — steps 2-4
+  /** Publishes one `v4` journal for `sections` and replays it — steps 2-4
     * of the commit protocol; step 1, staging every new file under
     * `_graft_pending/<opId>/`, is the caller's. With no section it
     * publishes nothing and only sweeps the stage.
@@ -796,7 +838,7 @@ object BlockRangeSink {
     *  2. **Journal** — ONE object `_graft_journal/<opId>`, written via
     *     temp + rename so it is never visible truncated (all-or-nothing
     *     on POSIX renames and on object stores, where the PUT itself is
-    *     atomic). Form: `v3`, `pending=<opId>`, then per range
+    *     atomic). Form: `v4`, `pending=<opId>`, then per range
     *     `range=<r>`, one `drop=<file name>` per live file the section
     *     removes, and one `file=<staged path>\t<target name>` per move.
     *     An append section drops nothing; a whole-range replace names
@@ -820,35 +862,46 @@ object BlockRangeSink {
   private def publishAndReplay(fs: FileSystem, root: Path, opId: String,
       sections: Seq[Section]): Unit =
     if (sections.isEmpty) cleanStage(fs, new Path(root, s"$PendingDirName/$opId"))
-    else {
-      val content = (Seq("v3", s"pending=$opId") ++ sections.flatMap { s =>
+    else replayJournal(fs, root, publish(fs, root, opId,
+      Seq("v4", s"pending=$opId") ++ sections.flatMap { s =>
         s"range=${s.range}" +: (s.drops.getOrElse(Nil).map(d => s"drop=$d") ++
           s.moves.map { case (f, t) => s"file=$f\t$t" })
-      }).mkString("\n")
-      val journal = new Path(root, s"$JournalDirName/$opId")
-      val tmp = new Path(root, s"$JournalDirName/.$opId.tmp")
-      writeText(fs, tmp, content, overwrite = false)
-      if (!fs.rename(tmp, journal))
-        throw new java.io.IOException(
-          s"publishAndReplay: could not publish journal $journal")
-      replayJournal(fs, root, journal)
-    }
+      }))
+
+  /** Writes the journal `_graft_journal/<name>` holding `lines` via temp +
+    * rename, so it is never visible truncated, and returns its path. */
+  private def publish(fs: FileSystem, root: Path, name: String,
+      lines: Seq[String]): Path = {
+    val journal = new Path(root, s"$JournalDirName/$name")
+    val tmp = new Path(root, s"$JournalDirName/.$name.tmp")
+    writeText(fs, tmp, lines.mkString("\n"), overwrite = false)
+    if (!fs.rename(tmp, journal))
+      throw new java.io.IOException(s"publish: could not publish journal $journal")
+    journal
+  }
 
   /** Redo the swap recorded in `journal` from whatever prefix of it
     * already happened, then clean up. Idempotent; safe to re-run after
-    * its own crash. Every new journal is `v3` ([[publishAndReplay]]).
-    * The legacy forms still replay, so a table left mid-commit by an
-    * older build recovers: `v1` (one range; staged names relative to the
-    * recorded pending dir) and `v2` (many ranges; staged names relative
-    * to the shared stage, `blockRange=<r>/` included), whose sections
-    * carry no `drop=` records and replace their whole range.
+    * its own crash. Every new journal is `v4`: a swap
+    * ([[publishAndReplay]]) or one `rollback=` record ([[forceUnlock]],
+    * [[dropAbove]]), which is redone by running the rollback's body
+    * ([[rollbackLocked]]) and then deleted. The `v4` tag keeps an older
+    * build, which knows no whole-range drop, from replaying one. The
+    * legacy forms still replay, so a table left mid-commit by an older
+    * build recovers: `v3` (sections that name each dropped file), `v1`
+    * (one range; staged names relative to the recorded pending dir) and
+    * `v2` (many ranges; staged names relative to the shared stage,
+    * `blockRange=<r>/` included), whose sections carry no `drop=`
+    * records and replace their whole range.
     */
   private def replayJournal(fs: FileSystem, root: Path,
       journal: Path): Unit = {
     val lines = readText(fs, journal).split("\n").toSeq
     val version = lines.headOption.getOrElse("<empty>")
-    require(Set("v1", "v2", "v3")(version),
+    require(Set("v1", "v2", "v3", "v4")(version),
       s"replayJournal: unknown journal version in $journal: $version")
+    val redo = lines.collectFirst { case Rollback(fork, col) => (fork.toLong, col) }
+    for ((f, c) <- redo) rollbackLocked(SparkSession.active, root.toString, f, c)
     val pendingRel = lines.collectFirst {
       case l if l.startsWith("pending=") => l.stripPrefix("pending=")
     }.getOrElse(journal.getName)
@@ -863,9 +916,9 @@ object BlockRangeSink {
     lines.foreach {
       case l if l.startsWith("range=") =>
         sections += Section(l.stripPrefix("range=").toLong,
-          if (version == "v3") Some(Nil) else None, Nil)
+          if (version >= "v3") Some(Nil) else None, Nil)
       case l if l.startsWith("drop=") =>
-        require(version == "v3", s"replayJournal: drop record in a " +
+        require(version >= "v3", s"replayJournal: drop record in a " +
           s"$version journal $journal")
         val s = current(l)
         sections.update(sections.size - 1,
@@ -876,9 +929,9 @@ object BlockRangeSink {
         sections.update(sections.size - 1, s.copy(moves = s.moves :+ (f, t)))
       case _ => ()
     }
-    if (sections.isEmpty) throw new java.io.IOException(
-      s"replayJournal: no range record in $journal")
-    sections.foreach(swapRange(fs, root, pendingOp, journal, _))
+    if (sections.isEmpty && redo.isEmpty) throw new java.io.IOException(
+      s"replayJournal: no range or rollback record in $journal")
+    sections.foreach(swapRange(fs, root, pendingOp, _))
     // 4. commit point, then scratch cleanup (including the protocol
     // dirs themselves once empty — mkdirs markers/parents outlive
     // their children on object stores and POSIX alike)
@@ -899,7 +952,7 @@ object BlockRangeSink {
     * moves a live data file.
     */
   private def swapRange(fs: FileSystem, root: Path, pendingOp: Path,
-      journal: Path, s: Section): Unit = {
+      s: Section): Unit = {
     val partDir = new Path(root, s"blockRange=${s.range}")
     // 3a. drop the old files (skip what an earlier attempt already
     // dropped; never touch the new files' target names)
@@ -923,7 +976,7 @@ object BlockRangeSink {
         val stagedFile = new Path(pendingOp, stagedName)
         if (!fs.exists(stagedFile))
           throw new java.io.IOException(
-            s"replayJournal: $journal names $stagedFile but neither it " +
+            s"replayJournal: the journal names $stagedFile but neither it " +
               s"nor $target exists — the staged files are gone; " +
               "refusing to commit a partial partition")
         if (!fs.rename(stagedFile, target))
@@ -933,28 +986,27 @@ object BlockRangeSink {
     }
   }
 
-  /** Deletes `p` if present. A delete the store refuses fails the replay
-    * while its journal is still there: swallowed, the dropped file would
-    * stay live beside its replacement (every row twice after a compact)
-    * or above the fork (the orphaned tip would keep feeding [[watermark]]
-    * and the ingest gate would reject the winning branch), and the next
-    * recovery could not retry it.
+  /** Deletes `p` if present. A delete the store refuses fails the swap
+    * while its journal (or rollback record) is still there: swallowed,
+    * the dropped file would stay live beside its replacement (every row
+    * twice after a compact) or above the fork (the orphaned tip would
+    * keep feeding [[watermark]] and the ingest gate would reject the
+    * winning branch), and the next recovery could not retry it.
     */
   private def deleteLive(fs: FileSystem, p: Path, recursive: Boolean): Unit =
     if (!fs.delete(p, recursive) && fs.exists(p))
-      throw new java.io.IOException(s"replayJournal: the store refused to " +
-        s"delete $p — the journal stays for the next recovery to retry")
+      throw new java.io.IOException(s"swapRange: the store refused to " +
+        s"delete $p — the next recovery retries it")
 
   private def deleteIfEmpty(fs: FileSystem, dir: Path): Unit =
-    try {
-      if (fs.exists(dir) && fs.listStatus(dir).isEmpty)
-        fs.delete(dir, false)
-    } catch { case _: java.io.FileNotFoundException => () }
+    try if (fs.listStatus(dir).isEmpty) fs.delete(dir, false)
+    catch { case _: FileNotFoundException => () }
 
   /** Bring the table to a clean state after a crashed mutation: replay
     * any journaled in-flight swap (completing the crashed commit), then
-    * sweep orphan `_graft_pending/` stages that never journaled (nothing
-    * destructive happened; the live ranges are intact). From any crash
+    * redo any journaled rollback ([[forceUnlock]]), then sweep orphan
+    * `_graft_pending/` stages that never journaled (nothing destructive
+    * happened; the live ranges are intact). From any crash
     * prefix this alone leaves the table either as it was before the
     * crashed mutation or as that mutation would have left it.
     * [[withWriterLock]] runs it at the start of every mutation; this is
@@ -967,14 +1019,15 @@ object BlockRangeSink {
     val (fs, root) = fsFor(path)
     val journalRoot = new Path(root, JournalDirName)
     if (fs.exists(journalRoot)) {
-      fs.listStatus(journalRoot).filter(_.isFile).foreach { j =>
+      // rollback redos last: each lists the table the swaps leave
+      fs.listStatus(journalRoot).filter(_.isFile)
+        .sortBy(_.getPath.getName.startsWith("rollback-")).foreach { j =>
         if (j.getPath.getName.startsWith("."))
           fs.delete(j.getPath, false) // unpublished temp — never armed
         else replayJournal(fs, root, j.getPath)
       }
     }
     deleteIfEmpty(fs, journalRoot)
-    val pendingRoot = new Path(root, PendingDirName)
-    if (fs.exists(pendingRoot)) fs.delete(pendingRoot, true)
+    fs.delete(new Path(root, PendingDirName), true)
   }
 }

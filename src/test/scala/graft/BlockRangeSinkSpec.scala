@@ -478,6 +478,52 @@ class BlockRangeSinkSpec extends SparkTestBase {
     assert(!new java.io.File(local, BlockRangeSink.JournalDirName).exists())
   }
 
+  test("a rollback that moves nothing in and whose delete the store " +
+      "refuses journals its fork; recovery then completes the rollback") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countfs.impl", classOf[CountingFileSystem].getName)
+    val local = Files.createTempDirectory("graft_sink_refuse_drop").toString
+    val dir = s"countfs://$local"
+    BlockRangeSink.write((1L to 3500L).map(b => (b, s"tx$b"))
+      .toDF("block", "txid"), local)
+    CountingFileSystem.reset()
+    CountingFileSystem.refuseDelete = _.startsWith(s"$local/blockRange=2")
+    try intercept[java.io.IOException](BlockRangeSink.dropAbove(spark, dir, 999L))
+    finally CountingFileSystem.reset()
+    val journals = new java.io.File(local, BlockRangeSink.JournalDirName).list()
+    assert(journals != null && journals.exists(_.startsWith("rollback-")),
+      "the refused rollback left no journal")
+    assert(BlockRangeSink.lockOwner(local).isEmpty)
+    assert(BlockRangeSink.stats(local).map(_.blockRange).contains(2L))
+
+    BlockRangeSink.recoverTable(dir)
+    assert(BlockRangeSink.stats(local).map(_.blockRange) == Seq(0L))
+    assert(BlockRangeSink.watermark(spark, local) == 999L)
+    assert(!new java.io.File(local, BlockRangeSink.JournalDirName).exists())
+  }
+
+  test("forceUnlock journals the rollback a crashed holder's stamp names, " +
+      "and ignores a torn one") {
+    val dir = Files.createTempDirectory("graft_sink_unlock_rollback").toString
+    BlockRangeSink.write((1L to 3500L).map(b => (b, s"tx$b"))
+      .toDF("block", "txid"), dir)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val lock = new org.apache.hadoop.fs.Path(dir, BlockRangeSink.LockName)
+    val stamp = "host pid=1 nonce=n ts=1\nrollback=1999\tblock\n"
+    // a stamp cut short names no rollback: nothing is journaled
+    BlockRangeSink.stampLock(fs, lock, stamp.dropRight(3), overwrite = false)
+    assert(BlockRangeSink.forceUnlock(dir))
+    assert(!new java.io.File(dir, BlockRangeSink.JournalDirName).exists())
+    BlockRangeSink.stampLock(fs, lock, stamp, overwrite = false)
+    assert(BlockRangeSink.forceUnlock(dir))
+    assert(BlockRangeSink.stats(dir).map(_.blockRange) == Seq(0L, 1L, 2L, 3L))
+    BlockRangeSink.recoverTable(dir)
+    assert(BlockRangeSink.stats(dir).map(_.blockRange) == Seq(0L, 1L))
+    assert(BlockRangeSink.watermark(spark, dir) == 1999L)
+    assert(!new java.io.File(dir, BlockRangeSink.JournalDirName).exists())
+  }
+
   test("compact fails loudly when a flagged range stages no rows, and " +
       "leaves the live table untouched") {
     val dir = Files.createTempDirectory("graft_sink_compact_empty").toString

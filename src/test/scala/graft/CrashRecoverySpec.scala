@@ -23,8 +23,10 @@ import graft.sinks.BlockRangeSink
   * Every mutation commits through the same journaled pending-swap
   * protocol (`BlockRangeSink.publishAndReplay`: the new files are
   * durable under `_graft_pending/` and the journal names every drop and
-  * move before anything is destroyed); this spec is the evidence,
-  * including crashes DURING recovery itself.
+  * move before anything is destroyed), except a rollback that only
+  * drops, whose intent is the fork its lock stamp names (`forceUnlock`
+  * journals it and recovery redoes the rollback); this spec is the
+  * evidence, including crashes DURING recovery itself.
   *
   * CI runs a strided slice of prefixes per operation; GRAFT_CRASH_SOAK=1
   * sweeps every prefix (the full model check, run once per round).
@@ -377,7 +379,7 @@ class CrashRecoverySpec extends SparkTestBase {
       "recoverTable did not complete the journaled compaction")
     assert(residue(dir).isEmpty && BlockRangeSink.lockOwner(dir).isEmpty)
   }
-  for (version <- Seq("v1", "v2"))
+  for (version <- Seq("v1", "v2", "v3"))
     test(s"a $version journal left by an older build replays to the " +
         "never-crashed state from every prefix of its replay") {
       val bucket = s"crash-legacy-$version"
@@ -387,7 +389,8 @@ class CrashRecoverySpec extends SparkTestBase {
       BlockRangeSink.write(frame(1 to 2500), dir)
       // what the older build's tail upsert staged and journaled for range
       // 2 before it died: the whole range's new rows (existing ∪ fresh);
-      // its sections carry no drop= records and replace the range
+      // v1 and v2 sections carry no drop= records and replace the range,
+      // a v3 section names each listed file it drops
       val range2 = frame(2000 to 2500).union(frame(2501 to 2900, "alt"))
       val fs = new Path(dir).getFileSystem(conf)
       val op = s"legacy-$version"
@@ -408,7 +411,10 @@ class CrashRecoverySpec extends SparkTestBase {
         }
       val header =
         if (version == "v1") Seq("v1", "range=2", s"pending=$op")
-        else Seq("v2", s"pending=$op", "range=2")
+        else Seq(version, s"pending=$op", "range=2") ++
+          (if (version == "v2") Nil
+          else BlockRangeSink.stats(dir).filter(_.blockRange == 2L)
+            .flatMap(_.files).map(f => s"drop=${f.name}"))
       val out = fs.create(new Path(dir, s"${BlockRangeSink.JournalDirName}/$op"))
       try out.write((header ++ fileLines).mkString("\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
