@@ -151,10 +151,13 @@ object BlockRangeSink {
     try { recoverLocked(path); body }
     catch { case t: Throwable => bodyFailure = t; throw t }
     finally {
-      // don't mask the body's own failure with the release failure
       try releaseLock(fs, lock, token)
-      catch { case r: Throwable =>
-        if (bodyFailure != null) bodyFailure.addSuppressed(r) else throw r }
+      catch {
+        case r: Throwable =>
+          // don't mask the body's own failure with the release failure
+          if (bodyFailure != null) bodyFailure.addSuppressed(r)
+          else throw r
+      }
     }
   }
 
@@ -908,10 +911,10 @@ object BlockRangeSink {
     val pendingOp = new Path(root, s"$PendingDirName/$pendingRel")
     // group drop= and file= records under their range= section
     val sections = scala.collection.mutable.ArrayBuffer.empty[Section]
-    def current(l: String): Section = {
+    def amend(l: String)(f: Section => Section): Unit = {
       require(sections.nonEmpty,
         s"replayJournal: record before any range record in $journal: $l")
-      sections.last
+      sections.update(sections.size - 1, f(sections.last))
     }
     lines.foreach {
       case l if l.startsWith("range=") =>
@@ -920,13 +923,10 @@ object BlockRangeSink {
       case l if l.startsWith("drop=") =>
         require(version >= "v3", s"replayJournal: drop record in a " +
           s"$version journal $journal")
-        val s = current(l)
-        sections.update(sections.size - 1,
-          s.copy(drops = s.drops.map(_ :+ l.stripPrefix("drop="))))
+        amend(l)(s => s.copy(drops = s.drops.map(_ :+ l.stripPrefix("drop="))))
       case l if l.startsWith("file=") =>
-        val s = current(l)
         val Array(f, t) = l.stripPrefix("file=").split("\t", 2)
-        sections.update(sections.size - 1, s.copy(moves = s.moves :+ (f, t)))
+        amend(l)(s => s.copy(moves = s.moves :+ (f, t)))
       case _ => ()
     }
     if (sections.isEmpty && redo.isEmpty) throw new java.io.IOException(
