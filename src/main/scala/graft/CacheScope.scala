@@ -13,7 +13,7 @@ object CacheScope {
 
   /** Past this many outstanding entries the scope logs a warning: a
     * long-lived session that registers caches (every stamp/assign/
-    * persistScoped call does) but never calls [[release]] accumulates
+    * persist call does) but never calls [[release]] accumulates
     * MEMORY_AND_DISK blocks indefinitely. We deliberately do NOT
     * auto-evict — a registered entry may be a localCheckpoint, which
     * cannot recompute once unpersisted, so eviction could corrupt an
@@ -29,7 +29,9 @@ object CacheScope {
           "(see CacheScope scaladoc), or cached blocks accumulate " +
           "for the life of the session.")
 
-  /** Persist and register in one step. */
+  /** Persist and register in one step; eta-expands in
+    * `.transform(CacheScope.persist)`.
+    */
   def persist[T](ds: Dataset[T]): Dataset[T] = {
     ds.persist()
     register(ds)
@@ -42,7 +44,7 @@ object CacheScope {
     * never spilling cache blocks to the disk the concurrent shuffles
     * are already using.
     */
-  def persist[T](ds: Dataset[T],
+  def persistAt[T](ds: Dataset[T],
       level: org.apache.spark.storage.StorageLevel): Dataset[T] = {
     ds.persist(level)
     register(ds)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print the formatted physical plan for one or more
   * registered queries — `runMain graft.Explain q1 [q2 ...]` (env
@@ -9,10 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = GraftConf(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4"))
-      .getOrCreate()
+    val spark = GraftConf.session("local[4]", "4")
     spark.sparkContext.setLogLevel("ERROR")
     val qmap = SparkEntry.queries
     args.foreach { name =>

@@ -168,7 +168,7 @@ object MultiJvmDemo {
         .m4ForkUnion(spark, dir, raw, forks, sequential = true)
         .orderBy("fork_label", "walletId", "address", "propertyId")
         .collect().toSeq
-      queries.Q.releaseScoped()
+      CacheScope.release()
       rows
     }
 

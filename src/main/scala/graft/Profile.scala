@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Dev tool: stage-level attribution for one or more registered queries
@@ -19,12 +18,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftConf(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftConf.session(s"local[$cpus]", cpus)
     // one lock guards every listener-side structure: callbacks arrive on
     // the listener-bus thread while the main thread reads/clears between
     // queries (r13 ADVICE — unsynchronized, late events could be dropped
@@ -88,10 +82,7 @@ object Profile {
           }
           println(s"===== $name  total=${f"$dt%.2f"}s =====")
           lock.synchronized { stages.foreach(println) }
-          graft.queries.Q.releaseScoped()
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
+          GraftConf.dropCaches(spark)
         case None => println(s"===== $name: NOT FOUND =====")
       }
     }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,14 +11,7 @@ object Verify {
     // process boundary the registry crosses; tools/run_multijvm.sh).
     // Executor classpath/memory ride in via -Dspark.* GRAFT_SPARK_OPTS.
     val master = sys.env.getOrElse("GRAFT_MASTER", s"local[$cpus]")
-    val spark = GraftConf(SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the production registration path for graft's native functions
-      // (queries also call GraftFunctions.register for foreign sessions)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftConf.session(master, cpus)
     if (!spark.sessionState.functionRegistry.functionExists(
         org.apache.spark.sql.catalyst.FunctionIdentifier("graft_hash60")))
       System.err.println("[verify] WARN: GraftExtensions did not inject")
@@ -46,11 +38,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // release query-internal persists between queries
-      graft.queries.Q.releaseScoped()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      GraftConf.dropCaches(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -167,7 +167,7 @@ object CurationQueries {
       .withColumn("arr", split(col("text"), " "))
       .where(size(col("arr")) >= 3)
       .select(col("doc_id"), explode(expr(shingle3Spark)).as("shingle"))
-      .transform(Q.persistScoped) // one explode, scoped-released
+      .transform(graft.CacheScope.persist) // one explode, scoped-released
     sh.count()
     val bench = sh.where(col("doc_id") % 97 === 0)
       .select("shingle").distinct()

@@ -147,7 +147,7 @@ object DedupQueries {
   // reused 4× downstream on a BOUNDED id range (harness guard) —
   // persist so the explode runs once
   private def shingled(c: DataFrame): DataFrame =
-    shingledFresh(c).transform(Q.persistScoped)
+    shingledFresh(c).transform(graft.CacheScope.persist)
 
   private val shingledSql =
     """arrs AS (SELECT doc_id, string_split(text, ' ') AS arr FROM corpus
@@ -301,7 +301,7 @@ object DedupQueries {
     // Jaccard is exactly defined cross-engine. MEMORY_ONLY: cached
     // while it fits, recomputed under pressure, never competing with
     // the band join's shuffles for scratch disk.
-    val hashed = Q.persistScopedAt(
+    val hashed = graft.CacheScope.persistAt(
       shingledFresh(corpusNfc(s, dir))
         .select(col("doc_id"), expr(h60("shingle")).as("h")),
       org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
@@ -311,7 +311,7 @@ object DedupQueries {
     val mh = hp.groupBy("doc_id")
       .agg(min(perm(0)).as("mh0"),
         (1 until 8).map(k => min(perm(k)).as(s"mh$k")): _*)
-      .transform(Q.persistScoped)
+      .transform(graft.CacheScope.persist)
     // EAGER: the band table sits on BOTH sides of the candidate
     // self-join, so without a materialized mh the whole
     // shingle→8×md5→min-agg pipeline (the query's dominant cost) is
@@ -327,7 +327,7 @@ object DedupQueries {
         col("band") === col("band_b") && col("sig") === col("sig_b") &&
           col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
-      .transform(Q.persistScoped)
+      .transform(graft.CacheScope.persist)
     // EAGER materialization: lazy persist does not deduplicate the three
     // downstream consumers' CONCURRENT stages — they would race and each
     // recompute the band pipeline. One count() fills both the cand and
@@ -497,7 +497,7 @@ object DedupQueries {
     graft.functions.GraftFunctions.register(s)
     // hash-space pipeline, MEMORY_ONLY — same scratch-bounding shape
     // and cross-engine-exactness argument as minhashLsh
-    val hashed = Q.persistScopedAt(
+    val hashed = graft.CacheScope.persistAt(
       shingledFresh(corpus(s, dir))
         .select(col("doc_id"), expr(h60("shingle")).as("h")),
       org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
@@ -507,7 +507,7 @@ object DedupQueries {
     val mh = hp.groupBy("doc_id")
       .agg(min(perm(0)).as("mh0"),
         (1 until 8).map(k => min(perm(k)).as(s"mh$k")): _*)
-      .transform(Q.persistScoped)
+      .transform(graft.CacheScope.persist)
     mh.count() // eager: band table feeds both join sides (see minhashLsh)
     val bands = (0 until 4).map { b =>
       mh.select(col("doc_id"), lit(b).as("band"),
@@ -520,7 +520,7 @@ object DedupQueries {
           .where(col("old_id") < 100000L),
         col("band") === col("band_b") && col("sig") === col("sig_b"))
       .select("new_id", "old_id").distinct()
-      .transform(Q.persistScoped)
+      .transform(graft.CacheScope.persist)
     cand.count() // eager: shared by the verify join's three consumers
     val cnt = hashed.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val shared = cand
@@ -579,7 +579,7 @@ object DedupQueries {
         concat(col("text"), lit("e\u0301o\u0308")).as("t")))
     val n = base.select(col("doc_id"), col("lang"),
       md5(col("t")).as("hraw"), md5(expr("graft_nfc(t)")).as("hn"))
-      .transform(Q.persistScoped)
+      .transform(graft.CacheScope.persist)
     val perLang = n.groupBy("lang")
       .agg(count(lit(1)).as("n_rows"),
         countDistinct("hraw").as("distinct_raw"))

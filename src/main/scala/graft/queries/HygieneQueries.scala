@@ -136,11 +136,11 @@ object HygieneQueries {
       .where(size(col("arr")) >= 3)
       .select(col("doc_id"),
         explode(expr(CurationQueries.shingle3Spark)).as("shingle"))
-      .transform(Q.persistScoped)
+      .transform(graft.CacheScope.persist)
     sh.count()
     val bench = sh.where(col("doc_id") % 97 === 0)
       .select("shingle").distinct()
-      .transform(Q.persistScoped)
+      .transform(graft.CacheScope.persist)
     // Sketch read (like KMeans' k centroids): driver collects ~bits,
     // never data rows. Sized from the actual benchmark cardinality (one
     // vocabulary-scale count) so the fpp — and with it the volume of

@@ -218,7 +218,7 @@ object LedgerQueries {
       .where($"rn" === 1)
       .select($"user_id", $"event_id", $"sec", $"want",
         ($"user_id" % 50).as("sid"))
-      .transform(Q.persistScoped)
+      .transform(graft.CacheScope.persist)
     // EAGER: firsts feeds both the offer amounts and the accept stream;
     // lazy persist would let the two downstream stages race and each
     // re-run the events scan + window.
@@ -244,7 +244,7 @@ object LedgerQueries {
           divisible = false, amount = BigDecimal(want)), eid)
       }
     val dex = DexLifecycle.derive(offers.union(accepts), tipBlock = 1)
-      .transform(Q.persistScoped)
+      .transform(graft.CacheScope.persist)
     // EAGER: the offer census and the accept census both consume the
     // fold output — unpersisted, the whole groupByKey fold runs twice.
     dex.count()

@@ -60,7 +60,7 @@ object MetaDexQueries {
       // files) instead of spilling ~20 GB of cached RawTx batches onto
       // the same disk the dedup join's shuffle needs — the measured
       // cause of the 1000×-probe scratch exhaustion before this change.
-      .transform(ds2 => Q.persistScopedAt(ds2,
+      .transform(ds2 => graft.CacheScope.persistAt(ds2,
         org.apache.spark.storage.StorageLevel.MEMORY_ONLY))
     ds.count() // EAGER: lazy persist would not dedupe racing consumers
     ds

@@ -295,7 +295,7 @@ object PipelineQueries {
         blocktime = 0, positioninblock = 0, propertyid = 31,
         divisible = false, amount = BigDecimal(amount)), ser)
     }
-    val balances = Balances.derive(ledger).transform(Q.persistScoped)
+    val balances = Balances.derive(ledger).transform(graft.CacheScope.persist)
     // EAGER: the serving view and the serial pin both consume balances;
     // unpersisted, the stamper + decode chain runs twice.
     balances.count()
@@ -1189,7 +1189,7 @@ object PipelineQueries {
 
     // the full pipeline: decoder/DEx/registry/freeze → balances
     val d = OmniPipeline.deriveStamped(stamped, tip)
-    val balances = d.balances.transform(Q.persistScoped)
+    val balances = d.balances.transform(graft.CacheScope.persist)
     // EAGER: the serving view and the per-key detail both consume
     // balances; unpersisted, the whole stamp+fold chain runs twice.
     balances.count()
@@ -1444,7 +1444,7 @@ object PipelineQueries {
       .withColumn("cum", sum($"pay" + 100).over(w))
       .withColumn("prevTxid",
         coalesce(lag($"txid", 1).over(w), concat(lit("cb"), $"ck")))
-      .transform(Q.persistScoped)
+      .transform(graft.CacheScope.persist)
     val vout0 = ch.select($"txid", $"serial", $"ck", ($"cum").as("cum"))
       .as[(String, Long, Long, Long)]
       .map { case (txid, serial, ck, cum) =>

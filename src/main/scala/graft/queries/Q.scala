@@ -18,26 +18,6 @@ object Q {
       run: (SparkSession, String) => DataFrame): Q =
     Q(name, run, Some(oracleSql))
 
-  /** Persist an intermediate whose lifetime is ONE query evaluation —
-    * see [[graft.CacheScope]]. Harnesses call [[releaseScoped]] after
-    * each query's action, so cache blocks never accumulate.
-    */
-  def persistScoped[T](ds: org.apache.spark.sql.Dataset[T]): org.apache.spark.sql.Dataset[T] =
-    graft.CacheScope.persist(ds)
-
-  /** Query-scoped persist at an explicit storage level (see
-    * [[graft.CacheScope.persist]]). Named distinctly so the no-arg
-    * form stays eta-expandable in `.transform(Q.persistScoped)`.
-    */
-  def persistScopedAt[T](ds: org.apache.spark.sql.Dataset[T],
-      level: org.apache.spark.storage.StorageLevel): org.apache.spark.sql.Dataset[T] =
-    graft.CacheScope.persist(ds, level)
-
-  /** Unpersist every scoped intermediate registered since the last
-    * release. Call after each query's action completes.
-    */
-  def releaseScoped(): Unit = graft.CacheScope.release()
-
   /** Cross-engine-safe decimal cast for INTERMEDIATE math only (DuckDB
     * and Spark agree on double→decimal rounding off ties; 4 fractional
     * digits keep the 2-dp synthetic money values exact). Final output

@@ -263,7 +263,7 @@ object SimilarityQueries {
     (s, dir) =>
       // persisted: init collect, the update pass, and the final assign
       // consume base SEQUENTIALLY, so a lazy persist dedupes the scans
-      val base = Q.persistScoped(quantized(s, dir))
+      val base = graft.CacheScope.persist(quantized(s, dir))
       val cs = graft.operators.KMeans.centroids(base, 8, 2)
       graft.operators.KMeans.assign(base, cs)
         .select("vec_id", "cluster", "d2")
@@ -306,7 +306,7 @@ object SimilarityQueries {
       |SELECT qid, rank, cid, cos_micros FROM ranked WHERE rank <= 10
       |ORDER BY qid, rank""".stripMargin) { (s, dir) =>
     import graft.operators.KMeans
-    val base = Q.persistScoped(quantized(s, dir))
+    val base = graft.CacheScope.persist(quantized(s, dir))
     val cs = KMeans.centroids(base, 8, 2)
     val assigned = KMeans.assign(base, cs)
     val probed = assigned.where(col("vec_id") < 8)
@@ -411,11 +411,11 @@ object SimilarityQueries {
   private def semanticBody(s: SparkSession, dir: String,
       kOf: Long => Int): DataFrame = {
     import graft.operators.KMeans
-    val base = Q.persistScoped(quantized(s, dir))
+    val base = graft.CacheScope.persist(quantized(s, dir))
     val k = kOf(base.count())
     val cs = KMeans.centroids(base, k, 2)
     // both sides of the intra-cluster self-join scan the assignment
-    val assigned = Q.persistScoped(
+    val assigned = graft.CacheScope.persist(
       KMeans.assign(base, cs).select("vec_id", "cluster", "q", "nq"))
     // Banded triangle join: a plain self-join on `cluster` has only k
     // distinct keys, so at scale the entire quadratic pair scan runs

@@ -542,7 +542,7 @@ object TextQueries {
       : (Seq[(Long, String, Long)],
          org.apache.spark.sql.Dataset[(String, Long, Seq[String])]) = {
     import s.implicits._
-    var cur = Q.persistScoped(
+    var cur = graft.CacheScope.persist(
       t(s, dir, "documents")
         .select(explode(split(col("text"), " ")).as("w"))
         .where(length(col("w")) >= 2)
@@ -566,7 +566,7 @@ object TextQueries {
         val (pair, n) = (top.head.getString(0), top.head.getLong(1))
         merges += ((k.toLong, pair, n))
         val Array(x, y) = pair.split(" ")
-        val next = Q.persistScoped(cur.map { case (w, wc, sym) =>
+        val next = graft.CacheScope.persist(cur.map { case (w, wc, sym) =>
           (w, wc, mergePair(sym, x, y))
         })
         next.count()

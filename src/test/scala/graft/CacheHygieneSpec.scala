@@ -1,7 +1,5 @@
 package graft
 
-import graft.queries.Q
-
 /** Verdict item: a long-lived session running registry queries must not
   * accumulate cache blocks. Every query-scoped persist/localCheckpoint
   * registers with [[CacheScope]]; after the action + release, the
@@ -21,7 +19,7 @@ class CacheHygieneSpec extends SparkTestBase {
 
   test("mark/releaseSince frees only the marked phase's entries, in " +
       "registration order, leaving outer registrations scoped") {
-    Q.releaseScoped() // clean slate
+    CacheScope.release() // clean slate
     val freed = scala.collection.mutable.ArrayBuffer.empty[String]
     CacheScope.defer(() => freed += "outer")
     val m = CacheScope.mark()
@@ -36,7 +34,7 @@ class CacheHygieneSpec extends SparkTestBase {
     CacheScope.releaseSince(m2)
     assert(freed.toSeq == Seq("phase1", "phase2", "phase3"))
     // the ordinary end-of-query release still owns the outer entry
-    Q.releaseScoped()
+    CacheScope.release()
     assert(freed.toSeq == Seq("phase1", "phase2", "phase3", "outer"))
   }
 
@@ -45,7 +43,7 @@ class CacheHygieneSpec extends SparkTestBase {
       "with end-of-query hygiene)") {
     assume(new java.io.File(dir).isDirectory)
     SparkEntry.queries("m4_reorg_flagship")(spark, dir).count()
-    Q.releaseScoped()
+    CacheScope.release()
     val left = spark.sparkContext.getPersistentRDDs
     assert(left.isEmpty,
       s"m4_reorg_flagship left ${left.size} cached RDDs: " +
@@ -56,7 +54,7 @@ class CacheHygieneSpec extends SparkTestBase {
       "after the harness release, and IncrementalIngest.release() frees them") {
     import graft.streaming.IncrementalIngest
     import spark.implicits._
-    Q.releaseScoped() // clean slate
+    CacheScope.release() // clean slate
     val dir = java.nio.file.Files.createTempDirectory("graft_hygiene_derive").toString
     IncrementalIngest.ingest(spark, spark.createDataset(Seq(
       Fixtures.grant(Fixtures.A, Fixtures.A, BigDecimal("100"), block = 1),
@@ -65,7 +63,7 @@ class CacheHygieneSpec extends SparkTestBase {
     try {
       val d = IncrementalIngest.derive(spark, dir)
       Seq(d.balances, d.offers, d.accepts, d.properties).foreach(_.count())
-      Q.releaseScoped()
+      CacheScope.release()
       assert(spark.sparkContext.getPersistentRDDs.nonEmpty,
         "the sealed range's segment did not survive the harness release")
       IncrementalIngest.release()
@@ -82,7 +80,7 @@ class CacheHygieneSpec extends SparkTestBase {
       qmap(name)(spark, dir).count()
       // one release drops everything, including stamper caches (now
       // CacheScope-deferred, not a global slot)
-      Q.releaseScoped()
+      CacheScope.release()
       val left = spark.sparkContext.getPersistentRDDs
       assert(left.isEmpty,
         s"$name left ${left.size} cached RDDs: " +

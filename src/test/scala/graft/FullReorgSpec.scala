@@ -38,7 +38,7 @@ class FullReorgSpec extends SparkTestBase {
         fork: Option[Long]): Seq[org.apache.spark.sql.Row] = {
       val rows = queries.PipelineQueries.fullServe(s, dir, feed, atTip, fork)
         .collect().toSeq
-      queries.Q.releaseScoped()
+      CacheScope.release()
       rows
     }
 
@@ -78,7 +78,7 @@ class FullReorgSpec extends SparkTestBase {
         .m4ForkUnion(s, dir, raw, forks, sequential)
         .orderBy("fork_label", "walletId", "address", "propertyId")
         .collect().toSeq
-      queries.Q.releaseScoped()
+      CacheScope.release()
       rows
     }
 
@@ -103,7 +103,7 @@ class FullReorgSpec extends SparkTestBase {
         .m4ForkUnion(s, dir, raw, forks, sequential = true)
         .orderBy("fork_label", "walletId", "address", "propertyId")
         .collect().toSeq
-      queries.Q.releaseScoped()
+      CacheScope.release()
       rows
     }
 

@@ -37,7 +37,7 @@ class HygieneSpec extends SparkTestBase {
   test("bloom decontamination: identical doc set to the exact broadcast-join path") {
     val viaBloom = HygieneQueries.bloomContain.run(spark, dir)
       .collect().map(_.getLong(0)).toSet
-    Q.releaseScoped()
+    CacheScope.release()
     // exact path: no prefilter, plain semi join on the benchmark set
     val sh = graft.Tables.t(spark, dir, "documents")
       .select(col("doc_id"), lower(col("text")).as("text"))
@@ -120,7 +120,7 @@ class HygieneSpec extends SparkTestBase {
       try q.run(spark, dir).collect().map(_.mkString("|")).toSet
       finally {
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-        Q.releaseScoped()
+        CacheScope.release()
       }
     }
     Seq(HygieneQueries.packSequences, CurationQueries.mixBudget,

@@ -67,7 +67,7 @@ class IncrementalIngestSpec extends SparkTestBase {
       try {
         IncrementalIngest.ingest(spark, spark.createDataset(history), dir)
         IncrementalIngest.derive(spark, dir) // warm: pins ranges 0..n-2
-        graft.queries.Q.releaseScoped()
+        CacheScope.release()
         val before = BlockRangeSink.stats(dir)
         IncrementalIngest.ingest(spark, spark.createDataset(Seq(
           simpleSend(B, C, BigDecimal("1"), block = n * 1000L - 10))), dir)
@@ -86,7 +86,7 @@ class IncrementalIngestSpec extends SparkTestBase {
         (scanned, changed.map(_.nFiles.toLong).sum, lists)
       } finally {
         IncrementalIngest.release()
-        graft.queries.Q.releaseScoped()
+        CacheScope.release()
       }
     }
     val (scanned4, changed4, lists4) = run(4)
@@ -112,7 +112,7 @@ class IncrementalIngestSpec extends SparkTestBase {
       (0L to 12L).foreach { r =>
         IncrementalIngest.ingest(spark, spark.createDataset(txs(r)), dir)
         IncrementalIngest.derive(spark, dir)
-        graft.queries.Q.releaseScoped()
+        CacheScope.release()
       }
       val d = IncrementalIngest.derive(spark, dir)
       assert(IncrementalIngest.lastReuse == (12, 13))
@@ -122,7 +122,7 @@ class IncrementalIngestSpec extends SparkTestBase {
       assert(d.balances.collect().toSet == cold.balances.collect().toSet)
     } finally {
       IncrementalIngest.release()
-      graft.queries.Q.releaseScoped()
+      CacheScope.release()
     }
   }
 

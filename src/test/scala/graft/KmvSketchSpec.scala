@@ -81,7 +81,7 @@ class KmvSketchSpec extends SparkTestBase {
     val out = q.run(s, "/root/testdata/sf0.01")
       .collect().map(r => r.getAs[String]("lang") ->
         r.getAs[Long]("est_distinct")).toMap
-    graft.queries.Q.releaseScoped()
+    CacheScope.release()
     // true distinct shingles per lang, computed once in DuckDB
     val truth = Map("de" -> 3059L, "en" -> 9096L, "es" -> 3538L,
       "fr" -> 3382L, "zh" -> 3730L)

@@ -55,10 +55,10 @@ class ObjfsRegistrySpec extends SparkTestBase {
     for (q <- SparkEntry.registry) {
       val expected =
         try canon(q.run(spark, localDir))
-        finally queries.Q.releaseScoped()
+        finally CacheScope.release()
       val got =
         try canon(q.run(spark, remoteDir))
-        finally queries.Q.releaseScoped()
+        finally CacheScope.release()
       if (expected != got) {
         failures += q.name
         info(s"MISMATCH ${q.name}: local ${expected.size} lines vs " +

@@ -104,7 +104,7 @@ class OmniPipelineSpec extends SparkTestBase {
       s"key ${t._3} stamped $s, expected ${expected(t._3)}") }
     assert(stamped.map(_._2).max == 1000L &&
       stamped.map(_._2).toSet.size == 1000)
-    graft.queries.Q.releaseScoped()
+    CacheScope.release()
   }
 
   test("withSerials at an adversarial 4096-range-partition stamp: " +
@@ -138,7 +138,7 @@ class OmniPipelineSpec extends SparkTestBase {
       assert(stamped.map(_._2).toSet.size == 500)
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", saved)
-      graft.queries.Q.releaseScoped()
+      CacheScope.release()
     }
   }
 
@@ -173,7 +173,7 @@ class OmniPipelineSpec extends SparkTestBase {
       got.foreach { case (t, s) => assert(expected(t.txid) == s,
         s"txid ${t.txid} stamped $s, expected ${expected(t.txid)}") }
       assert(got.map(_._2).max == got.length.toLong)
-    } finally graft.queries.Q.releaseScoped()
+    } finally CacheScope.release()
   }
 
   test("GlobalSerial.assign: names with a backtick or a dot survive, " +
@@ -191,7 +191,7 @@ class OmniPipelineSpec extends SparkTestBase {
       val got = out.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
       assert(got.sortBy(_._3).toSeq ==
         rows.sorted.zipWithIndex.map { case ((k, v), i) => (k, v, i + 1L) })
-    } finally graft.queries.Q.releaseScoped()
+    } finally CacheScope.release()
   }
 
   test("freeze: snapshot, receive-while-frozen redirect, unfreeze (sql.py:1408-1414)") {
@@ -290,7 +290,7 @@ class OmniPipelineSpec extends SparkTestBase {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    graft.queries.Q.releaseScoped() // start from a clean slate
+    CacheScope.release() // start from a clean slate
     val barrier = new java.util.concurrent.CyclicBarrier(2)
     def derived(shift: Long): Future[Seq[Long]] = Future {
       val txs = chain.map(t => t.copy(block = t.block + shift))
@@ -305,7 +305,7 @@ class OmniPipelineSpec extends SparkTestBase {
     val expect = (1L to chain.size).toSeq
     assert(Await.result(a, 60.seconds) == expect)
     assert(Await.result(b, 60.seconds) == expect)
-    graft.queries.Q.releaseScoped()
+    CacheScope.release()
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       "stamper caches must not survive release")
   }
@@ -332,6 +332,6 @@ class OmniPipelineSpec extends SparkTestBase {
       OmniPipeline.reparseTx(ledger, 4L, offer)
     }
     assert(e.getMessage.contains("state-dependent"))
-    graft.queries.Q.releaseScoped()
+    CacheScope.release()
   }
 }

@@ -58,7 +58,7 @@ class OperatorEquivalenceSpec extends SparkTestBase {
     val packed = graft.operators.SequencePacker.assignBins(rows, 256L)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSet
-    graft.queries.Q.releaseScoped()
+    CacheScope.release()
     val w = Window.partitionBy("source").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val naive = rows

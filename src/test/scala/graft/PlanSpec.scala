@@ -315,7 +315,7 @@ class PlanSpec extends SparkTestBase {
     * CacheHygieneSpec invariant must not depend on suite order).
     */
   private def releaseScopedCaches(): Unit =
-    graft.queries.Q.releaseScoped()
+    CacheScope.release()
 
   test("semantic dedup: intra-cluster pairing is an equi-join, never a nested loop") {
     val p = plan(graft.queries.SimilarityQueries.semanticDedup)
@@ -423,25 +423,21 @@ class PlanSpec extends SparkTestBase {
       assert(derived.collect().map(_._2).sorted.toSeq == Seq(1L, 2L, 3L))
     } finally {
       IncrementalIngest.release()
-      graft.queries.Q.releaseScoped()
+      CacheScope.release()
     }
   }
 
-  test("bench actions: fullEval's wrapper eliminates the final sort; ordered keeps it") {
-    // Pins the mechanism behind SPARK_GRAFT_ACTION=ordered: an
+  test("bench fullEval: the order-insensitive wrapper eliminates the final sort") {
+    // Pins the fullEval residual documented in Bench.scala: an
     // order-insensitive aggregate placed on top of a query (fullEval's
-    // hash/xor fold) lets EliminateSorts drop the presentation ORDER BY
-    // — the documented fullEval residual — while the query's own plan,
-    // executed with nothing on top (queryExecution.toRdd), must retain
-    // the SortExec. If Catalyst ever stops eliminating the sort under
-    // the wrapper, fullEval and ordered converge and the residual note
-    // in Bench.scala is stale; if the raw plan ever loses its sort, the
-    // ordered action no longer times what it claims.
+    // hash/xor fold) lets EliminateSorts drop the presentation ORDER BY,
+    // so its cost goes untimed. If Catalyst ever stops eliminating the
+    // sort under the wrapper, the residual note in Bench.scala is stale.
     import org.apache.spark.sql.functions.{col, struct, xxhash64}
     val q = AggQueries.a4.run(spark, dir) // ends in a plain global ORDER BY
-    val raw = q.queryExecution.executedPlan.toString
-    assert(raw.contains("SortExec") || raw.contains("Sort ["),
-      s"a4's own plan lost its final sort:\n$raw")
+    assert(q.queryExecution.optimizedPlan.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.Sort],
+      s"a4 no longer ends in a sort, so this pins nothing:\n${q.queryExecution.optimizedPlan}")
     val wrapped = q
       .select(xxhash64(struct(q.columns.map(col): _*)).as("h"))
       .agg(org.apache.spark.sql.functions.expr("bit_xor(h)"))

@@ -155,7 +155,7 @@ class RandomChainSpec extends SparkTestBase {
           g.diff(w).take(2).mkString("; ") + "; cold only: " +
           w.diff(g).take(2).mkString("; "))
       }
-      graft.queries.Q.releaseScoped()
+      CacheScope.release()
     }
     def ingest(): Unit = {
       val upTo = math.min(top, tip() + 200 + rnd.nextInt(1800))
@@ -202,7 +202,7 @@ class RandomChainSpec extends SparkTestBase {
       assert(reused > 0, "no derive reused a pinned range")
     } finally {
       IncrementalIngest.release()
-      graft.queries.Q.releaseScoped()
+      CacheScope.release()
     }
   }
 

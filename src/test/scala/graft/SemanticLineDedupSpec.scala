@@ -16,7 +16,7 @@ class SemanticLineDedupSpec extends SparkTestBase {
     val out = queries.SimilarityQueries.semanticDedup.run(spark, dir)
       .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("cluster"),
         r.getAs[Long]("keep"), r.getAs[Long]("dup_of"), r.getAs[Long]("max_cos")))
-    graft.queries.Q.releaseScoped()
+    CacheScope.release()
     assert(out.nonEmpty)
     assert(out.exists(_._3 == 0L), "threshold should drop at least one vector")
     assert(out.exists(_._3 == 1L), "threshold should keep at least one vector")
@@ -26,7 +26,7 @@ class SemanticLineDedupSpec extends SparkTestBase {
       .select("vec_id", "q", "nq").collect()
       .map(r => r.getAs[Long]("vec_id") ->
         (r.getAs[Seq[Long]]("q").toArray, r.getAs[Long]("nq"))).toMap
-    graft.queries.Q.releaseScoped()
+    CacheScope.release()
     def cosMicros(a: Long, b: Long): Long = {
       val (qa, na) = vecs(a); val (qb, nb) = vecs(b)
       val dot = qa.zip(qb).map { case (x, y) => x * y }.sum
@@ -61,7 +61,7 @@ class SemanticLineDedupSpec extends SparkTestBase {
     val out = queries.TextQueries.lineDedup.run(spark, dir)
       .select("doc_id", "n_kept", "n_dropped").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    graft.queries.Q.releaseScoped()
+    CacheScope.release()
     assert(out.nonEmpty)
 
     // recompute the segmentation independently, mirroring the round-9

@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Mechanical bench regression diff: compare a new Bench JSON line
-(BENCH_DETAIL.json / BENCH_LOCAL_r*.json / BENCH_r*.json shape) against
-a baseline one, flagging per-query regressions. Judged on MIN times
+(the `total_detail` line graft.Bench prints and writes to
+BENCH_DETAIL.json, or a driver record wrapping it under "parsed")
+against a baseline one, flagging per-query regressions. Judged on MIN times
 when both sides carry `queries_min` (steady-state, what a long-lived
 cluster job sees); falls back to the median map otherwise. The bar
 mirrors the round-8 A/B protocol: a regression is BOTH >1.3x AND
@@ -14,18 +15,10 @@ box-speed ratio (baseline par16 / new par16, start/end averaged)
 before the bar is applied, so a boot-to-boot box swing no longer
 reads as a build change; pass --no-calibrate for raw walls.
 
-Usage: tools/bench_diff.py [--no-calibrate] [BASELINE.json NEW.json] [ratio] [abs_s]
-With no file args, diffs the CANONICAL per-round artifacts (r9 ask
-#8: one command, one artifact chain): baseline = the newest
-/root/repo/BENCH_LOCAL_r*.json (each round's end-of-round quiet-box
-fullEval medians+mins record), new = /root/repo/BENCH_DETAIL.json
-(the most recent fullEval Bench run — count/ordered experiments never
-write it).
+Usage: tools/bench_diff.py [--no-calibrate] [--movers N] BASELINE.json NEW.json [ratio] [abs_s]
 Exit 1 iff any regression is flagged.
 """
-import glob
 import json
-import re
 import sys
 
 
@@ -41,7 +34,7 @@ def load(path):
     with open(path) as f:
         d = json.load(f)
     if "queries" not in d and isinstance(d.get("parsed"), dict):
-        d = d["parsed"]  # driver BENCH_r*.json wraps the bench line
+        d = d["parsed"]  # a driver record wraps the bench line
     return d
 
 
@@ -55,14 +48,6 @@ def cal_speed(d):
         return (c["start"]["par16"] + c["end"]["par16"]) / 2.0
     except (TypeError, KeyError):
         return None
-
-
-def canonical_baseline():
-    rounds = glob.glob("/root/repo/BENCH_LOCAL_r*.json")
-    if not rounds:
-        raise SystemExit("no BENCH_LOCAL_r*.json baseline in /root/repo")
-    return max(rounds,
-               key=lambda p: int(re.search(r"r(\d+)", p).group(1)))
 
 
 def main():
@@ -80,14 +65,11 @@ def main():
         argv = argv[:i] + argv[i + 2:]
     files = [a for a in argv if not _is_num(a)]
     nums = [a for a in argv if _is_num(a)]
-    if len(files) not in (0, 2):
+    if len(files) != 2:
         raise SystemExit(
-            "usage: tools/bench_diff.py [BASELINE.json NEW.json] "
-            "[ratio] [abs_s]  (file args come in pairs)")
-    if files:
-        bp, np_ = files[0], files[1]
-    else:
-        bp, np_ = canonical_baseline(), "/root/repo/BENCH_DETAIL.json"
+            "usage: tools/bench_diff.py [--no-calibrate] [--movers N] "
+            "BASELINE.json NEW.json [ratio] [abs_s]")
+    bp, np_ = files
     if movers_n is None:
         print(f"baseline: {bp}\nnew:      {np_}")
     sys.argv = [sys.argv[0], bp, np_] + nums

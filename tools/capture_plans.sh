@@ -1,10 +1,11 @@
 #!/bin/bash
 # Capture .explain("formatted") for every registered query into
-# plans/<tag>/<query>_<suffix>.txt (one file per query), via
-# graft.Explain against a class snapshot. Usage:
+# plans/<tag>/<query>_<suffix>.txt (one file per query; plans/ is
+# git-ignored scratch), via graft.Explain against a class snapshot.
+# Usage:
 #   tools/capture_plans.sh <tag> <suffix> [query ...]
-# e.g. tools/capture_plans.sh r13 before            # all queries
-#      tools/capture_plans.sh r13 after m4_reorg_flagship
+# e.g. tools/capture_plans.sh stamp before          # all queries
+#      tools/capture_plans.sh stamp after m4_reorg_flagship
 # Env: GRAFT_CLASSES (class snapshot), SPARK_GRAFT_SF_DIR (default
 # sf0.001 — plan SHAPE is SF-independent; the tiny SF keeps the
 # harness-running queries cheap).

@@ -12,11 +12,16 @@ carries the registry-wide default, which is itself a measured fact
 (PERF.md round 9/10: full-registry 1000x sweeps under the HUGEINT
 sum(hash(row)) fold).
 
-Usage: tools/gen_verification.py > VERIFICATION.md
-"""
-import json
+The gate list is the registry itself, as `graft.ListQueries` prints it
+(one name per line), read from a file argument or stdin; lines that are
+not a bare query name (e.g. sbt's own log lines) are skipped.
 
-GATES = sorted(json.load(open("/root/repo/CORRECTNESS_r12.json")))
+Usage: sbt -batch "runMain graft.ListQueries" \
+         | tools/gen_verification.py > VERIFICATION.md
+       tools/gen_verification.py GATES.txt > VERIFICATION.md
+"""
+import fileinput
+import re
 
 DEFAULT = ("1000x", "cross-engine vs DuckDB: exact HUGEINT "
            "sum(hash(row)) fold (r9/r10 scaled sweeps)")
@@ -90,6 +95,8 @@ SUM_FOLD_REAFFIRMED = {
 
 
 def main():
+    gates = sorted({line.strip() for line in fileinput.input()
+                    if re.fullmatch(r"[a-z0-9_]+", line.strip())})
     print("""# VERIFICATION — per-gate highest verified scale
 
 Generated by `tools/gen_verification.py` (regenerate after each scaled
@@ -102,8 +109,8 @@ the instrument at the HIGHEST scale.
 1. **sf0.01 (driver gate)** — full-frame bit-strict compare vs DuckDB
    running the gate's own oracle SQL: rows + schema + per-cell values
    with float columns compared on raw BITS (`tools/check.py`; -0.0 vs
-   0.0 fails). 145/145 in CORRECTNESS_r12.json (green every round
-   since the gate count stabilized).
+   0.0 fails). 145/145 over the `graft.ListQueries` registry (green
+   every round since the gate count stabilized).
 2. **sf0.1 (once per round)** — same full-frame instrument, 10x the
    gate SF. 145/145 (re-run each round via `tools/r{{N}}_final.sh`).
 3. **10x/100x ScaleGen sweeps** — hash instrument: (row count, exact
@@ -160,8 +167,8 @@ which cancels duplicate rows of even multiplicity; every >10M-row
 (rows marked `sum-fold re-affirmed` below).
 
 | gate | highest scale | instrument at that scale |
-|---|---|---|""".format(n=len(GATES)))
-    for g in GATES:
+|---|---|---|""".format(n=len(gates)))
+    for g in gates:
         scale, how = EXCEPTIONS.get(g, DEFAULT)
         mark = " (sum-fold re-affirmed r10)" if g in SUM_FOLD_REAFFIRMED \
             else ""
