@@ -136,18 +136,21 @@ object Bench {
     val detail =
       s"""{"metric":"total_detail","value":${fmt(total)},"unit":"sec","action":"fulleval","codec":"$codec","calibration":$calibration,"queries":${mapJson(results)},"queries_min":${mapJson(mins)},"total_min":${fmt(totalMin)},"sf":"$sfDir"}"""
     // Full per-query map: one stdout line (may be cut from the tail) and
-    // a repo-local file a reader can diff. The repo artifact is written
-    // only for the FULL registry: an SPARK_GRAFT_ONLY-filtered run would
+    // a file in the working directory (the project base under
+    // `sbt runMain`) a reader can diff. The file is written only for
+    // the FULL registry: an SPARK_GRAFT_ONLY-filtered run would
     // replace the 145-query record with a subset (it did, round 10 —
     // caught by an end-of-round artifact diff).
     println(detail)
-    if (only.isEmpty) try {
-      val repo = new java.io.File("/root/repo")
-      if (repo.isDirectory) {
-        val w = new java.io.PrintWriter(new java.io.File(repo, "BENCH_DETAIL.json"))
+    if (only.isEmpty) {
+      val out = new java.io.File(sys.props("user.dir"), "BENCH_DETAIL.json")
+      try {
+        val w = new java.io.PrintWriter(out)
         try w.println(detail) finally w.close()
+      } catch { case e: java.io.IOException =>
+        System.err.println(s"[bench] could not write $out: ${e.getMessage}")
       }
-    } catch { case _: Throwable => () }
+    }
     // Final driver line: total + the slowest queries + the per-query
     // MIN for the WHOLE registry, sized to survive the 2000-char tail
     // window. The full-registry min rides as a VALUE ARRAY in ascending

@@ -1,25 +1,25 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SQLContext, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import graft.Tables.t
-import graft.model.{AddressBalance, LedgerEntry}
-import graft.streaming.{IncrementalIngest, StreamingBalances, StreamingSessions}
+import graft.model.LedgerEntry
+import graft.streaming.{IncrementalIngest, StreamingBalances, StreamingDedup,
+  StreamingKmv, StreamingSessions, StreamingTxStats, Streams}
 
 /** Streaming↔batch equivalence as DRIVER-CHECKED gate rows (round-3
   * verdict item 7): the driver cannot run a stream, but it can check
   * the OUTPUT of a stream replayed over the fixture against the batch
   * twin's oracle SQL. Each gate feeds the events table through the real
   * Structured Streaming operator in ordered micro-batches via
-  * `MemoryStream` (the in-process replay harness — data passes through
-  * the driver because the SOURCE is the harness, not the operator; in
-  * production the same code reads Kafka/files) and returns the emitted
-  * rows. The oracle computes the batch semantics relationally — a hash
-  * match proves the incremental state machine converges to the batch
-  * answer, micro-batch boundaries and all.
+  * `MemoryStream` ([[replay]], the in-process harness — data passes
+  * through the driver because the SOURCE is the harness, not the
+  * operator; in production the same code reads Kafka/files) and returns
+  * the emitted rows. The oracle computes the batch semantics
+  * relationally — a hash match proves the incremental state machine
+  * converges to the batch answer, micro-batch boundaries and all.
   */
 object StreamingQueries {
 
@@ -28,6 +28,88 @@ object StreamingQueries {
     */
   private def batchOf(k: Long, mn: Long, mx: Long): Long =
     math.min(3L, (k - mn) * 4 / (mx - mn + 1))
+
+  /** The 4 range batches of `rows`, in order, by `batchOf` on `key`.
+    * `rows` must be sorted on `key`, so its ends are the range's ends;
+    * an arrival-index key splits the rows into 4 equal runs.
+    */
+  private def rangeBatches[R](rows: Seq[R])(key: R => Long): Seq[Seq[R]] = {
+    val (mn, mx) = (key(rows.head), key(rows.last))
+    (0L to 3L).map(b => rows.filter(r => batchOf(key(r), mn, mx) == b))
+  }
+
+  /** Run `body` with 8 shuffle partitions, then restore the session's
+    * value. The state store instantiates one store per shuffle partition
+    * per micro-batch; at replay-fixture scale 8 partitions cut that fixed
+    * overhead ~4× with identical output. A stream pins the value at
+    * start, so restoring it once the stream has started is safe.
+    */
+  private def withStatePartitions[A](s: SparkSession)(body: => A): A = {
+    val saved = s.conf.get("spark.sql.shuffle.partitions")
+    s.conf.set("spark.sql.shuffle.partitions", "8")
+    try body finally s.conf.set("spark.sql.shuffle.partitions", saved)
+  }
+
+  /** Replay `batches` in order (empty ones skipped) through `op` on one
+    * long-lived MemoryStream query, each batch processed to completion,
+    * and return every row its memory sink (output `mode`) received. The
+    * rows are collected, so the result outlives the query and its view.
+    */
+  private def replay[T: Encoder](s: SparkSession, batches: Seq[Seq[T]],
+      mode: String)(op: Dataset[T] => Dataset[_]): DataFrame = {
+    implicit val sqlCtx: SQLContext = s.sqlContext
+    val source = MemoryStream[T]
+    val name = "replay_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val query = withStatePartitions(s)(
+      Streams.toMemory(op(source.toDS()), name, mode))
+    try {
+      batches.filter(_.nonEmpty).foreach { b =>
+        source.addData(b)
+        query.processAllAvailable()
+      }
+      val out = s.table(name)
+      s.createDataFrame(out.collectAsList(), out.schema)
+    } finally {
+      query.stop()
+      s.catalog.dropTempView(name)
+    }
+  }
+
+  /** Final balance per address from update-mode emissions, with the
+    * number of updates (one per batch that touched the address).
+    */
+  private def latestBalances(updates: DataFrame): DataFrame =
+    updates
+      .groupBy(col("address"))
+      .agg(
+        max_by(struct(col("available"), col("lastTxDbSerialNum")),
+          col("lastTxDbSerialNum")).as("f"),
+        count(lit(1)).as("n_updates"))
+      .select(col("address"), col("f.available").as("available"),
+        col("f.lastTxDbSerialNum").as("last_serial"), col("n_updates"))
+      .orderBy("address")
+
+  /** Emitted sessions in the oracle's shape, sentinel users dropped. */
+  private def sessionRows(sessions: DataFrame): DataFrame =
+    sessions.where(col("userId") >= 0)
+      .select(col("userId").as("user_id"), col("startUs").as("start_us"),
+        col("endUs").as("end_us"), col("nEvents").as("n_events"),
+        col("durationSecs").as("duration_secs"))
+      .orderBy("user_id", "start_us")
+
+  /** Final stats per window from update-mode emissions (the max-txCount
+    * update), with the number of updates per window.
+    */
+  private def windowFinals(updates: DataFrame): DataFrame =
+    updates
+      .groupBy(col("windowStart"))
+      .agg(max_by(struct(col("txCount"), col("validCount"),
+        col("validUnits")), col("txCount")).as("f"),
+        count(lit(1)).as("n_updates"))
+      .select(unix_micros(col("windowStart")).as("win_us"),
+        col("f.txCount").as("tx_count"), col("f.validCount").as("valid_count"),
+        col("f.validUnits").as("valid_units"), col("n_updates"))
+      .orderBy("win_us")
 
   /** Incremental balances (mapGroupsWithState) ≡ batch Σ-derivation.
     * `n_updates` pins the micro-batch cadence itself: update mode emits
@@ -50,48 +132,13 @@ object StreamingQueries {
       |  count(DISTINCT batch) AS n_updates
       |FROM b GROUP BY user_id ORDER BY address""".stripMargin) { (s, dir) =>
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val rows = t(s, dir, "events")
       .select($"user_id", $"event_id", Q.deltaCents.as("d"))
-      .as[(Long, Long, Long)].collect().sortBy(_._2)
-    val (mn, mx) = (rows.head._2, rows.last._2)
-    val name = "sbq_" + java.util.UUID.randomUUID().toString.take(8)
-      .replace("-", "")
-    val source = MemoryStream[LedgerEntry]
-    // The state store instantiates one store per shuffle partition per
-    // micro-batch; at replay-fixture scale 8 partitions cut that fixed
-    // overhead ~4× with identical output. The stream pins the value at
-    // start, so restoring the session conf right after is safe.
-    val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val query =
-      try StreamingBalances.run(source.toDS(), name)
-      finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
-    try {
-      (0L to 3L).foreach { b =>
-        val batch = rows.iterator.filter(r => batchOf(r._2, mn, mx) == b)
-          .map { case (uid, eid, d) =>
-            LedgerEntry(s"U$uid", 31L, "Omni", eid, 0, "recipient", d, 0, 0, 0)
-          }.toSeq
-        if (batch.nonEmpty) {
-          source.addData(batch)
-          query.processAllAvailable()
-        }
-      }
-      val updates = s.table(name).as[AddressBalance].collect().toSeq
-      s.createDataset(updates)
-        .groupBy($"address")
-        .agg(
-          max_by(struct($"available", $"lastTxDbSerialNum"),
-            $"lastTxDbSerialNum").as("f"),
-          count(lit(1)).as("n_updates"))
-        .select($"address", $"f.available".as("available"),
-          $"f.lastTxDbSerialNum".as("last_serial"), $"n_updates")
-        .orderBy("address")
-    } finally {
-      query.stop()
-      s.catalog.dropTempView(name)
-    }
+      .as[(Long, Long, Long)].collect().sortBy(_._2).toSeq
+    val batches = rangeBatches(rows)(_._2).map(_.map { case (uid, eid, d) =>
+      LedgerEntry(s"U$uid", 31L, "Omni", eid, 0, "recipient", d, 0, 0, 0)
+    })
+    latestBalances(replay(s, batches, "update")(StreamingBalances.updates))
   }
 
   /** Streaming gap sessionization (flatMapGroupsWithState + event-time
@@ -120,53 +167,24 @@ object StreamingQueries {
       |FROM sess GROUP BY user_id, session_idx
       |ORDER BY user_id, start_us""".stripMargin) { (s, dir) =>
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val rows = t(s, dir, "events")
       .select($"user_id", $"event_id",
         // integer floor (div), matching the oracle's `//` — double
         // division can round a non-ms-aligned timestamp up by 1µs
         expr("unix_micros(ts) div 1000").as("ms"))
-      .as[(Long, Long, Long)].collect().sortBy(r => (r._3, r._2))
-    val (mn, mx) = (rows.head._3, rows.last._3)
-    val name = "ssq_" + java.util.UUID.randomUUID().toString.take(8)
-      .replace("-", "")
-    val source = MemoryStream[StreamingSessions.Click]
-    // 8 state-store partitions at replay scale — see balancesEquiv.
-    val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val query =
-      try StreamingSessions.run(source.toDS(), name)
-      finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
-    try {
-      (0L to 3L).foreach { b =>
-        val batch = rows.iterator.filter(r => batchOf(r._3, mn, mx) == b)
-          .map { case (uid, eid, ms) =>
-            StreamingSessions.Click(uid, eid, new java.sql.Timestamp(ms))
-          }.toSeq
-        if (batch.nonEmpty) {
-          source.addData(batch)
-          query.processAllAvailable()
-        }
-      }
-      // Two sentinel batches: the first advances the watermark past
-      // every open session's timeout; the second triggers the batch in
-      // which the timed-out groups actually emit.
-      Seq(86400000L, 172800000L).foreach { off =>
-        source.addData(Seq(StreamingSessions.Click(-1L, 0L,
-          new java.sql.Timestamp(mx + off))))
-        query.processAllAvailable()
-      }
-      val emitted = s.table(name).as[StreamingSessions.Session]
-        .collect().toSeq.filter(_.userId >= 0)
-      s.createDataset(emitted)
-        .select($"userId".as("user_id"), $"startUs".as("start_us"),
-          $"endUs".as("end_us"), $"nEvents".as("n_events"),
-          $"durationSecs".as("duration_secs"))
-        .orderBy("user_id", "start_us")
-    } finally {
-      query.stop()
-      s.catalog.dropTempView(name)
-    }
+      .as[(Long, Long, Long)].collect().sortBy(r => (r._3, r._2)).toSeq
+    def click(uid: Long, eid: Long, ms: Long) =
+      StreamingSessions.Click(uid, eid, new java.sql.Timestamp(ms))
+    val batches = rangeBatches(rows)(_._3).map(_.map { case (uid, eid, ms) =>
+      click(uid, eid, ms)
+    })
+    // Two sentinel batches: the first advances the watermark past
+    // every open session's timeout; the second triggers the batch in
+    // which the timed-out groups actually emit.
+    val sentinels = Seq(86400000L, 172800000L)
+      .map(off => Seq(click(-1L, 0L, rows.last._3 + off)))
+    sessionRows(replay(s, batches ++ sentinels, "append")(
+      StreamingSessions.sessions))
   }
 
   /** Streaming tumbling-window tx stats (watermark + event-time window,
@@ -193,7 +211,6 @@ object StreamingQueries {
       |  count(DISTINCT batch) AS n_updates
       |FROM b GROUP BY win_us ORDER BY win_us""".stripMargin) { (s, dir) =>
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val rows = t(s, dir, "events")
       .select($"event_id",
         // integer floor (div) × 1000, matching the oracle's `//` —
@@ -201,41 +218,14 @@ object StreamingQueries {
         (expr("unix_micros(ts) div 1000") * 1000).as("us"),
         ($"event_type" =!= "error").as("valid"),
         round($"value" * 100).cast(LongType).as("units"))
-      .as[(Long, Long, Boolean, Long)].collect().sortBy(r => (r._2, r._1))
-    val (mn, mx) = (rows.head._2, rows.last._2)
-    val name = "stq_" + java.util.UUID.randomUUID().toString.take(8)
-      .replace("-", "")
-    val source = MemoryStream[TxStatRow]
-    // 8 state-store partitions at replay scale — see balancesEquiv.
-    val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val query =
-      try graft.streaming.StreamingTxStats.run(source.toDS().toDF(), name)
-      finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
-    try {
-      (0L to 3L).foreach { b =>
-        val batch = rows.iterator.filter(r => batchOf(r._2, mn, mx) == b)
-          .map { case (_, us, valid, units) =>
-            TxStatRow(new java.sql.Timestamp(us / 1000), valid, units)
-          }.toSeq
-        if (batch.nonEmpty) {
-          source.addData(batch)
-          query.processAllAvailable()
-        }
-      }
-      s.table(name)
-        .groupBy($"windowStart")
-        .agg(max_by(struct($"txCount", $"validCount", $"validUnits"),
-          $"txCount").as("f"),
-          count(lit(1)).as("n_updates"))
-        .select(unix_micros($"windowStart").as("win_us"),
-          $"f.txCount".as("tx_count"), $"f.validCount".as("valid_count"),
-          $"f.validUnits".as("valid_units"), $"n_updates")
-        .orderBy("win_us")
-    } finally {
-      query.stop()
-      s.catalog.dropTempView(name)
-    }
+      .as[(Long, Long, Boolean, Long)].collect()
+      .sortBy(r => (r._2, r._1)).toSeq
+    val batches = rangeBatches(rows)(_._2).map(_.map {
+      case (_, us, valid, units) =>
+        TxStatRow(new java.sql.Timestamp(us / 1000), valid, units)
+    })
+    windowFinals(replay(s, batches, "update")(
+      ds => StreamingTxStats.windowed(ds.toDF())))
   }
 
   /** Streaming exact dedup (`dropDuplicatesWithinWatermark`) ≡ batch
@@ -260,43 +250,20 @@ object StreamingQueries {
       |  CAST(1 AS BIGINT) AS n_emitted
       |FROM corpus GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val docs = t(s, dir, "documents").select($"doc_id", $"text")
       .as[(Long, String)].collect()
     val planted = (docs ++ docs.filter(_._1 % 10 == 0)
-      .map { case (id, txt) => (id + 200000, txt) }).sortBy(_._1)
+      .map { case (id, txt) => (id + 200000, txt) }).sortBy(_._1).toSeq
     val base = 1600000000000L // synthetic epoch; only relative time matters
-    val n = planted.length
-    val name = "sdq_" + java.util.UUID.randomUUID().toString.take(8)
-      .replace("-", "")
-    val source = MemoryStream[DedupDoc]
-    val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val query =
-      try graft.streaming.StreamingDedup.run(source.toDS().toDF(), name)
-      finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
-    try {
-      (0 until 4).foreach { b =>
-        val batch = planted.zipWithIndex
-          .filter { case (_, i) => i.toLong * 4 / n == b.toLong }
-          .map { case ((id, txt), _) =>
-            DedupDoc(new java.sql.Timestamp(base + (id % 3600) * 1000L),
-              id, txt)
-          }.toSeq
-        if (batch.nonEmpty) {
-          source.addData(batch)
-          query.processAllAvailable()
-        }
-      }
-      s.table(name)
-        .groupBy($"contentHash")
-        .agg(count(lit(1)).as("n_emitted"))
-        .select($"contentHash".as("content_hash"), $"n_emitted")
-        .orderBy("content_hash")
-    } finally {
-      query.stop()
-      s.catalog.dropTempView(name)
-    }
+    val batches = rangeBatches(planted.zipWithIndex)(_._2.toLong)
+      .map(_.map { case ((id, txt), _) =>
+        DedupDoc(new java.sql.Timestamp(base + (id % 3600) * 1000L), id, txt)
+      })
+    replay(s, batches, "append")(ds => StreamingDedup.deduped(ds.toDF()))
+      .groupBy($"contentHash")
+      .agg(count(lit(1)).as("n_emitted"))
+      .select($"contentHash".as("content_hash"), $"n_emitted")
+      .orderBy("content_hash")
   }
 
   /** Streaming KMV sketch ≡ batch `graft_kmv` aggregate: documents are
@@ -314,51 +281,29 @@ object StreamingQueries {
     "streaming_kmv_equiv",
     TextQueries.kmvDistinct.oracle.get) { (s, dir) =>
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     graft.functions.GraftFunctions.register(s)
     val docs = t(s, dir, "documents").select($"doc_id", $"lang", $"text")
-      .as[(Long, String, String)].collect().sortBy(_._1)
-    val n = docs.length
-    val name = "skq_" + java.util.UUID.randomUUID().toString.take(8)
-    val source = MemoryStream[KmvDoc]
-    val hashed = source.toDS().toDF()
-      .select(col("lang"), split(lower(col("text")), " ").as("arr"))
-      .where(size(col("arr")) >= 3)
-      .select(col("lang"), explode(expr(CurationQueries.shingle3Spark)).as("s"))
-      .select(col("lang"), expr("graft_hash60(s)").as("h"))
-      .as[(String, Long)]
-    val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val query =
-      try graft.streaming.StreamingKmv.sketches(hashed, 64)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
-    try {
-      (0 until 4).foreach { b =>
-        val batch = docs.zipWithIndex
-          .filter { case (_, i) => i.toLong * 4 / n == b.toLong }
-          .map { case ((_, lang, text), _) => KmvDoc(lang, text) }.toSeq
-        if (batch.nonEmpty) {
-          source.addData(batch)
-          query.processAllAvailable()
-        }
-      }
-      s.table(name)
-        .groupBy($"key")
-        .agg(max_by($"mins", $"n").as("hs"))
-        .select($"key".as("lang"),
-          size($"hs").cast(LongType).as("k_used"),
-          element_at($"hs", size($"hs")).as("kth_min"),
-          when(size($"hs") < 64, size($"hs").cast(LongType))
-            .otherwise(expr(
-              "cast(floor(63.0 * 1152921504606846976.0 / element_at(hs, size(hs))) as bigint)"))
-            .as("est_distinct"))
-        .orderBy("lang")
-    } finally {
-      query.stop()
-      s.catalog.dropTempView(name)
+      .as[(Long, String, String)].collect().sortBy(_._1).toSeq
+    val batches = rangeBatches(docs.zipWithIndex)(_._2.toLong)
+      .map(_.map { case ((_, lang, text), _) => KmvDoc(lang, text) })
+    replay(s, batches, "update") { ds =>
+      StreamingKmv.sketches(ds.toDF()
+        .select(col("lang"), split(lower(col("text")), " ").as("arr"))
+        .where(size(col("arr")) >= 3)
+        .select(col("lang"), explode(expr(CurationQueries.shingle3Spark)).as("s"))
+        .select(col("lang"), expr("graft_hash60(s)").as("h"))
+        .as[(String, Long)], 64)
     }
+      .groupBy($"key")
+      .agg(max_by($"mins", $"n").as("hs"))
+      .select($"key".as("lang"),
+        size($"hs").cast(LongType).as("k_used"),
+        element_at($"hs", size($"hs")).as("kth_min"),
+        when(size($"hs") < 64, size($"hs").cast(LongType))
+          .otherwise(expr(
+            "cast(floor(63.0 * 1152921504606846976.0 / element_at(hs, size(hs))) as bigint)"))
+          .as("est_distinct"))
+      .orderBy("lang")
   }
 
   /** The COMPOSED ingest under streaming (round-7 verdict ask #5): the
@@ -393,7 +338,11 @@ object StreamingQueries {
     val (mn, mx) = conf.agg(min($"block"), max($"block"))
       .as[(Long, Long)].head()
 
-    def runOnce(): Unit = ingestDrop(s, conf.schema, feedDir, factsDir, ckpt)
+    // no state-partition pin: the commit keeps the session's shuffle
+    // partitioning, which lays out the facts store's files
+    def runOnce(): Unit =
+      Streams.availableNow(s.readStream.schema(conf.schema).parquet(feedDir),
+        ckpt, "append")(IncrementalIngest.ingestFrame(s, _, factsDir))
 
     (0L to 3L).foreach { b =>
       // ascending block ranges: (block-mn)*4 div span is 0..3 exactly
@@ -507,7 +456,10 @@ object StreamingQueries {
       .withColumn("amt", $"amt" + 97L)
       .withColumn("pay", $"amt" % 1000L + 1L)
 
-    def runOnce(): Unit = ingestDrop(s, conf.schema, feedDir, factsDir, ckpt)
+    // no state-partition pin, as in chainEquiv
+    def runOnce(): Unit =
+      Streams.availableNow(s.readStream.schema(conf.schema).parquet(feedDir),
+        ckpt, "append")(IncrementalIngest.ingestFrame(s, _, factsDir))
 
     // 1. original chain, two watermark-gated drops through the stream
     val mid = (mnA + mxA) / 2L
@@ -555,43 +507,32 @@ object StreamingQueries {
   // restart), which the restart-per-drop form deliberately does not.
   // ---------------------------------------------------------------
 
-  /** Run one AvailableNow pass of `stream` with emissions appended to
-    * `outDir`. State-store fan-out is 8 partitions, the replay-scale
-    * count (see balancesEquiv).
+  /** Replay `feed` through the file path: each of its 4 range batches
+    * on `key` (the oracles' `least(3, (key - mn) * 4 // (mx - mn + 1))`),
+    * then each drop of `more(mx)`, is appended to a parquet feed dir and
+    * consumed by one AvailableNow restart of `op` over a checkpointed
+    * `readStream` of that dir, under the replay-scale state-partition
+    * pin. Emissions append to a results dir, which is returned.
     */
-  private def runFileDrop(s: SparkSession,
-      stream: DataFrame, outDir: String,
-      ckpt: String, mode: String): Unit = {
-    val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val q =
-      try stream.writeStream
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("append").parquet(outDir); ()
-        }
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
-    q.awaitTermination()
-  }
-
-  /** One AvailableNow pass of a checkpointed parquet `readStream` over
-    * `feedDir` (schema `schema`), each micro-batch committed to the
-    * facts store `factsDir` by [[IncrementalIngest.ingestFrame]].
-    */
-  private def ingestDrop(s: SparkSession, schema: StructType,
-      feedDir: String, factsDir: String, ckpt: String): Unit = {
-    val q = s.readStream.schema(schema).parquet(feedDir)
-      .writeStream
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        IncrementalIngest.ingestFrame(s, b, factsDir); ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+  private def fileReplay(s: SparkSession, feed: DataFrame, key: String,
+      mode: String, more: Long => Seq[DataFrame] = _ => Nil)(
+      op: DataFrame => Dataset[_]): DataFrame = {
+    import s.implicits._
+    val base = graft.CacheScope.scratchTempDir("graft_file_stream")
+    val feedDir = base.resolve("feed").toString
+    val outDir = base.resolve("out").toString
+    val ckpt = base.resolve("ckpt").toString
+    val (mn, mx) = feed.agg(min(expr(key)), max(expr(key)))
+      .as[(Long, Long)].head()
+    val drops = (0L to 3L).map(b => feed.where(
+      expr(s"least(3, ($key - $mn) * 4 div ${mx - mn + 1})") === b))
+    (drops ++ more(mx)).foreach { drop =>
+      drop.write.mode("append").parquet(feedDir)
+      withStatePartitions(s)(Streams.availableNow(
+        op(s.readStream.schema(feed.schema).parquet(feedDir)).toDF(),
+        ckpt, mode)(_.write.mode("append").parquet(outDir)))
+    }
+    s.read.parquet(outDir)
   }
 
   /** mapGroupsWithState balances through the FILE path — same oracle
@@ -605,43 +546,16 @@ object StreamingQueries {
     "streaming_balances_file",
     balancesEquiv.oracle.get) { (s, dir) =>
     import s.implicits._
-    val base = graft.CacheScope.scratchTempDir("graft_bal_stream")
-    val feedDir = base.resolve("feed").toString
-    val outDir = base.resolve("out").toString
-    val ckpt = base.resolve("ckpt").toString
-
-    val e = t(s, dir, "events")
-      .select($"user_id", $"event_id", Q.deltaCents.as("d"))
-    val (mn, mx) = e.agg(min($"event_id"), max($"event_id"))
-      .as[(Long, Long)].head()
-    val feed = e.select(
+    val feed = t(s, dir, "events").select(
       concat(lit("U"), $"user_id").as("address"),
       lit(31L).as("propertyId"), lit("Omni").as("protocol"),
       $"event_id".as("txDbSerialNum"),
       lit(0).as("addressTxIndex"), lit("recipient").as("addressRole"),
-      $"d".as("availableDelta"), lit(0L).as("reservedDelta"),
+      Q.deltaCents.as("availableDelta"), lit(0L).as("reservedDelta"),
       lit(0L).as("acceptedDelta"), lit(0L).as("frozenDelta"),
       lit(0L).as("linkedTxDbSerialNum"))
-    (0L to 3L).foreach { b =>
-      feed.where(
-        expr(s"least(3, (txDbSerialNum - $mn) * 4 div ${mx - mn + 1})")
-          === b)
-        .write.mode("append").parquet(feedDir)
-      runFileDrop(s,
-        StreamingBalances.updates(
-          s.readStream.schema(feed.schema).parquet(feedDir)
-            .as[LedgerEntry]).toDF(),
-        outDir, ckpt, "update")
-    }
-    s.read.parquet(outDir)
-      .groupBy($"address")
-      .agg(
-        max_by(struct($"available", $"lastTxDbSerialNum"),
-          $"lastTxDbSerialNum").as("f"),
-        count(lit(1)).as("n_updates"))
-      .select($"address", $"f.available".as("available"),
-        $"f.lastTxDbSerialNum".as("last_serial"), $"n_updates")
-      .orderBy("address")
+    latestBalances(fileReplay(s, feed, "txDbSerialNum", "update")(
+      df => StreamingBalances.updates(df.as[LedgerEntry])))
   }
 
   /** flatMapGroupsWithState sessionization through the FILE path —
@@ -654,42 +568,18 @@ object StreamingQueries {
     "streaming_sessions_file",
     sessionsEquiv.oracle.get) { (s, dir) =>
     import s.implicits._
-    val base = graft.CacheScope.scratchTempDir("graft_sess_stream")
-    val feedDir = base.resolve("feed").toString
-    val outDir = base.resolve("out").toString
-    val ckpt = base.resolve("ckpt").toString
-
     val e = t(s, dir, "events").select(
       $"user_id".as("userId"), $"event_id".as("eventId"),
       // ms-truncate, matching the oracle's `epoch_us(ts) // 1000 * 1000`
       expr("timestamp_micros(unix_micros(ts) div 1000 * 1000)").as("ts"))
-    val (mn, mx) = e
-      .agg(min(expr("unix_micros(ts)")), max(expr("unix_micros(ts)")))
-      .as[(Long, Long)].head()
-    def drop(df: DataFrame): Unit = {
-      df.write.mode("append").parquet(feedDir)
-      runFileDrop(s,
-        StreamingSessions.sessions(
-          s.readStream.schema(e.schema).parquet(feedDir)
-            .as[StreamingSessions.Click]).toDF(),
-        outDir, ckpt, "append")
-    }
-    (0L to 3L).foreach { b =>
-      drop(e.where(
-        expr(s"least(3, (unix_micros(ts) - $mn) * 4 div ${mx - mn + 1})")
-          === b))
-    }
     // far-future sentinels: watermark advance, then timeout emission
-    Seq(86400000000L, 172800000000L).foreach { off =>
-      drop(Seq((-1L, 0L)).toDF("userId", "eventId")
+    def sentinels(mx: Long) = Seq(86400000000L, 172800000000L).map { off =>
+      Seq((-1L, 0L)).toDF("userId", "eventId")
         .select($"userId", $"eventId",
-          expr(s"timestamp_micros(${mx + off})").as("ts")))
+          expr(s"timestamp_micros(${mx + off})").as("ts"))
     }
-    s.read.parquet(outDir).where($"userId" >= 0)
-      .select($"userId".as("user_id"), $"startUs".as("start_us"),
-        $"endUs".as("end_us"), $"nEvents".as("n_events"),
-        $"durationSecs".as("duration_secs"))
-      .orderBy("user_id", "start_us")
+    sessionRows(fileReplay(s, e, "unix_micros(ts)", "append", sentinels)(
+      df => StreamingSessions.sessions(df.as[StreamingSessions.Click])))
   }
 
   /** Watermarked tumbling-window stats through the FILE path — same
@@ -700,37 +590,12 @@ object StreamingQueries {
     "streaming_txstats_file",
     txStatsEquiv.oracle.get) { (s, dir) =>
     import s.implicits._
-    val base = graft.CacheScope.scratchTempDir("graft_txs_stream")
-    val feedDir = base.resolve("feed").toString
-    val outDir = base.resolve("out").toString
-    val ckpt = base.resolve("ckpt").toString
-
     val e = t(s, dir, "events").select(
       expr("timestamp_micros(unix_micros(ts) div 1000 * 1000)").as("ts"),
       ($"event_type" =!= "error").as("valid"),
       round($"value" * 100).cast(LongType).as("amountUnits"))
-    val (mn, mx) = e
-      .agg(min(expr("unix_micros(ts)")), max(expr("unix_micros(ts)")))
-      .as[(Long, Long)].head()
-    (0L to 3L).foreach { b =>
-      e.where(
-        expr(s"least(3, (unix_micros(ts) - $mn) * 4 div ${mx - mn + 1})")
-          === b)
-        .write.mode("append").parquet(feedDir)
-      runFileDrop(s,
-        graft.streaming.StreamingTxStats.windowed(
-          s.readStream.schema(e.schema).parquet(feedDir)),
-        outDir, ckpt, "update")
-    }
-    s.read.parquet(outDir)
-      .groupBy($"windowStart")
-      .agg(max_by(struct($"txCount", $"validCount", $"validUnits"),
-        $"txCount").as("f"),
-        count(lit(1)).as("n_updates"))
-      .select(unix_micros($"windowStart").as("win_us"),
-        $"f.txCount".as("tx_count"), $"f.validCount".as("valid_count"),
-        $"f.validUnits".as("valid_units"), $"n_updates")
-      .orderBy("win_us")
+    windowFinals(fileReplay(s, e, "unix_micros(ts)", "update")(
+      StreamingTxStats.windowed(_)))
   }
 
   val all: Seq[Q] = Seq(balancesEquiv, sessionsEquiv, txStatsEquiv,

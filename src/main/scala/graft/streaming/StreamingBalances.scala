@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 import graft.model.{AddressBalance, LedgerEntry}
 
 /** Structured Streaming balance maintenance — the §2.9 micro-batch
@@ -46,14 +46,4 @@ object StreamingBalances {
             next.accepted, next.frozen, next.lastSerial)
       }
   }
-
-  /** Wire a ledger stream to an in-memory sink for serving (update
-    * mode: each micro-batch emits only touched balances).
-    */
-  def run(ledger: Dataset[LedgerEntry], queryName: String): org.apache.spark.sql.streaming.StreamingQuery =
-    updates(ledger).writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Update())
-      .start()
 }

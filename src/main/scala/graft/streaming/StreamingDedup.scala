@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming exact deduplication — the streaming counterpart of
   * `dedup_exact` (and of the reference's duplicate-flag scan): drop
@@ -29,11 +28,4 @@ object StreamingDedup {
       .withColumn("contentHash", md5(trim(lower(col("text")))))
       .withWatermark("ts", lateness)
       .dropDuplicatesWithinWatermark("contentHash")
-
-  def run(docs: DataFrame, queryName: String): StreamingQuery =
-    deduped(docs).writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .start()
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Streaming latest-per-key — W4's streaming twin (the reference polls
   * price sources on a cron and upserts the latest rate per symbol,
@@ -34,12 +34,4 @@ object StreamingRates {
           best
       }
   }
-
-  def run(ticks: Dataset[RateTick], queryName: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    latest(ticks).writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Update())
-      .start()
 }

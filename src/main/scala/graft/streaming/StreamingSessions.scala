@@ -87,12 +87,4 @@ object StreamingSessions {
           }
       }
   }
-
-  def run(clicks: Dataset[Click],
-      queryName: String): org.apache.spark.sql.streaming.StreamingQuery =
-    sessions(clicks).writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .start()
 }

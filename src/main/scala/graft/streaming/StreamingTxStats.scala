@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming per-window tx stats — the windowed-aggregation +
@@ -27,11 +27,4 @@ object StreamingTxStats {
         sum(when(col("valid"), col("amountUnits"))).as("validUnits"))
       .select(col("window.start").as("windowStart"),
         col("txCount"), col("validCount"), col("validUnits"))
-
-  def run(txs: DataFrame, queryName: String): org.apache.spark.sql.streaming.StreamingQuery =
-    windowed(txs).writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("update")
-      .start()
 }

@@ -2,9 +2,8 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.Trigger
 import graft.model.{AddressBalance, LedgerEntry}
-import graft.streaming.{StreamingBalances, StreamingSessions}
+import graft.streaming.{StreamingBalances, StreamingSessions, Streams}
 
 /** The PRODUCTION streaming read path: the stateful operators consume
   * parquet file drops through `readStream` with `Trigger.AvailableNow`
@@ -25,15 +24,7 @@ class FileStreamIntegrationSpec extends SparkTestBase {
   private def drain[T](updates: Dataset[T], ckpt: String,
       mode: String): Seq[T] = {
     val out = new java.util.concurrent.ConcurrentLinkedQueue[T]()
-    val q = updates.writeStream
-      .foreachBatch { (batch: Dataset[T], _: Long) =>
-        batch.collect().foreach(out.add)
-      }
-      .outputMode(mode)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Streams.availableNow(updates, ckpt, mode)(_.collect().foreach(out.add))
     import scala.jdk.CollectionConverters._
     out.asScala.toSeq
   }

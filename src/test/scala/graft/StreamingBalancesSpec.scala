@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.model.LedgerEntry
-import graft.streaming.StreamingBalances
+import graft.streaming.{StreamingBalances, Streams}
 
 /** Structured Streaming path: per-micro-batch stateful balance
   * maintenance must agree with the batch derivation at every step.
@@ -16,7 +16,8 @@ class StreamingBalancesSpec extends SparkTestBase {
   test("two micro-batches fold into the same state as one batch") {
     implicit val sqlCtx = spark.sqlContext
     val source = MemoryStream[LedgerEntry]
-    val query = StreamingBalances.run(source.toDS(), "bal_test")
+    val query = Streams.toMemory(
+      StreamingBalances.updates(source.toDS()), "bal_test", "update")
     try {
       source.addData(entry(Fixtures.A, 1, 100), entry(Fixtures.B, 2, 40))
       query.processAllAvailable()

@@ -2,7 +2,7 @@ package graft
 
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.streaming.StreamingDedup
+import graft.streaming.{StreamingDedup, Streams}
 
 class StreamingDedupSpec extends SparkTestBase {
   import spark.implicits._
@@ -14,7 +14,8 @@ class StreamingDedupSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val source = MemoryStream[(Timestamp, Long, String)]
     val df = source.toDF().toDF("ts", "docId", "text")
-    val query = StreamingDedup.run(df, "dedup_test")
+    val query = Streams.toMemory(
+      StreamingDedup.deduped(df), "dedup_test", "append")
     try {
       source.addData((ts(10, 0), 1L, "Alpha Beta"), (ts(10, 1), 2L, "gamma"))
       query.processAllAvailable()
@@ -31,7 +32,8 @@ class StreamingDedupSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val source = MemoryStream[(Timestamp, Long, String)]
     val df = source.toDF().toDF("ts", "docId", "text")
-    val query = StreamingDedup.run(df, "dedup_evict_test")
+    val query = Streams.toMemory(
+      StreamingDedup.deduped(df), "dedup_evict_test", "append")
     try {
       source.addData((ts(10, 0), 1L, "alpha"))
       query.processAllAvailable()

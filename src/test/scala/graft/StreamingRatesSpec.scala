@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.streaming.StreamingRates
+import graft.streaming.{StreamingRates, Streams}
 import graft.streaming.StreamingRates.RateTick
 
 /** Streaming latest-per-key: out-of-order and duplicate deliveries must
@@ -19,7 +19,8 @@ class StreamingRatesSpec extends SparkTestBase {
   test("late and duplicate ticks never regress the latest rate") {
     implicit val sqlCtx = spark.sqlContext
     val source = MemoryStream[RateTick]
-    val query = StreamingRates.run(source.toDS(), "rates_test")
+    val query = Streams.toMemory(
+      StreamingRates.latest(source.toDS()), "rates_test", "update")
     try {
       source.addData(RateTick("BTC", 100, 1, 500), RateTick("ETH", 100, 2, 30))
       query.processAllAvailable()
@@ -48,7 +49,8 @@ class StreamingRatesSpec extends SparkTestBase {
       RateTick("BTC", 200, 3, 580), RateTick("ETH", 10, 4, 29),
       RateTick("ETH", 10, 5, 31))
     val source = MemoryStream[RateTick]
-    val query = StreamingRates.run(source.toDS(), "rates_eq")
+    val query = Streams.toMemory(
+      StreamingRates.latest(source.toDS()), "rates_eq", "update")
     try {
       ticks.grouped(2).foreach { g =>
         source.addData(g: _*); query.processAllAvailable()

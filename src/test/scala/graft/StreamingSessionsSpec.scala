@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.streaming.StreamingSessions
+import graft.streaming.{StreamingSessions, Streams}
 import graft.streaming.StreamingSessions.Click
 
 /** Streaming sessionization: sessions close on inactivity gaps and are
@@ -18,7 +18,8 @@ class StreamingSessionsSpec extends SparkTestBase {
   test("a gap past 30min closes the open session and starts a new one") {
     implicit val sqlCtx = spark.sqlContext
     val source = MemoryStream[Click]
-    val query = StreamingSessions.run(source.toDS(), "sess_test")
+    val query = Streams.toMemory(
+      StreamingSessions.sessions(source.toDS()), "sess_test", "append")
     try {
       // batch 1: u1 two events 10min apart (one session), u2 one event
       source.addData(click(1, 1, 0), click(1, 2, 10), click(2, 3, 5))
@@ -52,7 +53,8 @@ class StreamingSessionsSpec extends SparkTestBase {
   test("a late event inside the gap extends the open session's START downward") {
     implicit val sqlCtx = spark.sqlContext
     val source = MemoryStream[Click]
-    val query = StreamingSessions.run(source.toDS(), "sess_late")
+    val query = Streams.toMemory(
+      StreamingSessions.sessions(source.toDS()), "sess_late", "append")
     try {
       source.addData(click(7, 1, 100)) // open session [100, 100]
       query.processAllAvailable()

@@ -2,7 +2,7 @@ package graft
 
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.streaming.StreamingTxStats
+import graft.streaming.{StreamingTxStats, Streams}
 
 class StreamingTxStatsSpec extends SparkTestBase {
   import spark.implicits._
@@ -11,7 +11,8 @@ class StreamingTxStatsSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val source = MemoryStream[(Timestamp, Boolean, Long)]
     val df = source.toDF().toDF("ts", "valid", "amountUnits")
-    val query = StreamingTxStats.run(df, "txstats_test")
+    val query = Streams.toMemory(
+      StreamingTxStats.windowed(df), "txstats_test", "update")
     def ts(h: Int, m: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
     try {
       source.addData((ts(10, 5), true, 100L), (ts(10, 40), false, 50L))

@@ -16,7 +16,7 @@ before the bar is applied, so a boot-to-boot box swing no longer
 reads as a build change; pass --no-calibrate for raw walls.
 
 Usage: tools/bench_diff.py [--no-calibrate] [--movers N] BASELINE.json NEW.json [ratio] [abs_s]
-Exit 1 iff any regression is flagged.
+Exit 1 iff any regression is flagged; a usage error exits 2.
 """
 import json
 import sys
@@ -50,6 +50,12 @@ def cal_speed(d):
         return None
 
 
+def usage():
+    print("usage: tools/bench_diff.py [--no-calibrate] [--movers N] "
+          "BASELINE.json NEW.json [ratio] [abs_s]", file=sys.stderr)
+    sys.exit(2)
+
+
 def main():
     # --movers N: print ONLY a csv of the top-N shared queries by
     # absolute min-time delta (machine-readable, for the end-of-round
@@ -61,14 +67,14 @@ def main():
         argv.remove("--no-calibrate")
     if "--movers" in argv:
         i = argv.index("--movers")
+        if i + 1 >= len(argv) or not argv[i + 1].isdigit():
+            usage()
         movers_n = int(argv[i + 1])
         argv = argv[:i] + argv[i + 2:]
     files = [a for a in argv if not _is_num(a)]
     nums = [a for a in argv if _is_num(a)]
-    if len(files) != 2:
-        raise SystemExit(
-            "usage: tools/bench_diff.py [--no-calibrate] [--movers N] "
-            "BASELINE.json NEW.json [ratio] [abs_s]")
+    if len(files) != 2 or len(nums) > 2:
+        usage()
     bp, np_ = files
     if movers_n is None:
         print(f"baseline: {bp}\nnew:      {np_}")

@@ -112,7 +112,7 @@ the instrument at the HIGHEST scale.
    0.0 fails). 145/145 over the `graft.ListQueries` registry (green
    every round since the gate count stabilized).
 2. **sf0.1 (once per round)** — same full-frame instrument, 10x the
-   gate SF. 145/145 (re-run each round via `tools/r{{N}}_final.sh`).
+   gate SF. 145/145 (re-run each round: `graft.Verify` + `tools/check.py` on sf0.1).
 3. **10x/100x ScaleGen sweeps** — hash instrument: (row count, exact
    HUGEINT `sum(hash(row))` over the name-sorted column struct), both
    sides computed inside DuckDB; floats hash via VARCHAR so bit
@@ -141,7 +141,7 @@ the instrument at the HIGHEST scale.
    **145/145 rows+schema+hash green**, independently reproduced by
    the round-12 judge. Typed-fold serialization, broadcasts, and
    checkpoint block placement all cross a real executor boundary
-   (re-run each round via `tools/r{{N}}_final.sh` step 5). Round 12
+   (re-run each round via `tools/run_multijvm.sh`). Round 12
    additionally demonstrated executor-LOSS recovery: a force-killed
    executor JVM between reliable snapshot and consume
    (`MultiJvmDemo`), answer unchanged; round 13 extends the kill to
